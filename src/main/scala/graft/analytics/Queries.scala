@@ -1342,7 +1342,7 @@ object Queries {
       // oracle recomputes it from scratch and the hash match proves
       // fold ≡ rebuild. The corpus is read ONCE (the cut), each batch
       // slicing materialized blocks. The stored-state twin
-      // ([[Similarity.ivfFoldInto]]: per-bucket partition swap with
+      // ([[Similarity.ivfFoldInto]]: per-bucket partition commit with
       // write cost ∝ batch, replay idempotence, quantizer-digest
       // drift guard) and serving equality off the folded state are
       // SimilaritySpec-pinned; s08 gates the serve path itself. The
@@ -1400,8 +1400,8 @@ object Queries {
       // [[Quantize.pqEncode]] minus the deletions EXACTLY — the
       // oracle recomputes from scratch and the hash match proves
       // fold ≡ rebuild. The stored twin ([[Quantize.pqFoldInto]]:
-      // bucket-partitioned state with write cost ∝ batch, atomic
-      // per-bucket swap, replay idempotence, `.pq-params`
+      // bucket-partitioned state with write cost ∝ batch, crash-safe
+      // per-bucket commit, replay idempotence, `.pq-params`
       // codebook-digest drift guard) and ADC serving equality off the
       // folded state are QuantizeSpec-pinned; s14 gates the serve
       // path itself.

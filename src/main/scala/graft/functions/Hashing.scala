@@ -33,12 +33,4 @@ object Hashing {
   /** DuckDB SQL text for the same hash, for oracle assembly. */
   def md5LongSql(expr: String, salt: Int): String =
     s"CAST(concat('0x', substr(md5(concat('$salt', ':', $expr)), 1, 15)) AS BIGINT)"
-
-  /** Map a 60-bit hash to one signed bit (+1/-1) at position `bit`
-    * (0-based, bit < 60). Used by SimHash. */
-  def hashBitSign(h: Column, bit: Int): Column =
-    when(shiftright(h, bit).bitwiseAND(lit(1L)) === 1L, lit(1)).otherwise(lit(-1))
-
-  def hashBitSignSql(h: String, bit: Int): String =
-    s"CASE WHEN (($h >> $bit) & 1) = 1 THEN 1 ELSE -1 END"
 }

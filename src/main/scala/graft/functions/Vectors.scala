@@ -36,11 +36,4 @@ object Vectors {
     * custom codegen'd loop with this exact IEEE fold order.) */
   def dotSql(a: String, b: String): String =
     s"list_aggregate(list_transform(generate_series(1, len($a)), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), 'sum')"
-
-  def cosineSql(a: String, b: String): String = {
-    val d = dotSql(a, b)
-    val na = s"sqrt(${dotSql(a, a)})"
-    val nb = s"sqrt(${dotSql(b, b)})"
-    s"CASE WHEN $na * $nb = 0 THEN 0.0 ELSE $d / ($na * $nb) END"
-  }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Commit
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,54 +63,8 @@ object IncrementalAgg {
 
   /** Id of the last batch folded into the state (see [[update]]'s
     * `batchId`), or -1 for a fresh/unversioned state. */
-  def appliedBatchId(spark: SparkSession, statePath: String): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(statePath, MarkerFile)
-    if (!fs.exists(marker)) -1L
-    else {
-      val in = fs.open(marker)
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong finally in.close()
-    }
-  }
-
-  private[operators] val MarkerFile = "_applied_batch" // leading '_': parquet readers skip it
-
-  /** Crash recovery for the delete→rename swap window: a crash between
-    * `fs.delete(statePath)` and `fs.rename(tmp, statePath)` leaves the
-    * ONLY complete copy of the folded state in the temp dir. Without
-    * this, the next fold would see no state, rebuild from the delta
-    * alone, and Overwrite the temp dir holding the surviving copy —
-    * silent loss of all folded history. Detection is unambiguous: the
-    * temp dir's `_SUCCESS` (the parquet commit marker, written before
-    * the applied-batch marker and long before the swap) proves the
-    * temp state is complete, and a missing/empty `statePath` proves
-    * the delete already ran — so renaming the temp dir into place
-    * finishes the interrupted swap exactly. A temp dir WITHOUT
-    * `_SUCCESS` is a crashed write-in-progress; it is left for the
-    * next fold's Overwrite (the old state, if any, is still live).
-    *
-    * A stale complete temp dir left behind by a RESET (state dir +
-    * sidecars deleted) produces the same on-disk shape; identity-
-    * guarded callers refuse that shape BEFORE entering here — see
-    * [[guardStateIdentity]] — so this function recovers only swaps
-    * that were genuinely interrupted (unguarded callers like
-    * [[update]] have no identity to protect, so recovery is always
-    * the right call for them). */
-  private def recoverInterruptedSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      statePath: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(statePath)
-    val tmp = new org.apache.hadoop.fs.Path(statePath + TmpSuffix)
-    val stateLive = fs.exists(path) && fs.listStatus(path).nonEmpty
-    if (!stateLive && fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-      if (fs.exists(path) && !fs.delete(path, true)) // empty husk dir
-        throw new java.io.IOException(s"incremental-agg recovery: failed to delete empty $path")
-      if (!fs.rename(tmp, path))
-        throw new java.io.IOException(s"incremental-agg recovery: failed to rename $tmp -> $path")
-    }
-  }
-
-  private[operators] val TmpSuffix = ".tmp-incagg"
+  def appliedBatchId(spark: SparkSession, statePath: String): Long =
+    Commit.appliedBatch(spark, statePath)
 
   /** The trimmed content of a small sidecar file, or None if absent —
     * the one read idiom every identity guard shares. */
@@ -124,58 +79,38 @@ object IncrementalAgg {
   }
 
   /** Sidecar identity guard (the qsFoldInto/quantileRollupSink misuse
-    * gates): a small text file NEXT to the state dir (inside it would
-    * not survive the swap) records how the state was built; a later
-    * fold with a different identity fails loudly instead of silently
-    * merging incompatible state. Fresh/empty state adopts (overwrites)
-    * the sidecar — deleting the state dir legitimately resets the
-    * identity; a pre-sidecar legacy state adopts on first contact —
+    * gates): a small text file NEXT to the state dir records how the
+    * state was built; a later fold with a different identity fails
+    * loudly instead of silently merging incompatible state. Fresh/empty
+    * state adopts (overwrites) the sidecar — a reset legitimately resets
+    * the identity; a pre-sidecar legacy state adopts on first contact —
     * with a visible warning, since the first guarded fold over a
     * pre-sidecar state is exactly the run where a configuration drift
     * is most likely and the guard has nothing to compare against.
     *
-    * Recovery is REFUSED — before the temp dir is touched, so the
-    * refusal is retry-safe — when the shape says "reset left a stale
-    * temp behind": a complete temp dir beside EMPTY state with no
-    * sidecar of ANY suffix surviving. The reset the mismatch message
-    * instructs deletes the state dir and every sidecar, so a
-    * surviving sidecar — even one written under a different guard's
-    * suffix, as when a stream sink first contacts a state a batch
-    * fold built — means no reset happened and recovery is safe; a
-    * guarded state always has at least its own sidecar from before
-    * its first fold. Sidecars are plain FILES, so only dotted sibling
-    * files count as survivors: a colocated dotted DIRECTORY (a
-    * `<state>.ckpt` checkpoint, a `<state>.bak` copy, a fold's own
-    * temp dir) is not a sidecar and must not suppress the refusal —
-    * counting one would let a reset's stale temp resurrect under it.
-    * Refusing BEFORE the rename matters: if recovery
-    * ran first and the refusal threw after (the original r18
-    * ordering), a supervisor retry would find live state, no temp,
-    * no sidecar — and the pre-sidecar adoption branch below would
-    * silently adopt the deliberately-deleted state the first attempt
-    * refused. The refusal message offers the rename escape hatch for
-    * the one ambiguous shape (a never-guarded state's interrupted
-    * swap) so following instructions never destroys the only copy. */
+    * The guard first recovers the state's last commit
+    * ([[graft.core.Commit.recover]]), so an interrupted commit never
+    * reads as fresh state. A reset deletes the state dir and every
+    * `<state>.*` sibling — sidecars, commit record and staging dir — so
+    * nothing staged before it can come back. */
   private[graft] def guardStateIdentity(
       spark: SparkSession,
       statePath: String,
       suffix: String,
       identity: String,
       who: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    Commit.recover(spark, statePath)
+    val fs = Commit.fs(spark, statePath)
     val path = new org.apache.hadoop.fs.Path(statePath)
     val f = new org.apache.hadoop.fs.Path(statePath + suffix)
-    refuseResetResurrection(spark, statePath, who)
-    // a swap-window crash must not read as "fresh state"
-    recoverInterruptedSwap(fs, statePath)
     val stateLive = fs.exists(path) && fs.listStatus(path).nonEmpty
     if (stateLive && fs.exists(f)) {
       val stored = readSidecar(fs, statePath + suffix).getOrElse("")
       require(stored == identity,
         s"$who: stored state at $statePath was built with [$stored] but this run uses " +
-          s"[$identity] — folding would silently corrupt the state. Delete the state dir, " +
-          s"its sidecars, AND any leftover $statePath$TmpSuffix dir to start fresh, or " +
-          "restore the matching configuration.")
+          s"[$identity] — folding would silently corrupt the state. Delete $statePath and " +
+          s"every $statePath.* sibling (sidecars, commit record, staging dir) to start " +
+          "fresh, or restore the matching configuration.")
     } else {
       if (stateLive)
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -187,18 +122,12 @@ object IncrementalAgg {
     }
   }
 
-  /** Fold one batch into the stored state. The new state is always
-    * materialized to a temp directory first (the combine plan reads the
-    * old state lazily) and swapped in with a single rename; both
-    * failure modes are loud, never silent truncation. A crash INSIDE
-    * the swap (after the delete, before the rename) is recovered on
-    * the next entry — see [[recoverInterruptedSwap]].
-    *
-    * `batchId` makes replays idempotent for checkpointed callers (e.g.
-    * `foreachBatch`, which re-runs a batch after a crash): the id is
-    * written INTO the temp directory before the rename, so state and
-    * watermark commit atomically, and a batch whose id is `<=` the
-    * recorded one is skipped. Returns the new state. */
+  /** Fold one batch into the stored state: [[foldState]] with this
+    * rollup's algebra. `batchId` makes replays idempotent for
+    * checkpointed callers (e.g. `foreachBatch`, which re-runs a batch
+    * after a crash): the id commits together with the state, and a
+    * batch whose id is `<=` the recorded one is skipped. Returns the
+    * new state. */
   def update(
       spark: SparkSession,
       statePath: String,
@@ -206,87 +135,6 @@ object IncrementalAgg {
       spec: Spec,
       batchId: Option[Long] = None): DataFrame =
     foldState(spark, statePath, partial(batch, spec), combine(_, _, spec), batchId)
-
-  private val TmpPartSuffix = ".tmp-incpart"
-
-  /** Crash recovery for [[foldStatePartitioned]]'s per-partition swap
-    * window: the touched-slice temp dir is written (with `_SUCCESS`)
-    * before any swap, and each partition's rename removes it FROM the
-    * temp dir — so after a crash, the partitions still inside a
-    * COMPLETE temp dir are exactly the swaps that never ran (or died
-    * between their stale-delete and their rename, which would
-    * otherwise lose that bucket outright). Completing them is safe at
-    * any point: the slice was merged from the pre-swap state, the
-    * marker (written last) still names the previous batch, and the
-    * delta's re-application on the healed state is idempotent by the
-    * caller's contract. A temp dir without `_SUCCESS` is a crashed
-    * write — the state was never touched; drop it. A complete temp
-    * beside an ABSENT state dir is reset leftovers, not a crash (a
-    * genuine mid-swap crash always leaves the state dir with at least
-    * its root `_SUCCESS`/marker files): a partial slice of a deleted
-    * state must not resurrect — drop it too. */
-  private def completeInterruptedPartitionSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      statePath: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(statePath + TmpPartSuffix)
-    if (!fs.exists(tmp)) return
-    val path = new org.apache.hadoop.fs.Path(statePath)
-    val stateLive = fs.exists(path) && fs.listStatus(path).nonEmpty
-    if (stateLive && fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-      fs.listStatus(tmp).foreach { st =>
-        if (st.isDirectory && st.getPath.getName.contains("=")) {
-          val dst = new org.apache.hadoop.fs.Path(path, st.getPath.getName)
-          if (fs.exists(dst) && !fs.delete(dst, true))
-            throw new java.io.IOException(s"partition-swap recovery: failed to delete stale $dst")
-          if (!fs.rename(st.getPath, dst))
-            throw new java.io.IOException(s"partition-swap recovery: failed to rename ${st.getPath} -> $dst")
-        }
-      }
-    }
-    fs.delete(tmp, true)
-  }
-
-  /** Run both crash recoveries (the flat whole-dir swap and the
-    * per-partition swap) for callers that manage their own state
-    * rewrite on top of this machinery (e.g. `Similarity.ivfReassign`). */
-  private[operators] def healState(spark: SparkSession, statePath: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    recoverInterruptedSwap(fs, statePath)
-    completeInterruptedPartitionSwap(fs, statePath)
-  }
-
-  /** The reset-resurrection refusal extracted from
-    * [[guardStateIdentity]] so that state-rewriting entry points that
-    * do NOT mint an identity (`Similarity.ivfReassign`) can refuse the
-    * same shape BEFORE their heal would rename a stale temp into
-    * place — see guardStateIdentity's scaladoc for the full hazard
-    * analysis. */
-  private[operators] def refuseResetResurrection(
-      spark: SparkSession,
-      statePath: String,
-      who: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val path = new org.apache.hadoop.fs.Path(statePath)
-    val tmpComplete = fs.exists(
-      new org.apache.hadoop.fs.Path(statePath + TmpSuffix + "/_SUCCESS"))
-    val stateEmpty = !(fs.exists(path) && fs.listStatus(path).nonEmpty)
-    def anySidecar: Boolean = {
-      val parent = path.getParent
-      // files only: dotted sibling DIRECTORIES (checkpoints, backups,
-      // temp dirs) are not sidecars — see guardStateIdentity's doc
-      parent != null && fs.exists(parent) && fs.listStatus(parent).exists { st =>
-        st.isFile && st.getPath.getName.startsWith(path.getName + ".")
-      }
-    }
-    require(!(tmpComplete && stateEmpty && !anySidecar),
-      s"$who: $statePath$TmpSuffix holds a complete state but no sidecar of any kind " +
-        s"claims it and $statePath is empty — this looks like a reset (state dir + " +
-        s"sidecars deleted) that left a stale complete temp dir behind, and recovering " +
-        s"it would silently resurrect the old, deliberately-deleted state. Delete " +
-        s"$statePath$TmpSuffix to really start fresh — or, if this temp dir is a " +
-        s"crash-interrupted swap of a never-guarded state you need back, rename it to " +
-        s"$statePath yourself and re-run.")
-  }
 
   /** True when the state dir holds at least one partition directory —
     * the partitioned protocol's "has data" test. A dir carrying only
@@ -300,31 +148,6 @@ object IncrementalAgg {
     val path = new org.apache.hadoop.fs.Path(statePath)
     fs.exists(path) && fs.listStatus(path).exists(st =>
       st.isDirectory && st.getPath.getName.contains("="))
-  }
-
-  /** Atomically (re)write the applied-batch marker INSIDE a live state
-    * dir: tmp file + OVERWRITE rename (FileContext — the plain
-    * FileSystem.rename refuses an existing destination, and a
-    * delete-then-rename would open a window where a crash ERASES the
-    * watermark: a lost marker reads as -1, so a stale re-delivered
-    * OLDER batch would silently re-apply over newer state instead of
-    * short-circuiting). With the overwrite rename a crash can only
-    * leave the marker at its previous value (replay of the same batch
-    * re-applies — idempotent by the partitioned protocol's contract),
-    * never torn (a zero-length marker would make [[appliedBatchId]]
-    * throw on every subsequent entry) and never absent. The flat
-    * protocol doesn't need this — its marker commits with the state in
-    * one dir rename. */
-  private def writeMarkerAtomic(
-      fs: org.apache.hadoop.fs.FileSystem,
-      statePath: String,
-      id: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(statePath, MarkerFile + ".tmp")
-    val dst = new org.apache.hadoop.fs.Path(statePath, MarkerFile)
-    val out = fs.create(tmp, true)
-    try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Distinct bucket values of a key column under `pmod(key,
@@ -346,30 +169,20 @@ object IncrementalAgg {
     * same reasoning that makes [[Upsert.upsertIntoParquet]]
     * partition-scoped, applied to the fold/watermark machinery.
     *
-    * Guarantees, and how they differ from the flat protocol:
-    *  - BOOTSTRAP (no state dir) is the flat protocol exactly: the
-    *    first batch folds THROUGH the combine against an empty state
-    *    (the Upsert bootstrap convention — the combine may carry
-    *    semantics beyond the merge, e.g. ivfAppend retiring delete
-    *    ids from the delta itself), materializes to the `.tmp-incagg`
-    *    dir, the marker is written INTO it, one rename commits both —
-    *    so [[recoverInterruptedSwap]] and [[guardStateIdentity]]'s
-    *    reset-resurrection refusal cover a bootstrap crash unchanged.
-    *    An all-empty bootstrap (no delta rows, nothing to retire)
-    *    creates NO state — the next data-carrying fold bootstraps.
-    *  - INCREMENTAL folds write the touched partitions to a separate
-    *    `.tmp-incpart` dir (never renamed wholesale — it holds only a
-    *    SLICE of the state), swap them in per-partition directory
-    *    rename, and write the applied-batch marker LAST (atomically —
-    *    [[writeMarkerAtomic]]). A crash anywhere in that window
-    *    leaves the marker at the previous batch, so the replay
-    *    re-applies the whole delta — which is why `combine` here MUST
-    *    be idempotent on a re-applied delta (keep-latest upserts and
-    *    delete retirements are; additive algebras like [[combine]]'s
-    *    sums are NOT — those stay on [[foldState]], whose swap commits
-    *    state and marker in one rename). Re-application converges per
-    *    partition: an already-swapped partition merged with the same
-    *    delta yields itself.
+    * Contract:
+    *  - The first fold (no state dir) runs the combine against an empty
+    *    state (the Upsert bootstrap convention — the combine may carry
+    *    semantics beyond the merge, e.g. ivfAppend retiring delete ids
+    *    from the delta itself). A fold that would create a state with
+    *    no rows (no delta rows, or all retired) creates NO state — an
+    *    empty partitioned dir has no readable schema; the next
+    *    data-carrying fold bootstraps.
+    *  - The touched partitions and the applied-batch id commit together
+    *    through [[graft.core.Commit]]. `combine` must still be
+    *    idempotent on a re-applied delta (keep-latest upserts and delete
+    *    retirements are; additive algebras like [[combine]]'s sums are
+    *    NOT — those stay on [[foldState]]): only then does re-folding a
+    *    batch whose commit was never written converge.
     *  - The partition column should be a pure function of the merge
     *    KEY (an id bucket), so a re-ingested key can never move
     *    partitions and "touched" is exactly the delta's buckets — no
@@ -387,10 +200,10 @@ object IncrementalAgg {
     * delta's rows alone don't reveal (e.g. the buckets of a delete-id
     * set, which contributes no delta rows but must have its postings
     * retired). A touched partition whose merged result is EMPTY is
-    * removed, not left stale. The delta is cached for the fold's
-    * duration — it is read twice (touched discovery + the merge) and
-    * recomputing a broadcast-assignment batch twice is the costlier
-    * alternative. */
+    * removed, not left stale. An empty delta is a watermark-only fold.
+    * The delta is cached for the fold's duration — it is read twice
+    * (touched discovery + the merge) and recomputing a
+    * broadcast-assignment batch twice is the costlier alternative. */
   def foldStatePartitioned(
       spark: SparkSession,
       statePath: String,
@@ -399,9 +212,8 @@ object IncrementalAgg {
       combine: (DataFrame, DataFrame) => DataFrame,
       batchId: Option[Long] = None,
       extraTouched: => Seq[Any] = Nil): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    recoverInterruptedSwap(fs, statePath) // a bootstrap-swap crash has the flat shape
-    completeInterruptedPartitionSwap(fs, statePath)
+    Commit.recover(spark, statePath)
+    val fs = Commit.fs(spark, statePath)
     val path = new org.apache.hadoop.fs.Path(statePath)
     val dirExists = fs.exists(path) && fs.listStatus(path).nonEmpty
     def current(): DataFrame =
@@ -413,46 +225,23 @@ object IncrementalAgg {
     try {
       val deltaBuckets = d.select(col(partitionCol)).distinct().collect().map(_.get(0)).toSeq
       val touched = (deltaBuckets ++ extraTouched).distinct
-      if (!dirExists) {
-        if (touched.isEmpty) return current() // nothing to fold, nothing to retire
-        val tmp = new org.apache.hadoop.fs.Path(statePath + TmpSuffix)
-        combine(d.filter(lit(false)), d)
-          .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(tmp.toString)
-        // a bootstrap whose folded content is EMPTY (a delete-only
-        // batch, or a batch fully retired by its own delete set) must
-        // not commit: an empty partitioned dir has no readable schema
-        // and would poison the path. No state, no watermark — the
-        // replay recomputes the same empty no-op.
-        if (!stateHasData(fs, tmp.toString)) {
-          fs.delete(tmp, true)
-          return current()
-        }
-        batchId.foreach { id =>
-          val out = fs.create(new org.apache.hadoop.fs.Path(tmp, MarkerFile), true)
-          try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-        }
-        if (fs.exists(path) && !fs.delete(path, true)) // empty husk dir
-          throw new java.io.IOException(s"incremental-agg bootstrap: failed to delete empty $path")
-        if (!fs.rename(tmp, path))
-          throw new java.io.IOException(s"incremental-agg bootstrap: failed to rename $tmp -> $path")
+      if (!dirExists && touched.isEmpty) return current() // nothing to fold, nothing to retire
+      val staged = Commit.staged(statePath, statePath)
+      if (touched.nonEmpty) {
+        // read ONLY the touched slice of the state (partition pruning)
+        val statePart =
+          if (stateHasData(fs, statePath))
+            read(spark, statePath).filter(Upsert.partitionFilter(partitionCol, touched))
+          else d.filter(lit(false)) // first fold, or all rows previously retired
+        combine(statePart, d).write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(staged)
+      }
+      if (!dirExists && !stateHasData(fs, staged)) {
+        Commit.discard(spark, statePath) // no state from nothing: nothing to commit
         return current()
       }
-      if (touched.isEmpty) { // empty delta: a watermark-only fold
-        batchId.foreach(writeMarkerAtomic(fs, statePath, _))
-        return current()
-      }
-      // read ONLY the touched slice of the state (partition pruning),
-      // merge, write the new slice, swap per-partition, marker last
-      val statePart =
-        if (stateHasData(fs, statePath))
-          read(spark, statePath).filter(Upsert.partitionFilter(partitionCol, touched))
-        else d.filter(lit(false)) // all rows previously retired
-      val next = combine(statePart, d)
-      val tmp = statePath + TmpPartSuffix
-      next.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(tmp)
-      Upsert.swapPartitions(fs, statePath, tmp, partitionCol, touched)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      batchId.foreach(writeMarkerAtomic(fs, statePath, _))
+      Commit.commit(spark, statePath,
+        Seq(Commit.Target(statePath, Some(touched.map(Upsert.partitionDir(partitionCol, _))))),
+        batchId)
       current()
     } finally d.unpersist()
   }
@@ -461,36 +250,28 @@ object IncrementalAgg {
     * algebra abstracted out — any mergeable state (this rollup's
     * partials, [[Sketch.qsFoldInto]]'s quantile summaries) folds one
     * batch delta into a stored parquet state with the SAME guarantees:
-    * the new state materializes to a temp dir first (the combine plan
-    * reads the old state lazily), the applied-batch marker commits
-    * atomically WITH the state via one rename, a `batchId` ≤ the
-    * recorded watermark short-circuits to the existing state (replay
-    * idempotence for checkpointed `foreachBatch` callers), and both
-    * failure modes are loud. `combine(state, delta)` must be the
-    * algebra's merge; `delta` is evaluated lazily inside the fold. */
+    * the new state materializes to the staging dir first (the combine
+    * plan reads the old state lazily), state and applied-batch id
+    * commit together through [[graft.core.Commit]], and a `batchId` ≤
+    * the recorded watermark short-circuits to the existing state
+    * (replay idempotence for checkpointed `foreachBatch` callers).
+    * `combine(state, delta)` must be the algebra's merge; `delta` is
+    * evaluated lazily inside the fold. */
   def foldState(
       spark: SparkSession,
       statePath: String,
       delta: DataFrame,
       combine: (DataFrame, DataFrame) => DataFrame,
       batchId: Option[Long] = None): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    recoverInterruptedSwap(fs, statePath)
+    Commit.recover(spark, statePath)
+    val fs = Commit.fs(spark, statePath)
     val path = new org.apache.hadoop.fs.Path(statePath)
     val exists = fs.exists(path) && fs.listStatus(path).nonEmpty
     if (batchId.exists(_ <= appliedBatchId(spark, statePath)) && exists)
       return read(spark, statePath) // replayed batch: already folded in
     val next = if (exists) combine(read(spark, statePath), delta) else delta
-    val tmp = new org.apache.hadoop.fs.Path(statePath + TmpSuffix)
-    next.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    batchId.foreach { id =>
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, MarkerFile), true)
-      try out.write(id.toString.getBytes("UTF-8")) finally out.close()
-    }
-    if (exists && !fs.delete(path, true))
-      throw new java.io.IOException(s"incremental-agg swap: failed to delete stale $path")
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"incremental-agg swap: failed to rename $tmp -> $path")
+    next.write.mode(SaveMode.Overwrite).parquet(Commit.staged(statePath, statePath))
+    Commit.commit(spark, statePath, Seq(Commit.Target(statePath, None)), batchId)
     read(spark, statePath)
   }
 }

@@ -329,11 +329,11 @@ object Similarity {
   /** Fold one embedding batch into a STORED inverted file — the
     * index-maintenance loop a production ANN deployment runs
     * ([[prepareIvfIndexWith]] on the batch + [[ivfAppend]] attached
-    * to [[IncrementalAgg.foldStatePartitioned]]'s per-partition swap
-    * + applied-batch watermark): assign the batch against the FROZEN
+    * to [[IncrementalAgg.foldStatePartitioned]]'s partition-scoped
+    * commit + applied-batch watermark): assign the batch against the FROZEN
     * broadcast quantizer (one pass over the batch — the corpus is
     * never re-assigned, the index never rebuilt), upsert the
-    * postings, swap. The stored state is [[IvfIndex.assigned]]'s
+    * postings, commit. The stored state is [[IvfIndex.assigned]]'s
     * shape plus the bucket column, so `IvfIndex(cents, <state>)`
     * serves queries via [[ivfTopKIndexed]] directly after any number
     * of folds.
@@ -408,23 +408,20 @@ object Similarity {
     * The stored postings carry their vectors, so re-assignment needs
     * nothing but the state itself: one broadcast-argmax pass over the
     * posting table recomputes `cluster` against `newCents`, the new
-    * state swaps in atomically under the flat whole-dir protocol
+    * state replaces the old one whole through [[graft.core.Commit]]
     * (same bucket layout — buckets key on id, which doesn't change),
     * and the `.ivf-params` sidecar rotates to the new quantizer's
-    * digest LAST. The applied-batch watermark is preserved through
-    * the swap: reassignment is not a batch, and the fold sequence
-    * resumes where it left off. Reassign-from-state equals a fresh
+    * digest LAST. The applied-batch watermark is carried by the commit:
+    * reassignment is not a batch, and the fold sequence resumes where
+    * it left off. Reassign-from-state equals a fresh
     * [[prepareIvfIndexWith]] over the same corpus exactly (the
     * assignment is a pure per-row function of vec and quantizer) —
     * the spec-pinned contract.
     *
     * Crash anywhere: re-run `ivfReassign` — it is idempotent. A crash
-    * inside the swap is healed at the next entry (the flat recovery;
-    * the old `.ivf-params` still names the state, so the reset
-    * refusal stays out of the way); a crash after the swap but before
-    * the sidecar rotation leaves folds refusing loudly (stored digest
-    * ≠ new quantizer's) until the re-run rotates it. The raw corpus
-    * is never rescanned. */
+    * after the commit but before the sidecar rotation leaves folds
+    * refusing loudly (stored digest ≠ new quantizer's) until the re-run
+    * rotates it. The raw corpus is never rescanned. */
   def ivfReassign(
       spark: org.apache.spark.sql.SparkSession,
       statePath: String,
@@ -432,14 +429,8 @@ object Similarity {
       idCol: String,
       vecCol: String,
       nBuckets: Int = 64): DataFrame = {
-    // the reset-resurrection shape must refuse HERE too: healState's
-    // recovery would otherwise rename a stale post-reset temp into
-    // place, the absent sidecar would pass the forall below, and the
-    // reassign would re-bless the deliberately-deleted state under a
-    // freshly minted identity
-    IncrementalAgg.refuseResetResurrection(spark, statePath, "ivfReassign")
-    IncrementalAgg.healState(spark, statePath)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    graft.core.Commit.recover(spark, statePath)
+    val fs = graft.core.Commit.fs(spark, statePath)
     val tail = s";id=$idCol;vec=$vecCol;buckets=$nBuckets"
     val stored = IncrementalAgg.readSidecar(fs, statePath + ".ivf-params")
     require(stored.forall(_.endsWith(tail)),
@@ -481,17 +472,10 @@ object Similarity {
       IncrementalAgg.read(spark, statePath).select(col("id"), col("vec")),
       "id", "vec", newCents).assigned
       .withColumn("pbucket", pmod(col("id"), lit(nBuckets)).cast("int"))
-    val tmp = new org.apache.hadoop.fs.Path(statePath + IncrementalAgg.TmpSuffix)
     next.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("pbucket").parquet(tmp.toString)
-    if (applied >= 0L) {
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, IncrementalAgg.MarkerFile), true)
-      try out.write(applied.toString.getBytes("UTF-8")) finally out.close()
-    }
-    if (!fs.delete(path, true))
-      throw new java.io.IOException(s"ivfReassign swap: failed to delete stale $path")
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"ivfReassign swap: failed to rename $tmp -> $path")
+      .partitionBy("pbucket").parquet(graft.core.Commit.staged(statePath, statePath))
+    graft.core.Commit.commit(spark, statePath,
+      Seq(graft.core.Commit.Target(statePath, None)), Some(applied).filter(_ >= 0L))
     // rotate the identity last: until this write, folds refuse loudly
     // rather than merge old-cell postings into the new geometry
     rotateSidecar()

@@ -226,10 +226,10 @@ object Sketch {
 
   /** Fold one batch's k-minima into a STORED sketch table — the
     * maintenance loop a real ingest runs ([[kmvCombine]] attached to
-    * [[IncrementalAgg.foldState]]'s atomic swap + applied-batch
+    * [[IncrementalAgg.foldState]]'s commit + applied-batch
     * watermark, the [[qsFoldInto]] shape, distinct edition): sketch
     * the batch, merge with the state read from `statePath`,
-    * materialize to a temp dir, rename in. `batchId` makes
+    * stage the result, commit it. `batchId` makes
     * checkpointed replays a no-op. Returns the new state — ≤ k rows
     * per group forever, each fold costing one batch k-minima pass +
     * a bounded merge, history never rescanned. The state table is
@@ -334,7 +334,7 @@ object Sketch {
 
   /** Fold one batch's MG sketch into a STORED heavy-hitter table —
     * [[mgSketch]] + [[mgCombine]] attached to [[IncrementalAgg
-    * .foldState]]'s atomic swap + applied-batch watermark (the
+    * .foldState]]'s commit + applied-batch watermark (the
     * [[qsFoldInto]] shape, heavy-hitter edition). The stored state
     * stays ≤ capacity rows forever; each fold costs one batch sketch
     * pass + a ≤ 2×capacity-row merge, history never rescanned, and
@@ -736,9 +736,9 @@ object Sketch {
 
   /** Fold one batch's quantile summary into a STORED summary table —
     * the maintenance loop a real ingest runs ([[qsCombine]] attached to
-    * [[IncrementalAgg.foldState]]'s atomic swap + applied-batch
+    * [[IncrementalAgg.foldState]]'s commit + applied-batch
     * watermark): summarize the batch, combine with the state read from
-    * `statePath`, materialize to a temp dir, rename in. `batchId` makes
+    * `statePath`, stage the result, commit it. `batchId` makes
     * checkpointed replays (`foreachBatch` after a crash) a no-op — the
     * id commits atomically WITH the state, so fold-then-crash and
     * crash-then-fold both converge. Returns the new state. The stored

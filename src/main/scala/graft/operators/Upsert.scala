@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Commit
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,8 +21,8 @@ import org.apache.spark.sql.functions._
   *  - [[upsertIntoParquet]] is the storage-level variant: it rewrites
   *    ONLY the partitions that contain touched keys (mirroring the
   *    reference's per-`load_date` replay granularity,
-  *    `crime_etl.py:426-444`), then swaps directories atomically-enough
-  *    (temp dir + rename) — at 100 TB a merge touching one day's
+  *    `crime_etl.py:426-444`) and commits them through
+  *    [[graft.core.Commit]] — at 100 TB a merge touching one day's
   *    partitions rewrites one day, not the table.
   */
 object Upsert {
@@ -41,31 +42,13 @@ object Upsert {
       .drop("__rn", "__src")
   }
 
-  /** Full-outer-join merge variant — the literal `MERGE` shape
-    * (`db_postgres.py:158-203`): on matched keys EVERY data column is
-    * taken from the update row, including explicit NULLs (a per-column
-    * coalesce would silently keep the target value when an update sets a
-    * column to NULL — not what MERGE does). Useful when target and
-    * updates have exactly one row per key already. */
-  def mergeFullOuter(target: DataFrame, updates: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val dataCols = target.columns.filterNot(keyCols.contains)
-    val t = target.as("t")
-    val u = updates.withColumn("__matched", lit(true)).as("u")
-    val cond = keyCols.map(k => t(k) <=> u(k)).reduce(_ && _)
-    t.join(u, cond, "full_outer")
-      .select(
-        keyCols.map(k => coalesce(u(k), t(k)).as(k)) ++
-          dataCols.map(c => when(u("__matched"), u(c)).otherwise(t(c)).as(c)): _*
-      )
-  }
-
   /** Spark's directory name for a null partition value. */
   val NullPartitionDir = "__HIVE_DEFAULT_PARTITION__"
 
   /** Directory segment for a partition value, escaped exactly the way
     * Spark's writer escapes it (spaces, ':', '%', … — a raw toString
-    * would silently miss the rename for such values). */
-  private def partitionDir(partitionCol: String, v: Any): String =
+    * would silently miss the commit for such values). */
+  private[operators] def partitionDir(partitionCol: String, v: Any): String =
     s"$partitionCol=${
       if (v == null) NullPartitionDir
       else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v.toString)
@@ -114,142 +97,71 @@ object Upsert {
       .select(partitionCol).distinct()
   }
 
-  /** Replace the `touched` partition directories of `basePath` with
-    * their freshly-written counterparts under `tmpPath` (a touched
-    * partition absent from tmp lost all its rows — its stale directory
-    * is removed). */
-  private[operators] def swapPartitions(
-      fs: org.apache.hadoop.fs.FileSystem,
-      basePath: String,
-      tmpPath: String,
-      partitionCol: String,
-      touched: Seq[Any]
-  ): Unit = touched.foreach { v =>
-    val part = partitionDir(partitionCol, v)
-    val dst = new org.apache.hadoop.fs.Path(s"$basePath/$part")
-    val src = new org.apache.hadoop.fs.Path(s"$tmpPath/$part")
-    if (fs.exists(dst) && !fs.delete(dst, true))
-      throw new java.io.IOException(s"upsert swap: failed to delete stale $dst")
-    if (fs.exists(src) && !fs.rename(src, dst))
-      throw new java.io.IOException(s"upsert swap: failed to rename $src -> $dst")
-  }
-
   /** Partition-scoped parquet upsert: rewrite only the partitions this
     * batch touches; leave the rest untouched. Returns the touched
     * partition values (callers scope their post-load checks to them).
     *
-    * With `trackPartitionMoves` (the default), "touched" covers two
-    * sets: partitions of the update rows AND partitions still holding
-    * an OLD version of an updated key (a key whose partition value
-    * changed — e.g. a corrected occurrence date — must vanish from its
-    * old partition or the table would carry duplicates). The second set
-    * is found by semi-joining the batch keys against the [[keymapPath
-    * keymap sidecar]] — a per-key (key, partition) map maintained by
-    * the same tmp-write + directory-swap as the table — NEVER by
-    * scanning the table's complement partitions: at 100 TB a
-    * complement scan per micro-batch is a full-table read, while the
-    * keymap is proportional to the key count. Pass
-    * `trackPartitionMoves = false` when the partition value of a key
-    * can never change (e.g. a constant partition column) — it skips
-    * stale detection; the sidecar is still maintained once it exists,
-    * so later tracked calls stay correct across mixed-mode usage.
+    * "Touched" covers two sets: partitions of the update rows AND
+    * partitions still holding an OLD version of an updated key (a key
+    * whose partition value changed — e.g. a corrected occurrence date —
+    * must vanish from its old partition or the table would carry
+    * duplicates). The second set is found by semi-joining the batch keys
+    * against the [[keymapPath keymap sidecar]], a per-key (key,
+    * partition) map rewritten in the same commit as the table — NEVER by
+    * scanning the table's complement partitions: at 100 TB a complement
+    * scan per micro-batch is a full-table read, while the keymap is
+    * proportional to the key count.
     *
-    * Keymap lifecycle: built lazily from a one-time column-pruned table
-    * scan when absent (legacy tables) — written under the tmp name and
-    * renamed into place, so a half-built map is never visible under
-    * `kmDir`; updated partition-scoped per batch. Write ordering is
-    * data-tmp, keymap-tmp, data swap, keymap swap — a leftover keymap
-    * tmp on entry therefore means a crash landed mid-build or between
-    * the two swaps, and the keymap is rebuilt from the table (which is
-    * always authoritative) before use.
+    * Table and keymap partitions are staged and committed together
+    * through [[graft.core.Commit]], so a crash at any step leaves the
+    * pre-load or (after the next entry) the post-load table and keymap.
+    * An absent or empty table dir (catalog DDL pre-creates external
+    * table locations) is an empty target: the first batch runs the same
+    * keep-latest merge, so duplicate keys in it (e.g. a retried load
+    * that re-landed pages) collapse too, and its commit replaces both
+    * dirs whole.
     *
     * Null partition values are first-class: the target filter matches
-    * them with `isNull` and the directory swap uses Spark's
+    * them with `isNull` and the commit uses Spark's
     * `__HIVE_DEFAULT_PARTITION__` name — Transform deliberately maps
     * malformed timestamps to NULL, so null-partition rows must merge,
-    * not silently vanish. The bootstrap write (table doesn't exist yet)
-    * runs the same keep-latest merge against an empty target so
-    * duplicate keys in the very first batch (e.g. a retried load that
-    * re-landed pages) collapse too. */
+    * not silently vanish. */
   def upsertIntoParquet(
       spark: SparkSession,
       tablePath: String,
       updates: DataFrame,
       keyCols: Seq[String],
       versionCol: String,
-      partitionCol: String,
-      trackPartitionMoves: Boolean = true
+      partitionCol: String
   ): Seq[Any] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val path = new org.apache.hadoop.fs.Path(tablePath)
-    val kmDir = keymapPath(tablePath)
-    val kmTmp = kmDir + ".tmp-upsert"
-    val keymapCols = (keyCols :+ partitionCol).map(col)
+    Commit.recover(spark, tablePath)
     val updatedParts = updates.select(partitionCol).distinct().collect().map(_.get(0)).toSeq
     if (updatedParts.isEmpty) return Seq.empty // empty update batch
-    // bootstrap also when the path is an EMPTY directory (catalog DDL
-    // pre-creates external-table locations before the first load)
-    if (!fs.exists(path) || fs.listStatus(path).isEmpty) {
-      val merged = merge(updates.filter(lit(false)), updates, keyCols, versionCol).cache()
-      merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(tablePath)
-      if (trackPartitionMoves) {
-        // tmp + rename, same as the legacy build below: a crash during
-        // the keymap job's commit could otherwise leave a
-        // partial-but-readable map directly under kmDir with no
-        // leftover tmp, so the self-heal would never trigger and later
-        // runs would trust an incomplete map (missed stale partitions
-        // → duplicate keys). With the tmp protocol a half-written map
-        // is never visible under kmDir.
-        merged.select(keymapCols: _*)
-          .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(kmTmp)
-        // a keymap orphaned by an externally-deleted table would make
-        // the rename nest kmTmp INSIDE it (Hadoop rename-into-dir)
-        fs.delete(new org.apache.hadoop.fs.Path(kmDir), true)
-        if (!fs.rename(new org.apache.hadoop.fs.Path(kmTmp), new org.apache.hadoop.fs.Path(kmDir)))
-          throw new java.io.IOException(s"upsert: failed to rename bootstrap keymap $kmTmp -> $kmDir")
-      }
-      merged.unpersist()
-      return updatedParts
-    }
-    // self-heal: a leftover keymap tmp means a prior run may have died
-    // between the data swap and the keymap swap — drop the (possibly
-    // half-swapped) keymap and rebuild from the authoritative table
-    if (fs.exists(new org.apache.hadoop.fs.Path(kmTmp))) {
-      fs.delete(new org.apache.hadoop.fs.Path(kmTmp), true)
-      fs.delete(new org.apache.hadoop.fs.Path(kmDir), true)
-    }
-    if (trackPartitionMoves && !fs.exists(new org.apache.hadoop.fs.Path(kmDir))) {
-      // one-time build for legacy/recovered tables: column-pruned scan.
-      // Built under the tmp name and renamed into place — a direct
-      // write could crash half-done and the next run would silently
-      // trust the partial map (missed stale partitions → duplicate
-      // keys); a leftover tmp instead trips the self-heal above.
-      spark.read.parquet(tablePath).select(keymapCols: _*)
-        .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(kmTmp)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(kmTmp), new org.apache.hadoop.fs.Path(kmDir)))
-        throw new java.io.IOException(s"upsert: failed to rename keymap build $kmTmp -> $kmDir")
-    }
-    // keep an existing keymap current even on untracked batches, so a
-    // later tracked call never consults a map missing these inserts
-    val maintainKeymap =
-      trackPartitionMoves || fs.exists(new org.apache.hadoop.fs.Path(kmDir))
+    val fs = Commit.fs(spark, tablePath)
+    val kmDir = keymapPath(tablePath)
+    val live = IncrementalAgg.stateHasData(fs, tablePath)
+    require(!live || fs.exists(new org.apache.hadoop.fs.Path(kmDir)),
+      s"upsert: $tablePath has rows but no keymap at $kmDir. The two are committed together, " +
+        s"so the keymap was deleted by hand: restore it, or reset the table by deleting " +
+        s"$tablePath and every $tablePath.* sibling.")
     val staleParts =
-      if (!trackPartitionMoves) Seq.empty
+      if (!live) Seq.empty
       else stalePartitionsFrame(spark, tablePath, updates, keyCols, partitionCol, updatedParts)
         .collect().map(_.get(0)).toSeq
     val touched = (updatedParts ++ staleParts).distinct
-    val target = spark.read.parquet(tablePath).filter(partitionFilter(partitionCol, touched))
+    val target =
+      if (live) spark.read.parquet(tablePath).filter(partitionFilter(partitionCol, touched))
+      else updates.filter(lit(false))
     val merged = merge(target, updates, keyCols, versionCol).cache()
-    val tmp = tablePath + ".tmp-upsert"
-    merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(tmp)
-    if (maintainKeymap)
-      merged.select(keymapCols: _*)
-        .write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(kmTmp)
-    merged.unpersist()
-    swapPartitions(fs, tablePath, tmp, partitionCol, touched)
-    if (maintainKeymap) swapPartitions(fs, kmDir, kmTmp, partitionCol, touched)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    fs.delete(new org.apache.hadoop.fs.Path(kmTmp), true)
+    try {
+      merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
+        .parquet(Commit.staged(tablePath, tablePath))
+      merged.select((keyCols :+ partitionCol).map(col): _*)
+        .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
+        .parquet(Commit.staged(tablePath, kmDir))
+    } finally merged.unpersist()
+    val parts = if (live) Some(touched.map(partitionDir(partitionCol, _))) else None
+    Commit.commit(spark, tablePath, Seq(Commit.Target(tablePath, parts), Commit.Target(kmDir, parts)))
     touched
   }
 }

@@ -67,8 +67,8 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
 
   /** A1: CDC cursor — MAX(source_updated_on) from the crime data. */
   def crimeHighWater(): Option[java.sql.Timestamp] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val p = new org.apache.hadoop.fs.Path(replicaA)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p) || fs.listStatus(p).isEmpty) None
     else Option(spark.read.parquet(replicaA).agg(max("source_updated_on")).first().getTimestamp(0))
   }
@@ -113,7 +113,12 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
         loadReplica(replicaB, Seq(loadDate))
         refreshCatalog()
         "SUCCESS"
-      } catch { case _: Exception => "FAILED" }
+      } catch {
+        case e: Exception =>
+          org.slf4j.LoggerFactory.getLogger(getClass)
+            .warn(s"run $runId (load date $loadDate) failed", e)
+          "FAILED"
+      }
 
     logsA.finish(runId, ld, status)
     logsB.finish(runId, ld, status)

@@ -23,7 +23,8 @@ final case class SessionRecord(
 )
 
 /** Structured Streaming surface over the `events` stream (ST1–ST4 +
-  * the declared tumbling/sliding/session windows, SURVEY.md §2.7).
+  * the declared tumbling and session windows, SURVEY.md §2.7; the
+  * sliding window is the batch query st02_sliding).
   *
   * The reference is batch-incremental CDC; this module preserves those
   * semantics (file source + idempotent `foreachBatch` upsert gives the
@@ -49,14 +50,6 @@ object EventStream {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum("value").as("total"))
       .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("total"))
-
-  /** Sliding 2-hour / 1-hour-step counts per event_type. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
 
   /** Session windows (30-minute gap) per user. The watermark delay is
     * the max tolerated event-time disorder: session state older than it
@@ -450,12 +443,14 @@ object EventStream {
       statePath: String,
       checkpointDir: String,
       who: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(checkpointDir).getFileSystem(conf)
     val ckptPath = fs.makeQualified(new org.apache.hadoop.fs.Path(checkpointDir))
     val ckptUri = ckptPath.toUri.toString
     val legacy = s"checkpoint=$ckptUri"
     val sidecar = new org.apache.hadoop.fs.Path(statePath + ".stream-identity")
-    val stored = graft.operators.IncrementalAgg.readSidecar(fs, statePath + ".stream-identity")
+    val stateFs = new org.apache.hadoop.fs.Path(statePath).getFileSystem(conf)
+    val stored = graft.operators.IncrementalAgg.readSidecar(stateFs, statePath + ".stream-identity")
     // The pair-mismatch hazard is symmetric: a FRESH state (no sidecar)
     // against a checkpoint that already COMMITTED batches would adopt
     // silently — and stay permanently missing every micro-batch those
@@ -503,7 +498,7 @@ object EventStream {
           s"to [$identity]; if the checkpoint dir was ever deleted and recreated at this " +
           "path before the upgrade, the stored applied-batch watermark may not match its " +
           "batch numbering — verify the state against a batch recompute if in doubt.")
-      val out = fs.create(sidecar, true)
+      val out = stateFs.create(sidecar, true)
       try out.write(identity.getBytes("UTF-8")) finally out.close()
     }
     graft.operators.IncrementalAgg.guardStateIdentity(
@@ -705,24 +700,4 @@ object EventStream {
       .trigger(Trigger.AvailableNow())
       .start()
   }
-
-  /** CDC upsert sink: maintain a keep-latest-per-key parquet table from
-    * a stream via foreachBatch + the engine upsert (ST1/ST3/ST4). */
-  def upsertSink(events: DataFrame, tablePath: String, checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val keyed = batch.withColumn("part", lit(0))
-        // constant partition value → a key can never move partitions;
-        // skip the moved-key scan so each micro-batch stays O(batch)
-        graft.operators.Upsert.upsertIntoParquet(
-          spark, tablePath, keyed,
-          keyCols = Seq("user_id"), versionCol = "ts", partitionCol = "part",
-          trackPartitionMoves = false)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

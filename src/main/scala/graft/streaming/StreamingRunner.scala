@@ -58,8 +58,8 @@ object StreamingRunner {
     * stay fresh without ever rescanning the warehouse. Exactly-once:
     * the file source's checkpoint prevents re-reads, and the state's
     * atomically-committed batch watermark makes a post-crash
-    * `foreachBatch` replay a no-op (state + batch id swap in with one
-    * directory rename). */
+    * `foreachBatch` replay a no-op (state and batch id commit together,
+    * [[graft.core.Commit]]). */
   def runRollup(
       spark: SparkSession,
       landingRoot: String,

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * gate rows pin once, here exercised across many random maintenance
   * histories, including the quantizer-refresh migration composed on
   * top ([[Similarity.ivfReassign]] after folds-with-deletes). */
-class FoldStatePartitionedProps extends SparkSpec {
+class FoldStatePartitionedProps extends SparkSpec with graft.CrashPoints {
   import spark.implicits._
 
   private def emb(n: Int, seed: Int) = {
@@ -133,28 +133,30 @@ class FoldStatePartitionedProps extends SparkSpec {
   }
 
   test("ivfReassign refuses the reset-resurrection shape instead of re-blessing deleted state") {
+    // a reassign crashed at any of its filesystem steps, then a reset
+    // (state and every state.* sibling deleted): the next reassign finds
+    // nothing to re-bless, whatever the crash left staged
     val all = emb(20, 17)
-    val q = cents(all, 4)
-    val base = java.nio.file.Files.createTempDirectory("ivfres").toString
-    val state = s"$base/state"
-    Similarity.ivfFoldInto(spark, state, all, "vec_id", "embedding", q,
+    val seed = java.nio.file.Files.createTempDirectory("ivfres").toString
+    Similarity.ivfFoldInto(spark, s"$seed/state", all, "vec_id", "embedding", cents(all, 4),
       Some(0L), nBuckets = 4)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    // fabricate the post-reset shape: a stale complete flat tmp, state
-    // dir and ALL sidecars deleted (the drift-refusal remedy)
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(state),
-      new org.apache.hadoop.fs.Path(state + ".tmp-incagg")))
-    fs.listStatus(new org.apache.hadoop.fs.Path(base)).foreach { st =>
-      if (st.isFile && st.getPath.getName.startsWith("state."))
-        fs.delete(st.getPath, false)
+    val q6 = cents(all, 6)
+    def reassign(dir: String) =
+      Similarity.ivfReassign(spark, s"$dir/state", q6, "vec_id", "embedding", nBuckets = 4)
+    val base = java.nio.file.Files.createTempDirectory("ivfres").toString
+    def copy(name: String) = {
+      val d = s"$base/$name"
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(seed), new java.io.File(d)); d
     }
-    val e = intercept[IllegalArgumentException] {
-      Similarity.ivfReassign(spark, state, cents(all, 6), "vec_id", "embedding", nBuckets = 4)
+    val n = graft.FaultFs.run(spark, copy("clean") + "/")(reassign(s"$base/clean"))._2
+    (1 to n).foreach { k =>
+      val dir = copy(s"k$k")
+      assert(graft.FaultFs.run(spark, dir + "/", k)(reassign(dir))._1)
+      reset(dir)
+      val e = intercept[IllegalArgumentException](reassign(dir))
+      assert(e.getMessage.contains("ivfReassign") && e.getMessage.contains("nothing to reassign"))
+      assert(!new java.io.File(s"$dir/state").exists(), s"resurrected after a crash at step $k of $n")
     }
-    assert(e.getMessage.contains("ivfReassign") && e.getMessage.contains("resurrect"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(state)),
-      "the refusal must not resurrect the state (retry-safe)")
   }
 
   test("random maintenance histories: stored PQ fold == re-encode of survivors (2 seeds)") {

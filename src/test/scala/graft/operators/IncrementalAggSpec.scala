@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * invariant that lets a rollup be trusted without ever auditing it
   * against history.
   */
-class IncrementalAggSpec extends SparkSpec {
+class IncrementalAggSpec extends SparkSpec with graft.CrashPoints {
   import spark.implicits._
 
   private val spec = IncrementalAgg.Spec(
@@ -51,44 +51,27 @@ class IncrementalAggSpec extends SparkSpec {
   }
 
   test("a crash inside the swap window is recovered: no folded history is lost") {
-    // the delete→rename swap has a window where statePath is gone and
-    // the ONLY complete copy lives in the temp dir; simulate a crash
-    // exactly there (state renamed away to the temp name, parquet
-    // _SUCCESS + applied-batch marker present) and assert the next
-    // fold first finishes the interrupted swap instead of rebuilding
-    // from the delta alone
-    val base = java.nio.file.Files.createTempDirectory("incagg").toString
-    val dir = s"$base/state"
-    val b1 = batch(20, 300); val b2 = batch(21, 200)
-    IncrementalAgg.update(spark, dir, b1, spec, batchId = Some(0L))
-    // simulate: next fold wrote its temp state (= fold of b1 alone here,
-    // which is what the pre-crash fold of batch 0 produced), deleted the
-    // live state, crashed before the rename
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir + ".tmp-incagg")
-    assert(fs.rename(p, tmp), "test setup: rename into the crash window")
-    assert(!fs.exists(p) && fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-    // the next entry recovers, then folds b2 on top of the surviving b1 state
-    val got = IncrementalAgg.update(spark, dir, b2, spec, batchId = Some(1L))
-    assertSame(got, IncrementalAgg.partial(b1.union(b2), spec))
-    assert(IncrementalAgg.appliedBatchId(spark, dir) === 1L)
-    assert(!fs.exists(tmp), "recovered temp dir must be renamed away")
+    // every mutating filesystem step of a fold is a crash point; after
+    // the crash the next fold must hold what an uninterrupted one holds,
+    // and a reset must start fresh instead of reviving either version
+    val seed = java.nio.file.Files.createTempDirectory("incagg").toString
+    IncrementalAgg.update(spark, s"$seed/state", batch(20, 300), spec, batchId = Some(0L))
+    val b2 = batch(21, 200)
+    everyCrashPoint(seed, resetStartsFresh = true)(dir =>
+      IncrementalAgg.update(spark, s"$dir/state", b2, spec, batchId = Some(1L))
+    )(dir => (rows(s"$dir/state"), IncrementalAgg.appliedBatchId(spark, s"$dir/state")))
   }
 
   test("a crashed write-in-progress temp dir (no _SUCCESS) is not mistaken for state") {
-    // crash BEFORE the parquet commit: live state intact, temp dir is
-    // garbage — recovery must leave the live state alone and the next
-    // fold must overwrite the garbage
+    // crash early in the fold's staging write. The live state is
+    // intact; the next fold drops the staged garbage
     val base = java.nio.file.Files.createTempDirectory("incagg").toString
     val dir = s"$base/state"
     val b1 = batch(22, 300); val b2 = batch(23, 200)
     IncrementalAgg.update(spark, dir, b1, spec)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dir + ".tmp-incagg")
-    fs.mkdirs(tmp)
-    val junk = fs.create(new org.apache.hadoop.fs.Path(tmp, "part-00000.parquet.inprogress"), true)
-    try junk.write("junk".getBytes("UTF-8")) finally junk.close()
+    assert(graft.FaultFs.run(spark, base + "/", k = 3)(IncrementalAgg.update(spark, dir, b2, spec))._1)
+    assert(new java.io.File(dir + ".staging").exists())
+    assertSame(IncrementalAgg.read(spark, dir), IncrementalAgg.partial(b1, spec))
     val got = IncrementalAgg.update(spark, dir, b2, spec)
     assertSame(got, IncrementalAgg.partial(b1.union(b2), spec))
   }
@@ -124,67 +107,26 @@ class IncrementalAggSpec extends SparkSpec {
     assert(plan.contains("Relation") && plan.contains("parquet"))
   }
 
-  test("guardStateIdentity refuses to adopt over state resurrected from a stale temp dir") {
-    // the reset-resurrection hazard: a crash between the tmp write and
-    // the delete leaves a complete tmp BESIDE live state; the user then
-    // resets by deleting the state dir and sidecars (as the mismatch
-    // message instructs) but not the tmp — the next entry's recovery
-    // renames the stale tmp into place, and adopting the NEW identity
-    // over that resurrected old state would be silent corruption
+  test("guardStateIdentity after a crash and a reset adopts fresh state, never old rows") {
+    // a fold crashes after staging its new state; the user then resets
+    // as the mismatch message instructs. The staged copy must not come
+    // back under the new identity
     val base = java.nio.file.Files.createTempDirectory("incagg").toString
     val dir = s"$base/state"
     IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=A", "spec")
     IncrementalAgg.update(spark, dir, batch(30, 200), spec, batchId = Some(0L))
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir + ".tmp-incagg")
-    // stale complete tmp (rename gives it _SUCCESS + marker), then "reset"
-    assert(fs.rename(p, tmp), "test setup: stale complete tmp")
-    fs.delete(new org.apache.hadoop.fs.Path(dir + ".test-id"), false)
     val e = intercept[IllegalArgumentException] {
       IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=B", "spec")
     }
-    assert(e.getMessage.contains(".tmp-incagg") && e.getMessage.contains("resurrect"))
-    // the refusal fires BEFORE recovery touches the temp dir, so it is
-    // RETRY-SAFE: a supervisor re-running the job hits the same loud
-    // failure instead of finding recovered state that the pre-sidecar
-    // adoption branch would then silently bless (the r19 review fix —
-    // under the old order a single retry defeated the guard)
-    assert(!fs.exists(p), "refusal must not resurrect the state dir")
-    val e2 = intercept[IllegalArgumentException] {
-      IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=B", "spec")
-    }
-    assert(e2.getMessage.contains(".tmp-incagg"))
-    // the instructed full reset (tmp dir) then really starts fresh
-    fs.delete(tmp, true)
+    assert(e.getMessage.contains(s"every $dir.* sibling"))
+    val (crashed, _) = graft.FaultFs.run(spark, base + "/", k = 3)(
+      IncrementalAgg.update(spark, dir, batch(31, 200), spec, batchId = Some(1L)))
+    assert(crashed && new java.io.File(dir + ".staging").exists())
+    reset(base)
     IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=B", "spec")
-    IncrementalAgg.update(spark, dir, batch(31, 100), spec, batchId = Some(0L))
-  }
-
-  test("a dotted sibling DIRECTORY does not suppress the reset refusal") {
-    // a colocated non-sidecar artifact — a checkpoint dir at
-    // <state>.ckpt, a <state>.bak copy — is a DIRECTORY; only sidecar
-    // FILES count as "the reset never happened", else the stale tmp
-    // resurrects under exactly the cover the r19 review flagged
-    val base = java.nio.file.Files.createTempDirectory("incagg").toString
-    val dir = s"$base/state"
-    IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=A", "spec")
-    IncrementalAgg.update(spark, dir, batch(33, 200), spec, batchId = Some(0L))
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    assert(fs.rename(p, new org.apache.hadoop.fs.Path(dir + ".tmp-incagg")))
-    fs.delete(new org.apache.hadoop.fs.Path(dir + ".test-id"), false)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir + ".ckpt")) // the decoy
-    val e = intercept[IllegalArgumentException] {
-      IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=B", "spec")
-    }
-    assert(e.getMessage.contains("resurrect"))
-    // a surviving sidecar FILE (another guard's suffix) still means no
-    // reset happened, and recovery remains the right call
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir + ".other-id"), true)
-    try out.write("x".getBytes("UTF-8")) finally out.close()
-    IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=A", "spec")
-    assert(fs.exists(p), "recovery should complete under a surviving sidecar file")
+    assert(!new java.io.File(dir).exists())
+    val b = batch(32, 100)
+    assertSame(IncrementalAgg.update(spark, dir, b, spec, batchId = Some(0L)), IncrementalAgg.partial(b, spec))
   }
 
   test("foldStatePartitioned: keep-latest fold, read pruning, empty delta, watermark") {

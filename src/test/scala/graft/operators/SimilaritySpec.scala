@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.functions._
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends SparkSpec with graft.CrashPoints {
   import spark.implicits._
 
   private def emb = Seq(
@@ -290,30 +290,23 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("a crash inside the per-partition swap heals at the next fold entry") {
+    // a fold that re-ingests into bucket 1 and retires postings in
+    // buckets 2 and 3, crashed at each of its filesystem steps: the next
+    // fold (the same batch, replayed) must leave what an uninterrupted
+    // fold leaves — never a lost bucket, never a stale posting
     val all = bigEmb(40)
     val q = cents(all, 4)
-    val base = java.nio.file.Files.createTempDirectory("ivfc").toString
-    val state = s"$base/state"
-    Similarity.ivfFoldInto(spark, state,
-      all, "vec_id", "embedding", q, Some(0L), nBuckets = 8)
-    val expect = spark.read.parquet(state).select("id", "cluster")
-      .as[(Long, Long)].collect().sorted.toSeq
-    // fabricate the worst crash shape: bucket 3's stale dir deleted,
-    // its replacement still in a COMPLETE tmp slice, marker unwritten
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(state + ".tmp-incpart")
-    fs.mkdirs(tmp)
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(state, "pbucket=3"),
-      new org.apache.hadoop.fs.Path(tmp, "pbucket=3")))
-    val ok = fs.create(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"), true); ok.close()
-    assert(spark.read.parquet(state).filter($"id" % 8 === 3).count() == 0, "bucket gone")
-    // the next fold (a replayed batch id, even) heals before anything else
-    Similarity.ivfFoldInto(spark, state,
-      all.filter($"vec_id" === 0L), "vec_id", "embedding", q, Some(0L), nBuckets = 8)
-    assert(!fs.exists(tmp))
-    assert(spark.read.parquet(state).select("id", "cluster")
-      .as[(Long, Long)].collect().sorted.toSeq == expect)
+    val seed = java.nio.file.Files.createTempDirectory("ivfc").toString
+    Similarity.ivfFoldInto(spark, s"$seed/state", all.filter($"vec_id" < 32L), "vec_id", "embedding", q,
+      Some(0L), nBuckets = 8)
+    val batch = all.filter($"vec_id" === 9L || $"vec_id" === 33L)
+    val dels = Seq(10L, 11L).toDF("vec_id")
+    everyCrashPoint(seed)(dir =>
+      Similarity.ivfFoldInto(spark, s"$dir/state", batch, "vec_id", "embedding", q,
+        Some(1L), nBuckets = 8, deletes = Some(dels))
+    )(dir => (spark.read.parquet(s"$dir/state").select("id", "cluster", "pbucket")
+      .as[(Long, Long, Int)].collect().sorted.toSeq,
+      IncrementalAgg.appliedBatchId(spark, s"$dir/state")))
   }
 
   test("ivfReassign rotates the stored index onto a retrained quantizer without a corpus rescan") {

@@ -38,23 +38,6 @@ class UpsertSpec extends SparkSpec {
     assert(out.toSeq == Seq(("k", 1, "new")))
   }
 
-  test("mergeFullOuter coalesces per column, update side wins") {
-    val t = Seq(("k1", "a"), ("k2", "b")).toDF("id", "x")
-    val u = Seq(("k2", "B"), ("k3", "C")).toDF("id", "x")
-    val out = Upsert.mergeFullOuter(t, u, Seq("id"))
-      .as[(String, String)].collect().sortBy(_._1)
-    assert(out.toSeq == Seq(("k1", "a"), ("k2", "B"), ("k3", "C")))
-  }
-
-  test("mergeFullOuter: explicit NULL in the update overwrites the target value") {
-    val t = Seq(("k1", Some("a")), ("k2", Some("b"))).toDF("id", "x")
-    val u = Seq(("k2", None: Option[String])).toDF("id", "x")
-    val out = Upsert.mergeFullOuter(t, u, Seq("id"))
-      .as[(String, Option[String])].collect().sortBy(_._1)
-    // MERGE semantics: matched row takes ALL columns from the update, NULLs included
-    assert(out.toSeq == Seq(("k1", Some("a")), ("k2", None)))
-  }
-
   test("upsertIntoParquet bootstrap write dedups duplicate keys") {
     val dir = java.nio.file.Files.createTempDirectory("upsert").toString + "/tbl"
     val dup = Seq(("k1", 1, 2020, "old"), ("k1", 2, 2020, "new"), ("k2", 1, 2021, "x"))
@@ -151,40 +134,6 @@ class UpsertSpec extends SparkSpec {
       .as[(String, Int)].collect().sortBy(_._1).toSeq
     assert(table == Seq(("k1", 2021), ("k2", 2021), ("k3", 2022)))
     assert(keymap == table)
-  }
-
-  test("an existing keymap is maintained even by untracked batches") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert").toString + "/tbl"
-    val init = Seq(("k1", 1, 2020, "a")).toDF("id", "v", "yr", "payload")
-    Upsert.upsertIntoParquet(spark, dir, init, Seq("id"), "v", "yr") // builds keymap
-    // untracked insert of k2 must still reach the sidecar...
-    val ins = Seq(("k2", 1, 2021, "b")).toDF("id", "v", "yr", "payload")
-    Upsert.upsertIntoParquet(spark, dir, ins, Seq("id"), "v", "yr", trackPartitionMoves = false)
-    // ...so this tracked move of k2 finds and removes the 2021 copy
-    val mv = Seq(("k2", 2, 2022, "b2")).toDF("id", "v", "yr", "payload")
-    Upsert.upsertIntoParquet(spark, dir, mv, Seq("id"), "v", "yr")
-    val out = spark.read.parquet(dir).select("id", "v", "yr")
-      .as[(String, Int, Int)].collect().sortBy(_._1).toSeq
-    assert(out == Seq(("k1", 1, 2020), ("k2", 2, 2022)))
-  }
-
-  test("a leftover keymap tmp triggers a rebuild from the table") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert").toString + "/tbl"
-    val init = Seq(("k1", 1, 2020, "a"), ("k2", 1, 2021, "b")).toDF("id", "v", "yr", "payload")
-    Upsert.upsertIntoParquet(spark, dir, init, Seq("id"), "v", "yr")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    // simulate a crash between the data swap and the keymap swap:
-    // poison the keymap (k1 mapped to the wrong partition) + leftover tmp
-    Seq(("k1", 1999), ("k2", 2021)).toDF("id", "yr")
-      .write.mode("overwrite").partitionBy("yr").parquet(Upsert.keymapPath(dir))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(Upsert.keymapPath(dir) + ".tmp-upsert"))
-    // a move of k1 must still remove the 2020 copy (rebuilt map, not the poisoned one)
-    val mv = Seq(("k1", 2, 2021, "moved")).toDF("id", "v", "yr", "payload")
-    Upsert.upsertIntoParquet(spark, dir, mv, Seq("id"), "v", "yr")
-    val out = spark.read.parquet(dir).select("id", "v", "yr")
-      .as[(String, Int, Int)].collect().sortBy(_._1).toSeq
-    assert(out == Seq(("k1", 2, 2021), ("k2", 1, 2021)))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/yr=2020")))
   }
 
   test("upsertIntoParquet rewrites only touched partitions") {

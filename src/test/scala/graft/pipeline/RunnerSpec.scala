@@ -1,8 +1,10 @@
 package graft.pipeline
 
-import graft.SparkSpec
+import graft.{FaultFs, SparkSpec}
+import graft.core.Commit
 import graft.operators.SyncRepair
 import graft.sources.{ApiSimulator, Catalog}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline smoke (SURVEY.md §5.5): simulated API → landing
@@ -121,6 +123,32 @@ class RunnerSpec extends SparkSpec {
     assert(r.syncRepair("recovery1") == 1)
     assert(SyncRepair.diff(r.logsA.read(), r.logsB.read()).count() == 0)
     assert(spark.read.parquet(r.replicaB).count() == 100)
+  }
+
+  test("a crash at any step of replica B's upsert fails the run and never loses B's rows") {
+    val dir = java.nio.file.Files.createTempDirectory("runner").toString
+    val r = new Runner(spark, dir, epochStart = "2024-12-01", tablePrefix = "t8")
+    assert(r.run("run1", "2024-12-31", new ApiSimulator(totalRows = 60, pageSize = 30)) == "SUCCESS")
+    def rowsB = spark.read.parquet(r.replicaB).collect().map(_.toString).sorted.toSeq
+    val pre = rowsB
+    val snapshot = new java.io.File(dir + ".snapshot")
+    FileUtils.copyDirectory(new java.io.File(dir), snapshot)
+    // the INCREMENT re-reads the 60 rows and adds 30
+    val api = new ApiSimulator(totalRows = 90, pageSize = 30)
+    var status = ""
+    val (_, n) = FaultFs.run(spark, r.replicaB) { status = r.run("run2", "2025-01-05", api) }
+    val post = rowsB
+    assert(status == "SUCCESS" && post.size == 90 && n > 0)
+    (1 to n).foreach { k =>
+      FileUtils.deleteDirectory(new java.io.File(dir))
+      FileUtils.copyDirectory(snapshot, new java.io.File(dir))
+      status = ""
+      FaultFs.run(spark, r.replicaB, k) { status = r.run("run2", "2025-01-05", api) }
+      assert(status == "FAILED", s"crash at step $k of $n")
+      Commit.recover(spark, r.replicaB) // what the next entry into replica B runs first
+      val got = rowsB
+      assert(got == pre || got == post, s"crash at step $k of $n left ${got.size} rows")
+    }
   }
 
   test("ConfigMain drives a full run from a properties file") {

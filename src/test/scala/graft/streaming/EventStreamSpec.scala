@@ -268,20 +268,6 @@ class EventStreamSpec extends SparkSpec {
     assert(ids.toSeq == Seq(1L, 2L, 3L)) // event 1 exactly once
   }
 
-  test("streaming upsert sink maintains keep-latest table across micro-batches") {
-    val base = java.nio.file.Files.createTempDirectory("events").toString
-    writeEvents(s"$base/in")
-    val q = EventStream.upsertSink(
-      EventStream.readEvents(spark, s"$base/in", schema),
-      s"$base/table", s"$base/ckpt")
-    q.awaitTermination(60000)
-    val tbl = spark.read.parquet(s"$base/table")
-    assert(tbl.count() == 7) // one latest row per user
-    // the kept row per user is the max-ts event
-    val kept = tbl.select("user_id", "event_id").as[(Long, Long)].collect().toMap
-    assert(kept(0L) == 196L) // last event for user 0: id 196 (196 % 7 == 0)
-  }
-
   test("stream-static dim enrichment matches the batch join, shuffle-free") {
     import graft.operators.DateDim
     val dir = java.nio.file.Files.createTempDirectory("events").toString + "/in"
