@@ -40,9 +40,10 @@ object QueryProbe {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // optional session confs for probing variant arms, e.g.
-    // SPARK_GRAFT_PROBE_CONF="spark.graft.probe.tokshare=off"
-    sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(",").map(_.trim).filter(_.contains("="))
+    // optional session confs for probing variant arms, `;`-separated
+    // key=value entries (a value may contain commas), e.g.
+    // SPARK_GRAFT_PROBE_CONF="spark.sql.shuffle.partitions=8;spark.sql.adaptive.enabled=false"
+    sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(";").map(_.trim).filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
     spark.range(1000000).selectExpr("sum(id % 7)").collect()
 

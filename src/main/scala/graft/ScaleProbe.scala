@@ -33,7 +33,7 @@ object ScaleProbe {
     val state = s"$base/state"
 
     def files(): Map[String, Long] = {
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      val fs = graft.core.Commit.fs(spark, state)
       val it = fs.listFiles(new org.apache.hadoop.fs.Path(state), true)
       val out = scala.collection.mutable.Map[String, Long]()
       while (it.hasNext) {

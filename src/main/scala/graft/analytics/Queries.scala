@@ -1401,8 +1401,8 @@ object Queries {
       // oracle recomputes from scratch and the hash match proves
       // fold ≡ rebuild. The stored twin ([[Quantize.pqFoldInto]]:
       // bucket-partitioned state with write cost ∝ batch, crash-safe
-      // per-bucket commit, replay idempotence, `.pq-params`
-      // codebook-digest drift guard) and ADC serving equality off the
+      // per-bucket commit, replay idempotence, codebook-digest
+      // drift guard) and ADC serving equality off the
       // folded state are QuantizeSpec-pinned; s14 gates the serve
       // path itself.
       val base = Reliability.cut(

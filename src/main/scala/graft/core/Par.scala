@@ -68,8 +68,6 @@ object Par {
 
   def widen(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    // A/B kill-switch (measurement harness only; default on)
-    if (spark.conf.getOption("spark.graft.probe.widen").contains("off")) return df
     val target = spark.sparkContext.defaultParallelism
     val maxPartBytes = spark.sessionState.conf.filesMaxPartitionBytes
     // width estimate per leaf (r22: FILE-AWARE, not just bytes — the

@@ -66,59 +66,46 @@ object IncrementalAgg {
   def appliedBatchId(spark: SparkSession, statePath: String): Long =
     Commit.appliedBatch(spark, statePath)
 
-  /** The trimmed content of a small sidecar file, or None if absent —
-    * the one read idiom every identity guard shares. */
-  private[graft] def readSidecar(
-      fs: org.apache.hadoop.fs.FileSystem,
-      filePath: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(filePath)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      Some(try scala.io.Source.fromInputStream(in).mkString.trim finally in.close())
-    } else None
-  }
-
-  /** Sidecar identity guard (the qsFoldInto/quantileRollupSink misuse
-    * gates): a small text file NEXT to the state dir records how the
-    * state was built; a later fold with a different identity fails
-    * loudly instead of silently merging incompatible state. Fresh/empty
-    * state adopts (overwrites) the sidecar — a reset legitimately resets
-    * the identity; a pre-sidecar legacy state adopts on first contact —
-    * with a visible warning, since the first guarded fold over a
-    * pre-sidecar state is exactly the run where a configuration drift
-    * is most likely and the guard has nothing to compare against.
+  /** Identity guard of a stored fold (the qsFoldInto /
+    * quantileRollupSink misuse gates): the state's identity entry
+    * `entry` ([[graft.core.Commit.identity]]) records how the state was
+    * built; a later fold with a different identity fails loudly instead
+    * of silently merging incompatible state. Fresh/empty state adopts
+    * the identity — a reset legitimately resets it; a live state with
+    * no such entry adopts on first contact with a visible warning,
+    * since that first guarded fold is exactly the run where a
+    * configuration drift is most likely and the guard has nothing to
+    * compare against. Adopting is a commit with no targets, so the
+    * identity rolls forward after a crash like the rows do.
     *
-    * The guard first recovers the state's last commit
-    * ([[graft.core.Commit.recover]]), so an interrupted commit never
-    * reads as fresh state. A reset deletes the state dir and every
-    * `<state>.*` sibling — sidecars, commit record and staging dir — so
-    * nothing staged before it can come back. */
+    * The read recovers the state's last commit first, so an
+    * interrupted commit never reads as fresh state. A reset deletes the
+    * state dir and every `<state>.*` sibling — identity, commit record
+    * and staging dir — so nothing staged before it can come back. */
   private[graft] def guardStateIdentity(
       spark: SparkSession,
       statePath: String,
-      suffix: String,
+      entry: String,
       identity: String,
       who: String): Unit = {
-    Commit.recover(spark, statePath)
+    val stored = Commit.identity(spark, statePath).get(entry)
     val fs = Commit.fs(spark, statePath)
     val path = new org.apache.hadoop.fs.Path(statePath)
-    val f = new org.apache.hadoop.fs.Path(statePath + suffix)
     val stateLive = fs.exists(path) && fs.listStatus(path).nonEmpty
-    if (stateLive && fs.exists(f)) {
-      val stored = readSidecar(fs, statePath + suffix).getOrElse("")
-      require(stored == identity,
-        s"$who: stored state at $statePath was built with [$stored] but this run uses " +
+    if (stateLive && stored.isDefined)
+      require(stored.contains(identity),
+        s"$who: stored state at $statePath was built with [${stored.get}] but this run uses " +
           s"[$identity] — folding would silently corrupt the state. Delete $statePath and " +
-          s"every $statePath.* sibling (sidecars, commit record, staging dir) to start " +
+          s"every $statePath.* sibling (identity, commit record, staging dir) to start " +
           "fresh, or restore the matching configuration.")
-    } else {
+    else if (!stored.contains(identity)) {
       if (stateLive)
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"$who: adopting identity [$identity] over live pre-sidecar state at $statePath — " +
-            "the guard cannot verify this first fold's configuration matches the one that " +
-            "built the state; verify against a from-scratch recompute if in doubt.")
-      val out = fs.create(f, true)
-      try out.write(identity.getBytes("UTF-8")) finally out.close()
+          s"$who: adopting identity [$identity] over live state with no recorded $entry " +
+            s"identity at $statePath — the guard cannot verify this first fold's " +
+            "configuration matches the one that built the state; verify against a " +
+            "from-scratch recompute if in doubt.")
+      Commit.commit(spark, statePath, Nil, identity = Map(entry -> identity))
     }
   }
 

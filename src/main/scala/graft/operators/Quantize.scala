@@ -193,7 +193,7 @@ object Quantize {
     * `PqIndex(codebook, <state>, nSub, subDim)` serves ADC queries
     * via [[pqAdcTopKIndexed]] directly after any number of folds.
     *
-    * The `.pq-params` sidecar pins a content digest of the CODEBOOK
+    * The `params` identity pins a content digest of the CODEBOOK
     * (the quantizer of this family) plus the slicing geometry and the
     * bucket count: codes encoded against a drifted/retrained codebook,
     * or sliced differently, merge without any schema error into a
@@ -201,7 +201,8 @@ object Quantize {
     * time. Retraining the codebook requires a re-encode of the raw
     * corpus (codes, unlike IVF postings, do not carry their vectors —
     * that lossiness is the point of PQ), so the refusal's remedy is
-    * a rebuild: delete state + sidecars, re-fold. */
+    * a rebuild: delete the state and every `<state>.*` sibling,
+    * re-fold. */
   def pqFoldInto(
       spark: org.apache.spark.sql.SparkSession,
       statePath: String,
@@ -216,7 +217,7 @@ object Quantize {
       deletes: Option[DataFrame] = None): DataFrame = {
     require(nBuckets >= 1, "nBuckets >= 1")
     IncrementalAgg.guardStateIdentity(
-      spark, statePath, ".pq-params",
+      spark, statePath, "params",
       s"codebook=${codebookDigest(codebook)};id=$idCol;vec=$vecCol;" +
         s"nsub=$nSub;subdim=$subDim;buckets=$nBuckets",
       "pqFoldInto")

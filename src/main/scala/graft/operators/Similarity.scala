@@ -352,7 +352,7 @@ object Similarity {
     * tracking is needed ([[Upsert.upsertIntoParquet]]'s keymap
     * machinery exists to solve precisely the problem this layout
     * avoids). Cluster stays a data column, which the probe join
-    * filters on as before. `nBuckets` is pinned in the sidecar — two
+    * filters on as before. `nBuckets` is pinned in the identity — two
     * bucket counts scatter the same id to different partitions and
     * the keep-latest anti-join would stop seeing its older version.
     *
@@ -360,7 +360,7 @@ object Similarity {
     * same fold — see [[ivfAppend]]; their buckets count as touched
     * even when the batch contributes no rows there.
     *
-    * The `.ivf-params` sidecar pins a digest of the QUANTIZER
+    * The `params` identity pins a digest of the QUANTIZER
     * (content, not identity: cid + vector bytes, order-independent)
     * alongside the column names — the guard that matters here,
     * because postings assigned against a drifted or retrained
@@ -382,7 +382,7 @@ object Similarity {
       deletes: Option[DataFrame] = None): DataFrame = {
     require(nBuckets >= 1, "nBuckets >= 1")
     IncrementalAgg.guardStateIdentity(
-      spark, statePath, ".ivf-params",
+      spark, statePath, "params",
       s"quantizer=${centroidDigest(cents)};id=$idCol;vec=$vecCol;buckets=$nBuckets",
       "ivfFoldInto")
     // cached: the delete frame is read by the bucket collect AND the
@@ -410,18 +410,17 @@ object Similarity {
     * posting table recomputes `cluster` against `newCents`, the new
     * state replaces the old one whole through [[graft.core.Commit]]
     * (same bucket layout — buckets key on id, which doesn't change),
-    * and the `.ivf-params` sidecar rotates to the new quantizer's
-    * digest LAST. The applied-batch watermark is carried by the commit:
+    * and the `params` identity rotates to the new quantizer's digest
+    * in the same commit. The applied-batch watermark is carried by it:
     * reassignment is not a batch, and the fold sequence resumes where
     * it left off. Reassign-from-state equals a fresh
     * [[prepareIvfIndexWith]] over the same corpus exactly (the
     * assignment is a pure per-row function of vec and quantizer) —
     * the spec-pinned contract.
     *
-    * Crash anywhere: re-run `ivfReassign` — it is idempotent. A crash
-    * after the commit but before the sidecar rotation leaves folds
-    * refusing loudly (stored digest ≠ new quantizer's) until the re-run
-    * rotates it. The raw corpus is never rescanned. */
+    * Crash anywhere: the postings and the identity roll forward or
+    * back together, and a re-run is idempotent. The raw corpus is never
+    * rescanned. */
   def ivfReassign(
       spark: org.apache.spark.sql.SparkSession,
       statePath: String,
@@ -429,10 +428,9 @@ object Similarity {
       idCol: String,
       vecCol: String,
       nBuckets: Int = 64): DataFrame = {
-    graft.core.Commit.recover(spark, statePath)
+    val stored = graft.core.Commit.identity(spark, statePath).get("params")
     val fs = graft.core.Commit.fs(spark, statePath)
     val tail = s";id=$idCol;vec=$vecCol;buckets=$nBuckets"
-    val stored = IncrementalAgg.readSidecar(fs, statePath + ".ivf-params")
     require(stored.forall(_.endsWith(tail)),
       s"ivfReassign: stored state at $statePath was built with [${stored.getOrElse("")}] " +
         s"but this reassign uses [...$tail] — id/vec/bucket layout must match; only the " +
@@ -442,21 +440,17 @@ object Similarity {
       s"ivfReassign: no state at $statePath — nothing to reassign")
     if (stored.isEmpty)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"ivfReassign: no .ivf-params sidecar claims the state at $statePath — " +
+        s"ivfReassign: no params identity claims the state at $statePath — " +
           "reassigning a never-guarded state adopts the new quantizer's identity; " +
           "verify against a from-scratch rebuild if in doubt.")
-    def rotateSidecar(): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(statePath + ".ivf-params"), true)
-      try out.write(
-        s"quantizer=${centroidDigest(newCents)}$tail".getBytes("UTF-8")) finally out.close()
-    }
+    val rotated = Map("params" -> s"quantizer=${centroidDigest(newCents)}$tail")
     if (!IncrementalAgg.stateHasData(fs, statePath)) {
       // an all-retired index (dir + marker + identity, no partition
       // dirs — the legitimate empty shape): there are no postings to
       // re-assign, but the identity must still rotate or every future
       // fold against the new quantizer keeps refusing on the old
       // digest. Marker and dir are untouched; return the empty state.
-      rotateSidecar()
+      graft.core.Commit.commit(spark, statePath, Nil, identity = rotated)
       import org.apache.spark.sql.types._
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -475,10 +469,7 @@ object Similarity {
     next.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("pbucket").parquet(graft.core.Commit.staged(statePath, statePath))
     graft.core.Commit.commit(spark, statePath,
-      Seq(graft.core.Commit.Target(statePath, None)), Some(applied).filter(_ >= 0L))
-    // rotate the identity last: until this write, folds refuse loudly
-    // rather than merge old-cell postings into the new geometry
-    rotateSidecar()
+      Seq(graft.core.Commit.Target(statePath, None)), Some(applied).filter(_ >= 0L), rotated)
     IncrementalAgg.read(spark, statePath)
   }
 
@@ -492,7 +483,7 @@ object Similarity {
     * Deliberately NOT memoized per DataFrame instance: a plan over a
     * re-evaluating source (a JDBC relation, a refreshed table) can
     * return different rows from the same instance, and a cached digest
-    * would keep matching the sidecar while the assignment pass reads
+    * would keep matching the identity while the assignment pass reads
     * the DRIFTED rows — the exact silent mixing the guard exists to
     * refuse. The collect is bounded (nCentroids rows) and the
     * quantizer is broadcast-collected on every assignment pass

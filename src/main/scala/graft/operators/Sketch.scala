@@ -238,9 +238,9 @@ object Sketch {
     * Streaming entry: [[graft.streaming.EventStream
     * .distinctRollupSink]].
     *
-    * Sketch-identity guard (the `.qs-params` convention): the first
-    * fold records (k, seed, group, elem) in a `.kmv-params` sidecar;
-    * later folds must match — two minima tables built with different
+    * Sketch-identity guard (the [[qsFoldInto]] convention): the first
+    * fold records (k, seed, group, elem) as the state's `params`
+    * identity; later folds must match — two minima tables built with different
     * seeds merge without an analysis error but estimate nothing. */
   def kmvFoldInto(
       spark: org.apache.spark.sql.SparkSession,
@@ -252,7 +252,7 @@ object Sketch {
       k: Int,
       batchId: Option[Long] = None): DataFrame = {
     IncrementalAgg.guardStateIdentity(
-      spark, statePath, ".kmv-params",
+      spark, statePath, "params",
       s"k=$k;seed=$seed;group=$groupCol;elem=$elemCol", "kmvFoldInto")
     IncrementalAgg.foldState(
       spark, statePath,
@@ -346,7 +346,7 @@ object Sketch {
     * exact counts. Streaming entry: [[graft.streaming.EventStream
     * .heavyHitterRollupSink]].
     *
-    * The `.mg-params` sidecar pins (capacity, token column): folding
+    * The `params` identity pins (capacity, token column): folding
     * a sketch built with a different capacity would silently weaken
     * the bound the state's readers assume. */
   def mgFoldInto(
@@ -357,7 +357,7 @@ object Sketch {
       capacity: Int,
       batchId: Option[Long] = None): DataFrame = {
     IncrementalAgg.guardStateIdentity(
-      spark, statePath, ".mg-params",
+      spark, statePath, "params",
       s"capacity=$capacity;token=$tokenCol", "mgFoldInto")
     IncrementalAgg.foldState(
       spark, statePath,
@@ -417,7 +417,7 @@ object Sketch {
     * batch scan + a bounded re-aggregation. Streaming entry:
     * [[graft.streaming.EventStream.frequencyRollupSink]].
     *
-    * The `.cms-params` sidecar pins (depth, width, token column) —
+    * The `params` identity pins (depth, width, token column) —
     * THE guard [[cmsEstimate]]'s scaladoc asks the caller to carry:
     * two counter tables with different widths merge without an
     * analysis error (same 3-column shape) into a table that
@@ -433,7 +433,7 @@ object Sketch {
       width: Int,
       batchId: Option[Long] = None): DataFrame = {
     IncrementalAgg.guardStateIdentity(
-      spark, statePath, ".cms-params",
+      spark, statePath, "params",
       s"depth=$depth;width=$width;token=$tokenCol", "cmsFoldInto")
     IncrementalAgg.foldState(
       spark, statePath,
@@ -748,7 +748,8 @@ object Sketch {
     * .quantileRollupSink]].
     *
     * Sketch-identity guard: the first fold records (k, seed, salts,
-    * groupCol) in a `.qs-params` sidecar next to the state dir; every
+    * groupCol) as the state's `params` identity
+    * ([[graft.core.Commit.identity]]); every
     * later fold must match, because [[requireSummary]] only checks the
     * row SHAPE — two summaries built with different k or seed merge
     * without an analysis error but the rank-error bound no longer
@@ -767,7 +768,7 @@ object Sketch {
       single: Boolean = false,
       batchId: Option[Long] = None): DataFrame = {
     IncrementalAgg.guardStateIdentity(
-      spark, statePath, ".qs-params",
+      spark, statePath, "params",
       s"k=$k;seed=$seed;salts=$salts;group=$groupCol", "qsFoldInto")
     IncrementalAgg.foldState(
       spark, statePath,

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.core.Commit
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -18,11 +19,13 @@ import org.apache.spark.sql.functions._
   * metadata pass, same as any table-format OPTIMIZE); the rewrite is
   * ONE Spark job that reads ONLY candidate directories
   * (partition-pruned via `basePath`), salts rows so each partition
-  * lands in ~ceil(bytes/target) shuffle groups, writes to a temp root,
-  * and atomically swaps each candidate directory. Non-candidate
-  * partitions are never read or touched. Readers that raced the swap
-  * re-list on retry; landing-zone consumers are replay-driven
-  * (load_date-scoped), so the swap window is benign there.
+  * lands in ~ceil(bytes/target) shuffle groups, writes to the staging
+  * dir, and replaces the candidate directories in one
+  * [[graft.core.Commit]], so a crash at any step rolls forward on the
+  * next call and never loses a partition. Non-candidate partitions are
+  * never read or touched. Readers that raced the apply re-list on
+  * retry; landing-zone consumers are replay-driven (load_date-scoped),
+  * so that window is benign there.
   */
 object Compact {
 
@@ -49,7 +52,8 @@ object Compact {
       targetBytes: Long,
       minFiles: Int = 2): Seq[PartStats] = {
     require(targetBytes > 0 && minFiles >= 2, "targetBytes > 0, minFiles >= 2")
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    Commit.recover(spark, root)
+    val fs = Commit.fs(spark, root)
     val rootPath = fs.makeQualified(new Path(root))
     val candidates = leafDirs(fs, rootPath)
       .map { d =>
@@ -72,7 +76,7 @@ object Compact {
     // The schema is declared (raw crime fields + STRING partition cols)
     // so partition-type inference can't rewrite dir names on the way
     // back out (month=07 inferred as int would re-land as month=7 and
-    // strand the swap).
+    // strand the commit).
     val partCols = Seq("year", "month", "load_date")
     val data = spark.read
       .schema(partCols.foldLeft(graft.core.Schemas.rawCrime)(
@@ -82,7 +86,6 @@ object Compact {
     val withPart = data.withColumn(
       "__part",
       concat_ws("/", partCols.map(c => concat(lit(c + "="), col(c).cast("string"))): _*))
-    val tmpRoot = new Path(rootPath.toString + ".tmp-compact")
     withPart
       .join(broadcast(groupsDf), Seq("__part"))
       .withColumn("__salt", pmod(xxhash64(data.columns.map(col): _*), col("__k")))
@@ -91,20 +94,15 @@ object Compact {
       .write.mode("overwrite")
       .partitionBy(partCols: _*)
       .option("compression", "gzip")
-      .json(tmpRoot.toString)
+      .json(Commit.staged(root, root))
 
-    val stats = candidates.map { case (d, nBefore, bytes) =>
-      val src = new Path(tmpRoot, rel(d))
-      if (!fs.exists(src))
-        throw new java.io.IOException(s"compaction produced no output for ${rel(d)}")
-      if (!fs.delete(d, true))
-        throw new java.io.IOException(s"compaction swap: failed to delete stale $d")
-      if (!fs.rename(src, d))
-        throw new java.io.IOException(s"compaction swap: failed to rename $src -> $d")
-      val nAfter = fs.listStatus(d).count(s => s.isFile && isDataFile(s.getPath))
-      PartStats(rel(d), nBefore, nAfter, bytes)
+    // a candidate without staged output would commit as a drop
+    candidates.find(c => !fs.exists(new Path(Commit.staged(root, root), rel(c._1)))).foreach { c =>
+      throw new java.io.IOException(s"compaction produced no output for ${rel(c._1)}")
     }
-    fs.delete(tmpRoot, true)
-    stats
+    Commit.commit(spark, root, Seq(Commit.Target(root, Some(candidates.map(c => rel(c._1))))))
+    candidates.map { case (d, nBefore, bytes) =>
+      PartStats(rel(d), nBefore, fs.listStatus(d).count(s => s.isFile && isDataFile(s.getPath)), bytes)
+    }
   }
 }

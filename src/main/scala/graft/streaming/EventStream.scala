@@ -384,11 +384,11 @@ object EventStream {
     * numbered the batches: `foreachBatch` batchIds are scoped to
     * `checkpointDir`, so pointing a FRESH checkpoint at an existing
     * state would restart ids at 0 and silently skip every micro-batch
-    * as a "replay" until the new ids pass the stored watermark. A
-    * `.stream-identity` sidecar next to the state dir records the
-    * checkpoint the state is paired with, and a mismatch fails loudly
-    * at start — statePath and checkpointDir live and die as a pair
-    * (delete both to start over).
+    * as a "replay" until the new ids pass the stored watermark. The
+    * state's `stream` identity ([[graft.core.Commit.identity]]) records
+    * the checkpoint the state is paired with, and a mismatch fails
+    * loudly at start — statePath and checkpointDir live and die as a
+    * pair (delete both to start over).
     *
     * The identity records the checkpoint's unique QUERY ID (the `id`
     * field Spark mints into `checkpointDir/metadata` at checkpoint
@@ -398,11 +398,8 @@ object EventStream {
     * watermark silently skipped every new micro-batch as a replay.
     * When the metadata file does not exist yet (first start) the id is
     * pre-minted here in the same JSON shape; Spark adopts an existing
-    * metadata file verbatim, so the id the sidecar records is the id
-    * the query runs under. A legacy path-only sidecar (written before
-    * the id was part of the identity) upgrades in place — with a
-    * warning, since a same-path checkpoint recreation during the
-    * legacy window is exactly what the old identity could not see. */
+    * metadata file verbatim, so the id the identity records is the id
+    * the query runs under. */
   def quantileRollupSink(
       events: DataFrame,
       statePath: String,
@@ -412,97 +409,70 @@ object EventStream {
       k: Int,
       seed: Int,
       salts: Int = 8,
-      single: Boolean = false): StreamingQuery = {
-    val spark = events.sparkSession
-    guardStreamIdentity(spark, statePath, checkpointDir, "quantileRollupSink")
-    events.writeStream
+      single: Boolean = false): StreamingQuery =
+    foldSink(events, statePath, checkpointDir, "quantileRollupSink") { (batch, batchId) =>
+      // no emptiness probe: that's a full extra job per micro-batch;
+      // an empty delta folds to the identity on state VALUES anyway
+      graft.operators.Sketch.qsFoldInto(
+        batch.sparkSession, statePath, batch,
+        valueCol, groupCol, k, seed, salts, single, Some(batchId))
+    }
+
+  /** The shape every stored-fold sink shares: guard the
+    * state/checkpoint pairing ([[guardStreamIdentity]]), then run
+    * `fold` on each micro-batch with its id until the input is drained
+    * (`AvailableNow`). */
+  private def foldSink(input: DataFrame, statePath: String, checkpointDir: String, who: String)(
+      fold: (DataFrame, Long) => Unit): StreamingQuery = {
+    guardStreamIdentity(input.sparkSession, statePath, checkpointDir, who)
+    input.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // no emptiness probe: that's a full extra job per micro-batch;
-        // an empty delta folds to the identity on state VALUES anyway
-        graft.operators.Sketch.qsFoldInto(
-          batch.sparkSession, statePath, batch,
-          valueCol, groupCol, k, seed, salts, single, Some(batchId))
-        ()
-      }
+      .foreachBatch(fold)
       .trigger(Trigger.AvailableNow())
       .start()
   }
 
   /** The state/checkpoint pairing guard shared by every stored-fold
-    * sink ([[quantileRollupSink]], [[distinctRollupSink]],
-    * [[heavyHitterRollupSink]], [[frequencyRollupSink]]): qualifies
-    * the checkpoint, builds the `checkpoint=<uri> id=<query-id>`
-    * identity, upgrades a legacy path-only sidecar in place, and
-    * hands the identity to [[graft.operators.IncrementalAgg
-    * .guardStateIdentity]] — see quantileRollupSink's scaladoc for
-    * the full hazard analysis the identity encodes. */
+    * sink (through [[foldSink]]): qualifies the checkpoint, builds the
+    * `checkpoint=<uri> id=<query-id>` identity and hands it to
+    * [[graft.operators.IncrementalAgg.guardStateIdentity]] as the
+    * state's `stream` entry — see quantileRollupSink's scaladoc for the
+    * full hazard analysis the identity encodes. The read refuses a
+    * state whose identity is still in an older release's sidecar
+    * format before [[checkpointQueryId]] can mint anything, so that
+    * refusal repeats on every retry until the reset it names. */
   private def guardStreamIdentity(
       spark: SparkSession,
       statePath: String,
       checkpointDir: String,
       who: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(checkpointDir).getFileSystem(conf)
+    val fs = new org.apache.hadoop.fs.Path(checkpointDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ckptPath = fs.makeQualified(new org.apache.hadoop.fs.Path(checkpointDir))
     val ckptUri = ckptPath.toUri.toString
-    val legacy = s"checkpoint=$ckptUri"
-    val sidecar = new org.apache.hadoop.fs.Path(statePath + ".stream-identity")
-    val stateFs = new org.apache.hadoop.fs.Path(statePath).getFileSystem(conf)
-    val stored = graft.operators.IncrementalAgg.readSidecar(stateFs, statePath + ".stream-identity")
-    // The pair-mismatch hazard is symmetric: a FRESH state (no sidecar)
-    // against a checkpoint that already COMMITTED batches would adopt
-    // silently — and stay permanently missing every micro-batch those
-    // commits cover (the source never re-reads committed offsets). The
-    // sidecar is written before .start() on the first guarded run, and
-    // commits only appear after batches run, so this shape can only
-    // mean the state (or its sidecars) was deleted out from under a
-    // live checkpoint. Commits — not metadata — are the signal: a
-    // first start that crashed after minting metadata but before the
-    // sidecar write committed nothing, and must be free to retry.
+    val stored = graft.core.Commit.identity(spark, statePath).get("stream")
+    // The pair-mismatch hazard is symmetric: a FRESH state (no stream
+    // identity) against a checkpoint that already COMMITTED batches
+    // would adopt silently — and stay permanently missing every
+    // micro-batch those commits cover (the source never re-reads
+    // committed offsets). The identity is committed before .start() on
+    // the first guarded run, and commits only appear after batches
+    // run, so this shape can only mean the state (or its identity) was
+    // deleted out from under a live checkpoint. Commits — not
+    // metadata — are the signal: a first start that crashed after
+    // minting metadata but before the identity commit committed
+    // nothing, and must be free to retry.
     val commitsDir = new org.apache.hadoop.fs.Path(ckptPath, "commits")
     require(!(stored.isEmpty && fs.exists(commitsDir) &&
         fs.listStatus(commitsDir).exists(st => !st.getPath.getName.startsWith("."))),
-      s"$who: no .stream-identity sidecar claims the state at $statePath, but the " +
+      s"$who: no stream identity claims the state at $statePath, but the " +
         s"checkpoint at $ckptUri has already committed batches — pairing a fresh state " +
         "with a spent checkpoint would silently lose every micro-batch those commits " +
         "cover (committed offsets are never re-read). Delete the checkpoint dir too to " +
-        "rebuild from the source, or restore the state and sidecars this checkpoint " +
+        "rebuild from the source, or restore the state and identity this checkpoint " +
         "was paired with.")
-    // Legacy-sidecar upgrade gate, checked BEFORE checkpointQueryId
-    // may mint a metadata file (refuse-before-mint keeps the refusal
-    // retry-safe — minting first would hand the retry a "pre-existing"
-    // id this same guard created): a legacy path-only sidecar was
-    // necessarily written by a running query, so its checkpoint had
-    // metadata; an absent file means the checkpoint was deleted and
-    // recreated at the same path — batch ids restart at 0 and the
-    // stored applied-batch watermark would silently skip every
-    // micro-batch as a replay. That recreation IS detectable at
-    // upgrade time (the r19 review fix: the original upgrade blessed
-    // it with only a warning).
-    require(!(stored.contains(legacy) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(ckptPath, "metadata"))),
-      s"$who: the sidecar at $sidecar is the legacy path-only identity for this " +
-        "checkpoint, but the checkpoint has no metadata — it was deleted and recreated " +
-        "at the same path, so batch ids restart at 0 and the stored applied-batch " +
-        "watermark would silently skip every micro-batch as a replay. Delete the state " +
-        "dir and its sidecars to rebuild, or restore the original checkpoint.")
-    val identity = s"$legacy id=${checkpointQueryId(fs, ckptPath)}"
-    if (stored.contains(legacy)) {
-      // one-time migration to the id-bearing form: path matching is
-      // all the old contract promised. Warn, because a same-path
-      // recreation EARLIER in the legacy window is undetectable.
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"$who: upgrading legacy path-only stream identity for $statePath " +
-          s"to [$identity]; if the checkpoint dir was ever deleted and recreated at this " +
-          "path before the upgrade, the stored applied-batch watermark may not match its " +
-          "batch numbering — verify the state against a batch recompute if in doubt.")
-      val out = stateFs.create(sidecar, true)
-      try out.write(identity.getBytes("UTF-8")) finally out.close()
-    }
     graft.operators.IncrementalAgg.guardStateIdentity(
-      spark, statePath, ".stream-identity", identity, who)
+      spark, statePath, "stream", s"checkpoint=$ckptUri id=${checkpointQueryId(fs, ckptPath)}", who)
   }
 
   /** The unique query id of the checkpoint at `ckptPath` — read from
@@ -537,7 +507,7 @@ object EventStream {
     * table at `statePath` via [[graft.operators.Sketch.kmvFoldInto]].
     * Exactly-once from the same two layers (file-source checkpoint +
     * the applied-batch watermark committed atomically with the
-    * state), under the same `.stream-identity` pairing guard — see
+    * state), under the same `stream` identity pairing guard — see
     * [[quantileRollupSink]]'s scaladoc for the hazard analysis; both
     * sinks share [[guardStreamIdentity]]. State stays ≤ k rows per
     * group forever; each micro-batch costs one batch k-minima pass +
@@ -556,20 +526,12 @@ object EventStream {
       elemCol: String,
       groupCol: String,
       seed: Int,
-      k: Int): StreamingQuery = {
-    guardStreamIdentity(events.sparkSession, statePath, checkpointDir, "distinctRollupSink")
-    events.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Sketch.kmvFoldInto(
-          batch.sparkSession, statePath, batch,
-          elemCol, groupCol, seed, k, Some(batchId))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      k: Int): StreamingQuery =
+    foldSink(events, statePath, checkpointDir, "distinctRollupSink") { (batch, batchId) =>
+      graft.operators.Sketch.kmvFoldInto(
+        batch.sparkSession, statePath, batch,
+        elemCol, groupCol, seed, k, Some(batchId))
+    }
 
   /** Maintained STORED heavy-hitter state fed by a stream —
     * [[graft.operators.Sketch.mgFoldInto]] driven from `foreachBatch`
@@ -586,19 +548,11 @@ object EventStream {
       statePath: String,
       checkpointDir: String,
       tokenCol: String,
-      capacity: Int): StreamingQuery = {
-    guardStreamIdentity(events.sparkSession, statePath, checkpointDir, "heavyHitterRollupSink")
-    events.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Sketch.mgFoldInto(
-          batch.sparkSession, statePath, batch, tokenCol, capacity, Some(batchId))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      capacity: Int): StreamingQuery =
+    foldSink(events, statePath, checkpointDir, "heavyHitterRollupSink") { (batch, batchId) =>
+      graft.operators.Sketch.mgFoldInto(
+        batch.sparkSession, statePath, batch, tokenCol, capacity, Some(batchId))
+    }
 
   /** Maintained STORED point-frequency state fed by a stream —
     * [[graft.operators.Sketch.cmsFoldInto]] driven from
@@ -607,27 +561,19 @@ object EventStream {
     * counter table after ANY crash/restart sequence is bit-identical
     * to the whole-stream [[graft.operators.Sketch.cmsSketch]] build
     * (spec-gated), and [[graft.operators.Sketch.cmsEstimate]] serves
-    * probes off it directly — the `.cms-params` sidecar carries the
-    * (depth, width) the estimator's contract needs. */
+    * probes off it directly — the fold's `params` identity carries
+    * the (depth, width) the estimator's contract needs. */
   def frequencyRollupSink(
       events: DataFrame,
       statePath: String,
       checkpointDir: String,
       tokenCol: String,
       depth: Int,
-      width: Int): StreamingQuery = {
-    guardStreamIdentity(events.sparkSession, statePath, checkpointDir, "frequencyRollupSink")
-    events.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Sketch.cmsFoldInto(
-          batch.sparkSession, statePath, batch, tokenCol, depth, width, Some(batchId))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      width: Int): StreamingQuery =
+    foldSink(events, statePath, checkpointDir, "frequencyRollupSink") { (batch, batchId) =>
+      graft.operators.Sketch.cmsFoldInto(
+        batch.sparkSession, statePath, batch, tokenCol, depth, width, Some(batchId))
+    }
 
   /** Maintained STORED ANN inverted file fed by a stream — the
     * streaming-sink row for the INDEX family, completing the matrix
@@ -635,8 +581,8 @@ object EventStream {
     * (id, vector) rows assigns against the FROZEN quantizer and folds
     * its postings via [[graft.operators.Similarity.ivfFoldInto]] —
     * bucket-partitioned state (write I/O ∝ micro-batch, never
-    * corpus), applied-batch watermark, `.ivf-params` quantizer-digest
-    * drift guard — under the shared [[guardStreamIdentity]]
+    * corpus), applied-batch watermark, quantizer-digest drift guard —
+    * under the shared [[guardStreamIdentity]]
     * state/checkpoint pairing guard (see [[quantileRollupSink]]'s
     * scaladoc for the hazard analysis). Assignment is deterministic
     * and the fold idempotent, so the stored index after ANY
@@ -650,27 +596,19 @@ object EventStream {
       idCol: String,
       vecCol: String,
       cents: DataFrame,
-      nBuckets: Int = 64): StreamingQuery = {
-    guardStreamIdentity(vectors.sparkSession, statePath, checkpointDir, "ivfRollupSink")
-    vectors.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity.ivfFoldInto(
-          batch.sparkSession, statePath, batch, idCol, vecCol, cents,
-          Some(batchId), nBuckets)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      nBuckets: Int = 64): StreamingQuery =
+    foldSink(vectors, statePath, checkpointDir, "ivfRollupSink") { (batch, batchId) =>
+      graft.operators.Similarity.ivfFoldInto(
+        batch.sparkSession, statePath, batch, idCol, vecCol, cents,
+        Some(batchId), nBuckets)
+    }
 
   /** Maintained STORED PQ encoded corpus fed by a stream — the PQ
     * sibling of [[ivfRollupSink]], completing the streaming-sink
     * matrix for BOTH maintained-index families: every micro-batch
     * encodes against the FROZEN codebook and folds its (cand_id, sub,
     * code) rows via [[graft.operators.Quantize.pqFoldInto]]
-    * (bucket-partitioned state, applied-batch watermark, `.pq-params`
+    * (bucket-partitioned state, applied-batch watermark,
     * codebook-digest guard) under the shared [[guardStreamIdentity]]
     * pairing guard. Encoding is deterministic, so the stored codes
     * after any crash/restart sequence are bit-identical to the clean
@@ -686,18 +624,10 @@ object EventStream {
       codebook: DataFrame,
       nSub: Int,
       subDim: Int,
-      nBuckets: Int = 64): StreamingQuery = {
-    guardStreamIdentity(vectors.sparkSession, statePath, checkpointDir, "pqRollupSink")
-    vectors.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Quantize.pqFoldInto(
-          batch.sparkSession, statePath, batch, idCol, vecCol, codebook,
-          nSub, subDim, Some(batchId), nBuckets)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      nBuckets: Int = 64): StreamingQuery =
+    foldSink(vectors, statePath, checkpointDir, "pqRollupSink") { (batch, batchId) =>
+      graft.operators.Quantize.pqFoldInto(
+        batch.sparkSession, statePath, batch, idCol, vecCol, codebook,
+        nSub, subDim, Some(batchId), nBuckets)
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.core.Schemas
 import graft.operators.{IncrementalAgg, Transform, Upsert}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -25,7 +25,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object StreamingRunner {
 
   /** Landing-zone stream: schema'd gz-JSON with partition columns. */
-  def readLanding(spark: SparkSession, landingRoot: String): org.apache.spark.sql.DataFrame =
+  def readLanding(spark: SparkSession, landingRoot: String): DataFrame =
     spark.readStream
       .schema(Schemas.rawCrime
         .add("year", org.apache.spark.sql.types.StringType)
@@ -36,22 +36,11 @@ object StreamingRunner {
 
   /** Transform + upsert every micro-batch into the replica. */
   def run(spark: SparkSession, landingRoot: String, replicaPath: String, checkpointDir: String): StreamingQuery =
-    readLanding(spark, landingRoot)
-      .drop("year", "month", "load_date")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val typed = Transform.crimeRecords(batch)
-            .withColumn("occ_year", year(col("date_of_occurrence")))
-          Upsert.upsertIntoParquet(
-            batch.sparkSession, replicaPath, typed,
-            keyCols = Seq("crime_id"), versionCol = "source_updated_on", partitionCol = "occ_year")
-          ()
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    foreachTyped(spark, landingRoot, checkpointDir) { (typed, _) =>
+      Upsert.upsertIntoParquet(
+        typed.sparkSession, replicaPath, typed,
+        keyCols = Seq("crime_id"), versionCol = "source_updated_on", partitionCol = "occ_year")
+    }
 
   /** Streaming materialized view: the same [[IncrementalAgg]] state the
     * batch path maintains, fed by micro-batches — per-ward crime counts
@@ -66,17 +55,22 @@ object StreamingRunner {
       statePath: String,
       checkpointDir: String,
       spec: IncrementalAgg.Spec): StreamingQuery =
+    foreachTyped(spark, landingRoot, checkpointDir) { (typed, batchId) =>
+      IncrementalAgg.update(typed.sparkSession, statePath, typed, spec, Some(batchId))
+    }
+
+  /** Drain the landing zone, handing each non-empty micro-batch to
+    * `sink` as typed records with their `occ_year` partition column,
+    * together with the batch id. */
+  private def foreachTyped(spark: SparkSession, landingRoot: String, checkpointDir: String)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
     readLanding(spark, landingRoot)
       .drop("year", "month", "load_date")
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val typed = Transform.crimeRecords(batch)
-            .withColumn("occ_year", year(col("date_of_occurrence")))
-          IncrementalAgg.update(batch.sparkSession, statePath, typed, spec, Some(batchId))
-          ()
-        }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty)
+          sink(Transform.crimeRecords(batch).withColumn("occ_year", year(col("date_of_occurrence"))), batchId)
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -48,7 +48,7 @@ object FaultFs {
   /** Run `body` with this filesystem serving `file:` paths, counting
     * the mutating calls on absolute paths starting with `pathPrefix`;
     * from call `k` on they throw. Returns whether `body` threw, and the
-    * number of calls it made. */
+    * number of calls it made: it crashed iff that number is `>= k`. */
   def run(spark: SparkSession, pathPrefix: String, k: Int = Int.MaxValue)(body: => Any): (Boolean, Int) = {
     val conf = spark.sparkContext.hadoopConfiguration
     val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache") // the cached instance is a plain one
@@ -72,6 +72,20 @@ object FaultFs {
       spark.sparkContext.setLogLevel("ERROR")
     }
   }
+
+  /** Crash an operation at each of its steps: `attempt(k)` runs it once
+    * with [[run]]'s fault armed at step k and returns the number of
+    * calls that run made. Steps k = 1, 2, … are tried until a run
+    * finishes before reaching its step k. One operation's call count
+    * differs between runs (rows reach Spark's tasks in a different
+    * order, so the tasks write different numbers of files), so the
+    * steps are counted on the runs themselves, not on one clean run.
+    * Returns the number of crashed steps. */
+  def eachStep(attempt: Int => Int): Int = {
+    val crashed = Iterator.from(1).takeWhile(k => attempt(k) >= k).size
+    assert(crashed > 0, "no step crashed")
+    crashed
+  }
 }
 
 /** The crash-point harness over [[FaultFs]]; the state under test lives
@@ -87,10 +101,11 @@ trait CrashPoints { this: SparkSpec =>
       .foreach(FileUtils.forceDelete)
 
   /** Crash `call(dir)` at each of its mutating steps on a copy of
-    * `seed`, then re-run it and compare `snapshot` with what an
-    * uninterrupted call leaves. With `resetStartsFresh`, a copy of each
-    * crashed dir is also reset, and the call on it must leave what it
-    * leaves on an empty dir. Returns the step count. */
+    * `seed` ([[FaultFs.eachStep]]), then re-run it and compare
+    * `snapshot` with what an uninterrupted call leaves. With
+    * `resetStartsFresh`, a copy of each crashed dir is also reset, and
+    * the call on it must leave what it leaves on an empty dir. Returns
+    * the number of crashed steps. */
   def everyCrashPoint(seed: String, resetStartsFresh: Boolean = false)(
       call: String => Any)(snapshot: String => Any): Int = {
     val base = Files.createTempDirectory("crash").toString
@@ -104,20 +119,22 @@ trait CrashPoints { this: SparkSpec =>
     val fresh =
       if (!resetStartsFresh) None
       else { val d = s"$base/fresh"; new File(d).mkdirs(); call(d); Some(snapshot(d)) }
-    (1 to n).foreach { k =>
+    val steps = FaultFs.eachStep { k =>
       val dir = copy(seed, s"k$k")
-      assert(FaultFs.run(spark, dir + "/", k)(call(dir))._1, s"step $k of $n did not crash")
-      fresh.foreach { f =>
+      val (threw, calls) = FaultFs.run(spark, dir + "/", k)(call(dir))
+      assert(threw == (calls >= k), s"step $k: threw=$threw after $calls calls")
+      if (threw) fresh.foreach { f =>
         val r = copy(dir, s"r$k")
         reset(r)
         call(r)
-        assert(snapshot(r) == f, s"reset after a crash at step $k of $n")
+        assert(snapshot(r) == f, s"reset after a crash at step $k (a clean run makes $n calls)")
       }
       call(dir)
-      assert(snapshot(dir) == expect, s"re-run after a crash at step $k of $n")
+      assert(snapshot(dir) == expect, s"re-run after a crash at step $k (a clean run makes $n calls)")
       assert(new File(dir).list().forall(f => !f.endsWith(".staging") && !f.endsWith(".commit")))
+      calls
     }
     FileUtils.deleteDirectory(new File(base))
-    n
+    steps
   }
 }

@@ -1,13 +1,15 @@
 package graft.core
 
 import graft.{CrashPoints, SparkSpec}
-import graft.operators.{IncrementalAgg, Similarity, Upsert}
+import graft.operators.{IncrementalAgg, Similarity, Sketch, Upsert}
+import graft.sources.{ApiSimulator, Compact, LandingZone}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.io.File
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Fault injection over the stored-state rewrites that commit through
   * [[Commit]]. Each entry point is crashed at every mutating filesystem
@@ -16,7 +18,8 @@ import java.nio.file.Files
   * left: rows, keymap and applied-batch id. Where it says so, a reset
   * (deleting the state and every `state.*` sibling) after each crash
   * must start fresh instead. `foldState`'s case is IncrementalAggSpec's
-  * swap-window test; `ivfFoldInto`'s is SimilaritySpec's. */
+  * swap-window test; `ivfFoldInto`'s is SimilaritySpec's. Identity
+  * commits are checked through [[Commit.identity]] alongside the rows. */
 class CommitSpec extends SparkSpec with CrashPoints {
   import spark.implicits._
 
@@ -85,6 +88,31 @@ class CommitSpec extends SparkSpec with CrashPoints {
     )(dir => (spark.read.parquet(s"$dir/state").select("id", "cluster", "pbucket")
       .as[(Long, Long, Int)].collect().sorted.toSeq,
       IncrementalAgg.appliedBatchId(spark, s"$dir/state"),
-      FileUtils.readFileToString(new File(s"$dir/state.ivf-params"), "UTF-8")))
+      Commit.identity(spark, s"$dir/state")))
+  }
+
+  test("an adopting first fold: every crash point converges on the same rows and identity") {
+    val seed = Files.createTempDirectory("kmv-seed").toString
+    val batch = (1 to 30).map(i => (s"c${i % 2}", s"e$i")).toDF("corp", "gram")
+    everyCrashPoint(seed, resetStartsFresh = true)(dir =>
+      Sketch.kmvFoldInto(spark, s"$dir/state", batch, "gram", "corp", seed = 3, k = 4, batchId = Some(0L))
+    )(dir => (foldSnapshot(dir), Commit.identity(spark, s"$dir/state")))
+  }
+
+  test("Compact.landingZone: every crash point converges on the same rows and per-leaf file counts") {
+    val seed = Files.createTempDirectory("compact-seed").toString
+    val api = new ApiSimulator(totalRows = 12, pageSize = 4)
+    Seq("2025-07-01", "2025-07-02").foreach { day =>
+      api.fetchPages(day, day).foreach { case (_, page) =>
+        if (page.nonEmpty) LandingZone.write(api.toDataFrame(spark, page), s"$seed/state", day)
+      }
+    }
+    def leafFiles(dir: String): Map[String, Int] =
+      FileUtils.listFiles(new File(s"$dir/state"), null, true).asScala.toSeq
+        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .groupBy(_.getParentFile.getPath.stripPrefix(dir)).map { case (leaf, fs) => leaf -> fs.size }
+    assert(leafFiles(seed).size == 2 && leafFiles(seed).values.forall(_ >= 2))
+    everyCrashPoint(seed)(dir => Compact.landingZone(spark, s"$dir/state", targetBytes = 512L * 1024))(dir =>
+      (LandingZone.read(spark, s"$dir/state", Nil).collect().map(_.toString).sorted.toSeq, leafFiles(dir)))
   }
 }

@@ -148,14 +148,15 @@ class FoldStatePartitionedProps extends SparkSpec with graft.CrashPoints {
       val d = s"$base/$name"
       org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(seed), new java.io.File(d)); d
     }
-    val n = graft.FaultFs.run(spark, copy("clean") + "/")(reassign(s"$base/clean"))._2
-    (1 to n).foreach { k =>
+    graft.FaultFs.eachStep { k =>
       val dir = copy(s"k$k")
-      assert(graft.FaultFs.run(spark, dir + "/", k)(reassign(dir))._1)
+      val (threw, calls) = graft.FaultFs.run(spark, dir + "/", k)(reassign(dir))
+      assert(threw == (calls >= k), s"step $k: threw=$threw after $calls calls")
       reset(dir)
       val e = intercept[IllegalArgumentException](reassign(dir))
       assert(e.getMessage.contains("ivfReassign") && e.getMessage.contains("nothing to reassign"))
-      assert(!new java.io.File(s"$dir/state").exists(), s"resurrected after a crash at step $k of $n")
+      assert(!new java.io.File(s"$dir/state").exists(), s"resurrected after a crash at step $k")
+      calls
     }
   }
 

@@ -79,20 +79,24 @@ class IncrementalAggSpec extends SparkSpec with graft.CrashPoints {
   test("guardStateIdentity: adopts fresh, accepts matching, rejects mismatching") {
     val base = java.nio.file.Files.createTempDirectory("incagg").toString
     val dir = s"$base/state"
-    // no state yet: guard writes the sidecar, fold proceeds
-    IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=A", "spec")
+    def stored = graft.core.Commit.identity(spark, dir).get("test")
+    // no state yet: guard commits the identity, fold proceeds
+    IncrementalAgg.guardStateIdentity(spark, dir, "test", "cfg=A", "spec")
+    assert(stored.contains("cfg=A"))
     IncrementalAgg.update(spark, dir, batch(24, 100), spec)
     // live state + matching identity: fine
-    IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=A", "spec")
+    IncrementalAgg.guardStateIdentity(spark, dir, "test", "cfg=A", "spec")
     // live state + different identity: loud
     val e = intercept[IllegalArgumentException] {
-      IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=B", "spec")
+      IncrementalAgg.guardStateIdentity(spark, dir, "test", "cfg=B", "spec")
     }
     assert(e.getMessage.contains("cfg=A") && e.getMessage.contains("cfg=B"))
+    assert(stored.contains("cfg=A"))
     // deleting the state dir legitimately resets the identity
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=B", "spec")
+    IncrementalAgg.guardStateIdentity(spark, dir, "test", "cfg=B", "spec")
+    assert(stored.contains("cfg=B"))
   }
 
   test("update shuffles state + batch keys, never history") {
@@ -113,18 +117,19 @@ class IncrementalAggSpec extends SparkSpec with graft.CrashPoints {
     // back under the new identity
     val base = java.nio.file.Files.createTempDirectory("incagg").toString
     val dir = s"$base/state"
-    IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=A", "spec")
+    IncrementalAgg.guardStateIdentity(spark, dir, "test", "cfg=A", "spec")
     IncrementalAgg.update(spark, dir, batch(30, 200), spec, batchId = Some(0L))
     val e = intercept[IllegalArgumentException] {
-      IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=B", "spec")
+      IncrementalAgg.guardStateIdentity(spark, dir, "test", "cfg=B", "spec")
     }
     assert(e.getMessage.contains(s"every $dir.* sibling"))
     val (crashed, _) = graft.FaultFs.run(spark, base + "/", k = 3)(
       IncrementalAgg.update(spark, dir, batch(31, 200), spec, batchId = Some(1L)))
     assert(crashed && new java.io.File(dir + ".staging").exists())
     reset(base)
-    IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=B", "spec")
+    IncrementalAgg.guardStateIdentity(spark, dir, "test", "cfg=B", "spec")
     assert(!new java.io.File(dir).exists())
+    assert(graft.core.Commit.identity(spark, dir) == Map("test" -> "cfg=B"))
     val b = batch(32, 100)
     assertSame(IncrementalAgg.update(spark, dir, b, spec, batchId = Some(0L)), IncrementalAgg.partial(b, spec))
   }
@@ -172,17 +177,19 @@ class IncrementalAggSpec extends SparkSpec with graft.CrashPoints {
   }
 
   test("guardStateIdentity adopts over live pre-sidecar legacy state, then enforces") {
-    // a state built before the guard existed has no sidecar: first
-    // guarded contact adopts (with a logged warning — unverifiable
-    // here, the adoption itself is the behavior under test), after
-    // which the identity is enforced like any other
+    // a state built without a guard has no identity: first guarded
+    // contact adopts (with a logged warning — unverifiable here, the
+    // adoption itself is the behavior under test), after which the
+    // identity is enforced like any other
     val base = java.nio.file.Files.createTempDirectory("incagg").toString
     val dir = s"$base/state"
     IncrementalAgg.update(spark, dir, batch(32, 200), spec) // unguarded legacy build
-    IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=L", "spec") // adopts
-    IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=L", "spec") // matches
+    assert(graft.core.Commit.identity(spark, dir).isEmpty)
+    IncrementalAgg.guardStateIdentity(spark, dir, "test", "cfg=L", "spec") // adopts
+    assert(graft.core.Commit.identity(spark, dir) == Map("test" -> "cfg=L"))
+    IncrementalAgg.guardStateIdentity(spark, dir, "test", "cfg=L", "spec") // matches
     val e = intercept[IllegalArgumentException] {
-      IncrementalAgg.guardStateIdentity(spark, dir, ".test-id", "cfg=M", "spec")
+      IncrementalAgg.guardStateIdentity(spark, dir, "test", "cfg=M", "spec")
     }
     assert(e.getMessage.contains("cfg=L"))
   }

@@ -324,7 +324,7 @@ class SimilaritySpec extends SparkSpec with graft.CrashPoints {
       Similarity.ivfFoldInto(spark, state,
         all.filter($"vec_id" === 1L), "vec_id", "embedding", qB, Some(3L), nBuckets = 8)
     }
-    // the migration: one pass over the STATE, sidecar rotates
+    // the migration: one pass over the STATE, identity rotates
     Similarity.ivfReassign(spark, state, qB, "vec_id", "embedding", nBuckets = 8)
     val fresh = Similarity.prepareIvfIndexWith(all, "vec_id", "embedding", qB).assigned
       .select("id", "cluster").as[(Long, Long)].collect().sorted.toSeq
@@ -360,7 +360,7 @@ class SimilaritySpec extends SparkSpec with graft.CrashPoints {
     Similarity.ivfFoldInto(spark, state,
       all.filter($"vec_id" % 2 === 0), "vec_id", "embedding", cents(all, 4), Some(0L))
     // same shape, different content: 5 centroids instead of 4 — the
-    // content digest, not the schema, is what the sidecar pins
+    // content digest, not the schema, is what the identity pins
     val e = intercept[IllegalArgumentException] {
       Similarity.ivfFoldInto(spark, state,
         all.filter($"vec_id" % 2 === 1), "vec_id", "embedding", cents(all, 5), Some(1L))

@@ -146,40 +146,11 @@ class QuantileRollupSinkSpec extends SparkSpec {
     assert(e.getMessage.contains("quantileRollupSink") && e.getMessage.contains("id="))
   }
 
-  test("a legacy path-only stream identity upgrades in place and keeps folding") {
-    val base = java.nio.file.Files.createTempDirectory("qsink").toString
-    val in = s"$base/in"; val state = s"$base/state"; val ckpt = s"$base/ckpt"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-    val t0 = System.currentTimeMillis() - 60000
-    land(in, "b0.parquet", t0, (0 until 30).map(i => ("t0", i.toDouble)))
-    def sink() = EventStream.quantileRollupSink(
-      EventStream.readEvents(spark, in, schema), state, ckpt,
-      "value", "event_type", k = 8, seed = 7, salts = 2)
-    sink().awaitTermination(60000)
-    // rewrite the sidecar to the pre-upgrade form (checkpoint uri only)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val uri = fs.makeQualified(new org.apache.hadoop.fs.Path(ckpt)).toUri.toString
-    val sidecar = new org.apache.hadoop.fs.Path(state + ".stream-identity")
-    val out = fs.create(sidecar, true)
-    try out.write(s"checkpoint=$uri".getBytes("UTF-8")) finally out.close()
-    // next start must upgrade (same checkpoint, metadata id intact) and fold
-    val before = stateRows(state)
-    land(in, "b1.parquet", t0 + 1000, (0 until 30).map(i => ("t1", i.toDouble)))
-    sink().awaitTermination(60000)
-    assert(stateRows(state) != before, "post-upgrade start must keep folding")
-    val inS = fs.open(sidecar)
-    val stored = try scala.io.Source.fromInputStream(inS).mkString.trim finally inS.close()
-    assert(stored.contains(" id="), s"sidecar must carry the query id after upgrade: [$stored]")
-    assert(stored.contains(s"checkpoint=$uri"))
-  }
-
-  test("a legacy sidecar with a RECREATED checkpoint refuses loudly, before minting an id") {
-    // a legacy state was necessarily built by a running query, so its
-    // checkpoint had metadata; metadata absent at upgrade time means
-    // the checkpoint was deleted and recreated — detectable, so the
-    // upgrade must refuse, and must refuse BEFORE checkpointQueryId
-    // mints a fresh metadata file (else a retry would find the id
-    // "pre-existing" and upgrade right past the hazard)
+  test("an old-format sidecar refuses loudly, mints no checkpoint metadata, and refuses again on retry") {
+    // a state whose stream identity is still in the per-entry sidecar
+    // file of an older release: its pairing cannot be checked, so the
+    // sink refuses before it mints anything, and the refusal names the
+    // reset that starts the pair over
     val base = java.nio.file.Files.createTempDirectory("qsink").toString
     val in = s"$base/in"; val state = s"$base/state"; val ckpt = s"$base/ckpt"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
@@ -191,16 +162,23 @@ class QuantileRollupSinkSpec extends SparkSpec {
     sink().awaitTermination(60000)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val uri = fs.makeQualified(new org.apache.hadoop.fs.Path(ckpt)).toUri.toString
-    val sidecar = new org.apache.hadoop.fs.Path(state + ".stream-identity")
-    val out = fs.create(sidecar, true)
+    fs.delete(new org.apache.hadoop.fs.Path(state + ".identity"), false)
+    val out = fs.create(new org.apache.hadoop.fs.Path(state + ".stream-identity"), true)
     try out.write(s"checkpoint=$uri".getBytes("UTF-8")) finally out.close()
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true) // the recreation hazard
+    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
     val e = intercept[IllegalArgumentException] { sink() }
-    assert(e.getMessage.contains("legacy") && e.getMessage.contains("metadata"))
+    assert(e.getMessage.contains(".stream-identity") && e.getMessage.contains(s"every $state.* sibling"))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ckpt/metadata")),
-      "refusal must not mint a metadata file — the retry needs the same evidence")
-    val e2 = intercept[IllegalArgumentException] { sink() } // retry-safe
-    assert(e2.getMessage.contains("legacy"))
+      "refusal must not mint a metadata file")
+    val e2 = intercept[IllegalArgumentException] { sink() }
+    assert(e2.getMessage.contains(".stream-identity"))
+    // the reset it names starts the pair over
+    fs.delete(new org.apache.hadoop.fs.Path(state), true)
+    fs.listStatus(new org.apache.hadoop.fs.Path(base)).foreach { st =>
+      if (st.getPath.getName.startsWith("state.")) fs.delete(st.getPath, true)
+    }
+    sink().awaitTermination(60000)
+    assert(stateRows(state).nonEmpty)
   }
 
   test("changing sketch parameters between folds fails loudly") {
@@ -210,7 +188,7 @@ class QuantileRollupSinkSpec extends SparkSpec {
       "value", "event_type", k = 8, seed = 7, salts = 2, batchId = Some(0L))
     // a different k (or seed, or salts, or group) would merge summaries
     // whose rank-error bound no longer holds — requireSummary can't see
-    // that (the row shape matches), the params sidecar can
+    // that (the row shape matches), the params identity can
     for ((k, seed, salts, grp) <- Seq((16, 7, 2, "event_type"), (8, 8, 2, "event_type"),
         (8, 7, 4, "event_type"), (8, 7, 2, "user_id"))) {
       val e = intercept[IllegalArgumentException] {

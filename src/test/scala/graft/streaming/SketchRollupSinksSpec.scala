@@ -16,7 +16,7 @@ import java.sql.Timestamp
   * counter values are merge-order dependent by design, so its
   * contract is the t24 guarantee (presence + undershoot bound)
   * against exact counts — never raw equality of estimates. Also pins
-  * the `.cms-params` width guard ([[Sketch.cmsFoldInto]]), the one
+  * the `params` identity width guard ([[Sketch.cmsFoldInto]]), the one
   * mismatch `cmsEstimate` documents as undetectable from the counter
   * table alone. */
 class SketchRollupSinksSpec extends SparkSpec {
@@ -88,7 +88,7 @@ class SketchRollupSinksSpec extends SparkSpec {
   test("cmsFoldInto: a changed width (or depth, or token column) fails loudly at fold time") {
     // the mismatch cmsEstimate documents as undetectable from the
     // table alone: two widths merge shape-compatibly into counters
-    // that UNDERESTIMATE on probe — the params sidecar catches it
+    // that UNDERESTIMATE on probe — the params identity catches it
     val base = java.nio.file.Files.createTempDirectory("cfold").toString
     val state = s"$base/state"
     Sketch.cmsFoldInto(spark, state, toBatch(Seq.fill(20)("a")),
@@ -104,10 +104,10 @@ class SketchRollupSinksSpec extends SparkSpec {
   }
 
   test("fresh state against a checkpoint that already committed batches is refused") {
-    // the symmetric pairing hazard: deleting the STATE (and sidecars)
+    // the symmetric pairing hazard: deleting the STATE (and identity)
     // but keeping the checkpoint would adopt silently and permanently
     // miss every committed micro-batch — committed offsets are never
-    // re-read. Detectable at start: commits exist, no sidecar claims
+    // re-read. Detectable at start: commits exist, no identity claims
     // the state.
     val base = java.nio.file.Files.createTempDirectory("fsink").toString
     val in = s"$base/in"; val state = s"$base/state"; val ckpt = s"$base/ckpt"
@@ -118,7 +118,7 @@ class SketchRollupSinksSpec extends SparkSpec {
       "event_type", depth = 3, width = 16)
     sink().awaitTermination(60000)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    // reset the state side only: state dir + every sidecar, ckpt kept
+    // reset the state side only: state dir + every sibling, ckpt kept
     fs.delete(new org.apache.hadoop.fs.Path(state), true)
     fs.listStatus(new org.apache.hadoop.fs.Path(base)).foreach { st =>
       if (st.getPath.getName.startsWith("state.")) fs.delete(st.getPath, true)

@@ -7,7 +7,8 @@
 #
 # Usage: tools/preflight.sh [--full]
 #   default: sbt compile + Test/compile   (~1 min, catches r6-class breaks)
-#   --full:  also runs the whole ScalaTest suite (~20 min)
+#   --full:  also runs the whole ScalaTest suite (~20 min) and prints
+#            its elapsed seconds in the marker line
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
@@ -23,13 +24,23 @@ if [[ -z "${SBT_OPTS:-}" ]]; then
   export SBT_OPTS
 fi
 
+FULL=0
 TASKS="compile; Test/compile"
+SUITE=""
 if [[ "${1:-}" == "--full" ]]; then
+  FULL=1
   TASKS="compile; Test/compile; test"
 fi
 
-if sbt --batch -Dsbt.log.noformat=true "$TASKS" >/tmp/preflight.log 2>&1; then
-  MARKER="PREFLIGHT OK ($TASKS) @ git $(git rev-parse --short HEAD 2>/dev/null || echo none) + $(git status --porcelain | wc -l) dirty files"
+# --full times the suite on its own (a second sbt call after the
+# compile), so the marker's seconds compare across changes
+sbt_run() { sbt --batch -Dsbt.log.noformat=true "$1" >>/tmp/preflight.log 2>&1; }
+: >/tmp/preflight.log
+if sbt_run "compile; Test/compile" && {
+    (( ! FULL )) ||
+      { t0=$SECONDS; sbt_run test && SUITE=", suite $((SECONDS - t0)) s"; }
+  }; then
+  MARKER="PREFLIGHT OK ($TASKS$SUITE) @ git $(git rev-parse --short HEAD 2>/dev/null || echo none) + $(git status --porcelain | wc -l) dirty files"
   echo "$MARKER" | tee .preflight_ok
   exit 0
 else
