@@ -109,14 +109,15 @@ object Queries {
     QueryDef(
       "q04_count_distinct",
       // r22 (guide §2.1/§2.3, probe-driven): dedup (flag, pk, sk)
-      // FIRST — all three distinct counts are invariant under it (the
-      // keys are non-null, so count(DISTINCT pk, sk) = count(*) of the
-      // deduped triples), and the RewriteDistinctAggregates Expand(×3)
-      // then runs over distinct triples instead of every lineitem row.
-      // The pre-dedup is one map-side-combinable aggregation; the
-      // expand-side hash aggregate shrinks by the (flag, pk, sk)
-      // duplication factor (interleaved in-JVM A/B: 1.78 → 1.40 s
-      // median at sf0.1).
+      // FIRST — all three distinct counts are invariant under it, and
+      // the RewriteDistinctAggregates Expand(×3) then runs over distinct
+      // triples instead of every lineitem row. Each deduped triple with
+      // both keys non-null is one distinct (pk, sk) pair, so counting
+      // those is exactly count(DISTINCT pk, sk) over the original rows,
+      // which skips a pair with a null key. The pre-dedup is one
+      // map-side-combinable aggregation; the expand-side hash aggregate
+      // shrinks by the (flag, pk, sk) duplication factor (interleaved
+      // in-JVM A/B: 1.78 → 1.40 s median at sf0.1).
       (s, d) => {
         val dd = Tables.lineitem(s, d)
           .select(col("l_returnflag").as("returnflag"), col("l_partkey"), col("l_suppkey"))
@@ -125,7 +126,8 @@ object Queries {
           .agg(
             countDistinct(col("l_partkey")).as("n_parts"),
             countDistinct(col("l_suppkey")).as("n_supps"),
-            count(lit(1)).as("n_part_supp"))
+            count(when(col("l_partkey").isNotNull && col("l_suppkey").isNotNull, 1))
+              .as("n_part_supp"))
       },
       Some("""SELECT l_returnflag AS returnflag,
              |count(DISTINCT l_partkey) AS n_parts, count(DISTINCT l_suppkey) AS n_supps,

@@ -13,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   *     so small-SF plans don't drown in empty tasks — AQE re-splits when
   *     a real cluster needs more;
   *   - UTC session timezone for oracle parity and cross-cluster
-  *     determinism.
+  *     determinism;
+  *   - [[graft.plans.GraftExtensions]] installed: graft's SQL functions
+  *     and the band-join rewrite rule are active session-wide.
   */
 object GraftSession {
   /** The engine's defaults applied to an arbitrary builder — shared by
@@ -39,6 +41,7 @@ object GraftSession {
       // not built here need it in their own submit conf — see
       // [[Reliability]].
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      .withExtensions(new graft.plans.GraftExtensions)
 
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession.Builder =
     configure(SparkSession.builder().master(master))

@@ -13,21 +13,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Par {
 
-  /** Repartition `df` to the session's default parallelism iff the scan
-    * is estimated narrower than it.
-    *
-    * The estimate reads the ANALYZED plan's leaf statistics
-    * (`sizeInBytes` / `spark.sql.files.maxPartitionBytes`, the same
-    * arithmetic file splitting uses) instead of `df.rdd
-    * .getNumPartitions` — materializing the RDD forces full physical
-    * planning + codegen of the query twice (once here, once at
-    * execution), which billed every sketch query a second planning pass.
-    * Analysis is already done by the time a DataFrame exists, so the
-    * stats read is free. The estimate ignores per-file packing
-    * (`openCostInBytes`), which can only UNDER-estimate width and cause
-    * a redundant repartition of an already-wide scan — a second shuffle,
-    * never a lost one.
-    */
   /** Evaluate `n` independent DataFrame builders concurrently and
     * return their results in index order — the guide-§2.6 "overlap
     * independent jobs" pattern for in-query compositions whose pieces
@@ -66,6 +51,26 @@ object Par {
     * break-even. */
   private val WidenMinGain = 4L
 
+  /** Repartition `df` to the session's default parallelism iff the scan
+    * is estimated narrower than it.
+    *
+    * The estimate reads the ANALYZED plan's leaf statistics
+    * (`sizeInBytes` / `spark.sql.files.maxPartitionBytes`, the same
+    * arithmetic file splitting uses) instead of `df.rdd
+    * .getNumPartitions` — materializing the RDD forces full physical
+    * planning + codegen of the query twice (once here, once at
+    * execution), which billed every sketch query a second planning pass.
+    * Analysis is already done by the time a DataFrame exists, so the
+    * stats read is free. The estimate ignores per-file packing
+    * (`openCostInBytes`), which can only UNDER-estimate width and cause
+    * a redundant repartition of an already-wide scan — a second shuffle,
+    * never a lost one. A file scan's width counts
+    * `HadoopFsRelation.location.inputFiles`, the WHOLE relation's
+    * listing: partition pruning is ignored, so a pruned scan over a
+    * many-file partitioned table is over-counted and can skip a widen
+    * that would help (again the safe direction), and the listing itself
+    * is read even when the scan touches a few partitions.
+    */
   def widen(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism

@@ -98,9 +98,12 @@ object Reliability {
     * write. This is ground truth where plan statistics are not: a
     * post-join/post-aggregation subtree's `sizeInBytes` estimate is
     * off by orders of magnitude, but the blocks just written have an
-    * exact size. `None` when the blocks are not in executor storage
-    * (the reliable-checkpoint-to-files policy) — callers fall back to
-    * the configured shuffle width. */
+    * exact size. The size is the blocks' DESERIALIZED in-memory bytes
+    * (memory plus disk), which runs several times larger than the
+    * serialized shuffle bytes AQE sizes partitions by; see
+    * [[keyedPartitions]]. `None` when the blocks are not in executor
+    * storage (the reliable-checkpoint-to-files policy) — callers fall
+    * back to the configured shuffle width. */
   def cutSized(df: DataFrame): (DataFrame, Option[Long]) = {
     val c = cut(df, eager = true)
     val sc = df.sparkSession.sparkContext
@@ -122,7 +125,11 @@ object Reliability {
     * per-round join would pay mostly-empty tasks, while a constant
     * small width would serialize the cluster-scale case. Deriving the
     * width from the measured input size keeps both ends honest (the
-    * same arithmetic AQE coalescing applies, done statically). */
+    * arithmetic AQE coalescing applies, done statically). The units
+    * differ, though: [[cutSized]] reports deserialized block bytes,
+    * while the advisory size is calibrated for serialized shuffle
+    * bytes, so the width can overshoot AQE's by the deserialization
+    * factor — more, smaller partitions, the safe direction. */
   def keyedPartitions(spark: org.apache.spark.sql.SparkSession, bytes: Option[Long]): Int = {
     val conf = spark.sessionState.conf
     val max = conf.numShufflePartitions

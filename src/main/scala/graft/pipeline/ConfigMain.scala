@@ -44,12 +44,12 @@ object ConfigMain {
     try props.load(in)
     finally in.close()
     // the engine's session defaults (UTC timezone, AQE + skew-join,
-    // parquet pushdown) — the production entry point must run under
-    // exactly the configuration everything was tested with
+    // parquet pushdown, graft's extensions). The specs drive `run` on
+    // SparkSpec's shared session, which sets only the timezone and a
+    // small shuffle width, so this builder itself is not under test.
     val builder = graft.core.GraftSession.configure(SparkSession.builder())
       .appName("graft-pipeline")
       .config("spark.sql.shuffle.partitions", props.getProperty("shufflePartitions", "32"))
-      .withExtensions(new graft.plans.GraftExtensions)
     Option(props.getProperty("master")).foreach(builder.master)
     val spark = builder.getOrCreate()
     val status =

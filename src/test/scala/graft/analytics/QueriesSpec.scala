@@ -26,6 +26,27 @@ class QueriesSpec extends SparkSpec {
     assert(graft.SparkEntry.oracleSql.keySet.subsetOf(graft.SparkEntry.queries.keySet))
   }
 
+  test("q04 counts distinct (partkey, suppkey) pairs as countDistinct does when a key is null") {
+    import org.apache.spark.sql.functions.{col, countDistinct}
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("q04-nulls").toString
+    val li = Seq[(String, Option[Long], Option[Long])](
+      ("A", Some(1L), Some(10L)), ("A", Some(1L), Some(10L)), ("A", Some(1L), None),
+      ("A", None, Some(10L)), ("A", None, None), ("A", Some(2L), Some(20L)),
+      ("R", None, Some(5L)), ("R", Some(3L), None)
+    ).toDF("l_returnflag", "l_partkey", "l_suppkey")
+    li.write.parquet(s"$dir/lineitem.parquet")
+    val want = li.groupBy(col("l_returnflag").as("returnflag"))
+      .agg(
+        countDistinct(col("l_partkey")).as("n_parts"),
+        countDistinct(col("l_suppkey")).as("n_supps"),
+        countDistinct(col("l_partkey"), col("l_suppkey")).as("n_part_supp"))
+      .collect().toSet
+    assert(want.map(_.getAs[Long]("n_part_supp")) == Set(2L, 0L))
+    val q04 = Queries.all.find(_.name == "q04_count_distinct").get
+    assert(q04.fn(spark, dir).collect().toSet == want)
+  }
+
   test("the driver's entry contract returns rows (the flagship smoke)") {
     assert(graft.SparkEntry.entry(spark).count() > 0)
   }

@@ -6,7 +6,8 @@
 # the whole round went unverified.
 #
 # Usage: tools/preflight.sh [--full]
-#   default: sbt compile + Test/compile   (~1 min, catches r6-class breaks)
+#   default: sbt compile + Test/compile, then the benchmark harness
+#            (perfbench/) compile   (~2 min, catches r6-class breaks)
 #   --full:  also runs the whole ScalaTest suite (~20 min) and prints
 #            its elapsed seconds in the marker line
 set -uo pipefail
@@ -25,18 +26,21 @@ if [[ -z "${SBT_OPTS:-}" ]]; then
 fi
 
 FULL=0
-TASKS="compile; Test/compile"
+TASKS="compile; Test/compile; perfbench compile"
 SUITE=""
 if [[ "${1:-}" == "--full" ]]; then
   FULL=1
-  TASKS="compile; Test/compile; test"
+  TASKS="$TASKS; test"
 fi
 
 # --full times the suite on its own (a second sbt call after the
 # compile), so the marker's seconds compare across changes
 sbt_run() { sbt --batch -Dsbt.log.noformat=true "$1" >>/tmp/preflight.log 2>&1; }
 : >/tmp/preflight.log
-if sbt_run "compile; Test/compile" && {
+# perfbench/ is its own sbt build compiled against engine entry points
+# (Runner, ApiSimulator, SparkEntry, GraftExtensions, RangeJoinRewrite):
+# a change that breaks them fails here, not in a benchmark run
+if sbt_run "compile; Test/compile" && (cd perfbench && sbt_run compile) && {
     (( ! FULL )) ||
       { t0=$SECONDS; sbt_run test && SUITE=", suite $((SECONDS - t0)) s"; }
   }; then
