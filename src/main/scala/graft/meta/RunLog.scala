@@ -27,9 +27,13 @@ class RunLog(spark: SparkSession, path: String) {
 
   private val rawSchema = Schemas.logs.add("__seq", LongType, nullable = false)
 
-  private def readRaw(): DataFrame =
-    if (new java.io.File(path).exists()) spark.read.schema(rawSchema).parquet(path)
+  /** The raw transitions; none before the first append. The filesystem
+    * comes from the path, so a `file:` URI or a remote store resolves. */
+  private def readRaw(): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) spark.read.schema(rawSchema).parquet(path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], rawSchema)
+  }
 
   /** Resolved current state: the latest transition per (run_id,
     * load_date). Readers see exactly what a row-keyed UPDATE table

@@ -4,11 +4,12 @@ import graft.core.Schemas
 import graft.meta.{Checkpoint, CheckpointState, RunLog}
 import graft.operators.{DataChecks, SyncRepair, Transform, Upsert}
 import graft.sources.{ApiPageFetchError, ApiSimulator, Catalog, LandingZone}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
 import java.time.LocalDate
+import scala.collection.mutable
 
 /** Driver-side orchestration of the weekly run (§3.1 of SURVEY.md) —
   * the Airflow DAG `crime_etl` (`airflow/dags/crime_etl.py:563-695`)
@@ -17,8 +18,11 @@ import java.time.LocalDate
   * Stages mirror the DAG: check_table (catalog DDL, S7/S8) →
   * fetch_metadata branch (FULL vs INCREMENT on the data's high-water
   * mark, ST1/A1) → paged extract with (date, page) checkpoint/resume
-  * (ST2) over month-bucketed ranges (F3) → partitioned landing write →
-  * transform → keyed upsert into TWO parquet replicas → post-upsert
+  * (ST2) over month-bucketed ranges (F3), the pages of all windows
+  * buffered on the driver → partitioned landing write (one per run, plus
+  * one before each checkpoint and one per 50 000 buffered rows; the
+  * reference lands each extracted batch in one upload, `helper.py:67-86`)
+  * → transform → keyed upsert into TWO parquet replicas → post-upsert
   * data tests (A5) → log finalize → sync-validate (anti-join) → replay
   * missed partitions (ST5). Thread/process boundaries of the DAG become
   * Spark job boundaries; branching is `if` on collected scalars (the
@@ -74,10 +78,17 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
   }
 
   /** One scheduled run through the offline page simulator (driver-side
-    * paging with (date, page) checkpoint/resume). Returns the final
-    * status. */
+    * paging with (date, page) checkpoint/resume). Fetched pages collect
+    * in one driver-side [[PageBuffer]] across all of the run's windows
+    * and land in one write after the last window, so a backfill costs
+    * one landing job, not one per page. Returns the final status. */
   def run(runId: String, loadDate: String, api: ApiSimulator, maxRetries: Int = 3): String =
-    runWith(runId, loadDate, (s0, e0) => extractAndLand(s0, e0, loadDate, api, maxRetries))
+    runWith(runId, loadDate, { ranges =>
+      val pending = new PageBuffer(Runner.LandingRowCap, rows =>
+        LandingZone.write(api.toDataFrame(spark, rows), landingRoot, loadDate))
+      ranges.foreach { case (s0, e0) => extractAndLand(s0, e0, api, pending, maxRetries) }
+      pending.flush()
+    })
 
   /** One scheduled run extracting through the DSv2 connector
     * (`spark.read.format("graft-api")`, [[graft.sources.ApiTableProvider]])
@@ -86,9 +97,9 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
     * parallel as input partitions, and a failed page retries as a task
     * retry instead of the driver-side checkpoint loop. */
   def runWithConnector(runId: String, loadDate: String, apiOptions: Map[String, String] = Map.empty): String =
-    runWith(runId, loadDate, (s0, e0) => extractAndLandConnector(s0, e0, loadDate, apiOptions))
+    runWith(runId, loadDate, _.foreach { case (s0, e0) => extractAndLandConnector(s0, e0, loadDate, apiOptions) })
 
-  private def runWith(runId: String, loadDate: String, extract: (String, String) => Unit): String = {
+  private def runWith(runId: String, loadDate: String, extract: Seq[(String, String)] => Unit): String = {
     checkTables()
     val ld = java.sql.Date.valueOf(loadDate)
     val hw = crimeHighWater()
@@ -108,9 +119,8 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
 
     val status =
       try {
-        ranges.foreach { case (s0, e0) => extract(s0, e0) }
-        loadReplica(replicaA, Seq(loadDate))
-        loadReplica(replicaB, Seq(loadDate))
+        extract(ranges)
+        loadReplicas(Seq(replicaA, replicaB), Seq(loadDate))
         refreshCatalog()
         "SUCCESS"
       } catch {
@@ -125,23 +135,25 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
     status
   }
 
-  /** Paged extract of one query window with checkpoint/resume at
-    * (window start, page) granularity (ST2): a failed page leaves a
-    * checkpoint; the retry resumes from it; exhausted retries clear it
-    * (`crime_etl.py:132-168`). */
-  private def extractAndLand(startDate: String, endDate: String, loadDate: String, api: ApiSimulator, maxRetries: Int): Unit = {
+  /** Paged extract of one query window into `pending`, with
+    * checkpoint/resume at (window start, page) granularity (ST2): a
+    * failed page leaves a checkpoint; the retry resumes from it;
+    * exhausted retries clear it (`crime_etl.py:132-168`). `pending` is
+    * flushed before every checkpoint write, so the pages before the one
+    * a checkpoint names are landed when it names them and a resume
+    * neither loses nor re-lands them. */
+  private def extractAndLand(startDate: String, endDate: String, api: ApiSimulator, pending: PageBuffer, maxRetries: Int): Unit = {
     var attempt = 0
     var done = false
     while (!done) {
       val resumeFrom = checkpoint.read().filter(_.lastDate == startDate).map(_.lastPage).getOrElse(0)
       try {
-        api.fetchPages(startDate, endDate, resumeFrom).foreach { case (_, rows) =>
-          if (rows.nonEmpty) LandingZone.write(api.toDataFrame(spark, rows), landingRoot, loadDate)
-        }
+        api.fetchPages(startDate, endDate, resumeFrom).foreach { case (_, rows) => pending.add(rows) }
         checkpoint.clear()
         done = true
       } catch {
         case e: ApiPageFetchError =>
+          pending.flush()
           checkpoint.write(CheckpointState(e.date, e.pagenum))
           attempt += 1
           if (attempt > maxRetries) { checkpoint.clear(); throw e }
@@ -165,30 +177,34 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
     LandingZone.write(src, landingRoot, loadDate)
   }
 
-  /** Landing → transform → idempotent keyed upsert into one replica,
+  /** Landing → transform → idempotent keyed upsert into each replica,
     * partition-scoped by occurrence year (only touched years rewrite),
     * then the dbt-style data tests (A5): crime_id must be a unique,
-    * non-null key or the run fails. Checks are SCOPED — not-null runs
-    * on the incoming batch, uniqueness on the batch's partitions only
-    * (the upsert's cross-partition stale-key rewrite guarantees a key
-    * lives in at most one partition, so partition-local uniqueness ⇒
-    * global uniqueness) — two bounded jobs per load, not two
-    * full-table scans. */
-  def loadReplica(replicaPath: String, loadDates: Seq[String]): Unit = {
+    * non-null key or the run fails. The landing read, the transform and
+    * the not-null check run once for all replicas: the typed batch is
+    * cached and every replica's upsert reads the cache. Checks are
+    * SCOPED — not-null runs on the incoming batch, uniqueness on each
+    * replica's rewritten partitions only (the upsert's cross-partition
+    * stale-key rewrite guarantees a key lives in at most one partition,
+    * so partition-local uniqueness ⇒ global uniqueness) — bounded jobs
+    * per load, not full-table scans. */
+  def loadReplicas(replicaPaths: Seq[String], loadDates: Seq[String]): Unit = {
     val raw = LandingZone.read(spark, landingRoot, loadDates)
     val typed = Transform.crimeRecords(raw)
       .withColumn("occ_year", year(col("date_of_occurrence")))
-      .cache() // reused by the check + the upsert's several passes
+      .cache() // reused by the check + each replica's upsert passes
     try {
       DataChecks.requireNotNull(typed, Seq("crime_id"))
-      val touched = Upsert.upsertIntoParquet(
-        spark, replicaPath, typed,
-        keyCols = Seq("crime_id"), versionCol = "source_updated_on", partitionCol = "occ_year")
-      // uniqueness over EVERY partition this load rewrote — including
-      // those that held stale versions of moved keys
-      val touchedData = spark.read.parquet(replicaPath)
-        .filter(Upsert.partitionFilter("occ_year", touched))
-      DataChecks.requireUnique(touchedData, Seq("crime_id"))
+      replicaPaths.foreach { replicaPath =>
+        val touched = Upsert.upsertIntoParquet(
+          spark, replicaPath, typed,
+          keyCols = Seq("crime_id"), versionCol = "source_updated_on", partitionCol = "occ_year")
+        // uniqueness over EVERY partition this load rewrote — including
+        // those that held stale versions of moved keys
+        val touchedData = spark.read.parquet(replicaPath)
+          .filter(Upsert.partitionFilter("occ_year", touched))
+        DataChecks.requireUnique(touchedData, Seq("crime_id"))
+      }
     } finally typed.unpersist()
   }
 
@@ -201,10 +217,36 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
       val side = r.getString(1)
       val (log, replica) = if (side == "a") (logsA, replicaA) else (logsB, replicaB)
       log.start(runId, missedDate, "RECOVERY", "INCREMENT", Seq("recover" -> missedDate.toString))
-      loadReplica(replica, Seq(missedDate.toString))
+      loadReplicas(Seq(replica), Seq(missedDate.toString))
       log.finish(runId, missedDate, "SUCCESS")
     }
     if (diff.nonEmpty) refreshCatalog() // recovered partitions must be SQL-visible too
     diff.length
   }
+}
+
+object Runner {
+
+  /** Rows the paged path holds on the driver before it lands them: ten
+    * of the reference's 5000-row pages, so driver memory stays bounded
+    * however long the backfill. */
+  private val LandingRowCap = 50000
+}
+
+/** Fetched pages held on the driver until their landing write. One
+  * `land` call takes everything buffered, so many small pages cost one
+  * write; the buffer lands itself once it holds `cap` rows. */
+private[pipeline] final class PageBuffer(cap: Int, land: Seq[Row] => Unit) {
+  private val rows = mutable.ArrayBuffer.empty[Row]
+
+  def add(page: Seq[Row]): Unit = {
+    rows ++= page
+    if (rows.length >= cap) flush()
+  }
+
+  def flush(): Unit =
+    if (rows.nonEmpty) {
+      land(rows.toVector)
+      rows.clear()
+    }
 }

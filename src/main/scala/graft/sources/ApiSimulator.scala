@@ -14,9 +14,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * The simulator serves deterministic synthetic pages with identical
   * pagination/resume semantics so the full pipeline (extract → land →
   * transform → upsert → log) runs with zero egress. Rows are generated
-  * per page on demand — the driver never holds more than one page
-  * (mirrors the reference's "Avoids OOM" generator design,
-  * `crime_etl.py:116`).
+  * per page on demand (the reference's "Avoids OOM" generator design,
+  * `crime_etl.py:116`); the paged run (`Runner.run`) buffers them for
+  * its landing write up to a row cap of 50 000 rows, so driver memory
+  * stays bounded however many pages a backfill fetches.
   */
 final case class ApiPageFetchError(pagenum: Int, date: String)
     extends RuntimeException(s"page fetch failed at page=$pagenum date=$date")
@@ -45,8 +46,10 @@ class ApiSimulator(
   private def genRow(i: Int, baseDate: String): Row =
     Row.fromSeq(ApiSimulator.genValues(i, baseDate).toIndexedSeq)
 
+  /** The rows as one slice: a write of the frame is one task, with one
+    * file per partition directory it touches. */
   def toDataFrame(spark: SparkSession, rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq), Schemas.rawCrime)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq, numSlices = 1), Schemas.rawCrime)
 }
 
 object ApiSimulator {

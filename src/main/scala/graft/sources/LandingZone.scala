@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   */
 object LandingZone {
 
-  /** S3+S4: land one page-batch, hive-partitioned. */
+  /** S3+S4: land a batch of rows — one or many pages — hive-partitioned,
+    * appending to what earlier writes landed. */
   def write(df: DataFrame, root: String, loadDate: String): Unit =
     df.withColumn("year", substring(col("date"), 1, 4))
       .withColumn("month", substring(col("date"), 6, 2))

@@ -37,4 +37,15 @@ class RunLogSpec extends SparkSpec {
     val r1 = log.read().filter(org.apache.spark.sql.functions.col("run_id") === "r1").collect()
     assert(r1.length == 1 && r1(0).getAs[String]("status") == "FAILED")
   }
+
+  test("a file: URI path resolves, so finish moves the run out of RUNNING") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-runlog-uri")
+    val log = new RunLog(spark, dir.resolve("logs").toUri.toString)
+    assert(log.read().isEmpty)
+    val d = java.sql.Date.valueOf("2026-01-05")
+    log.start("r1", d, "SCHEDULED", "FULL", Seq("pagesize" -> "5000"))
+    log.finish("r1", d, "SUCCESS")
+    val rows = log.read().collect()
+    assert(rows.length == 1 && rows(0).getAs[String]("status") == "SUCCESS")
+  }
 }

@@ -1,11 +1,14 @@
 package graft.pipeline
 
 import graft.{FaultFs, SparkSpec}
-import graft.core.Commit
+import graft.core.{Commit, Schemas}
 import graft.operators.SyncRepair
-import graft.sources.{ApiSimulator, Catalog}
+import graft.sources.{ApiPageFetchError, ApiSimulator, Catalog, LandingZone}
 import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline smoke (SURVEY.md §5.5): simulated API → landing
   * zone → transform → dual-replica upsert → logs → checkpoint/resume →
@@ -93,6 +96,79 @@ class RunnerSpec extends SparkSpec {
     assert(spark.read.parquet(r.replicaA).count() == 300)
     // checkpoint cleared after success
     assert(r.checkpoint.read().isEmpty)
+  }
+
+  /** Data files per leaf directory of a landing zone, and the landing
+    * writes that made them: a write job stamps its id into the name of
+    * every file it writes (`part-NNNNN-<job id>.c000...`). */
+  private def landingFiles(root: String): (Map[String, Int], Set[String]) = {
+    val files = FileUtils.listFiles(new java.io.File(root), null, true).asScala.toSeq
+      .filter(_.getName.startsWith("part-"))
+    val writeIds = files.map(f => "part-\\d+-([0-9a-f-]{36})".r.findPrefixMatchOf(f.getName).get.group(1)).toSet
+    (files.groupBy(_.getParent).map { case (leaf, fs) => leaf -> fs.size }, writeIds)
+  }
+
+  private def landedIds(r: Runner, loadDate: String): Seq[String] =
+    LandingZone.read(spark, r.landingRoot, Seq(loadDate)).select("id")
+      .collect().map(_.getString(0)).toSeq
+
+  test("a FULL run resumed after a mid-window page failure lands every row once") {
+    val dir = java.nio.file.Files.createTempDirectory("runner").toString
+    val r = new Runner(spark, dir, epochStart = "2025-07-05", tablePrefix = "t9")
+    var failures = 0
+    val api = new ApiSimulator(totalRows = 300, pageSize = 100) {
+      override def fetchPages(s: String, e: String, resume: Int): Iterator[(Int, Seq[Row])] =
+        super.fetchPages(s, e, resume).map { case (pg, rows) =>
+          if (pg == 1 && failures == 0) { failures += 1; throw ApiPageFetchError(pg, s) }
+          (pg, rows)
+        }
+    }
+    assert(r.run("run1", "2025-07-05", api) == "SUCCESS" && failures == 1)
+    // keep-latest would hide a re-landed page in the replicas; the
+    // landing zone itself must hold each row once
+    val ids = landedIds(r, "2025-07-05")
+    assert(ids.size == 300 && ids.distinct.size == 300)
+    // two landing writes: page 0 before the checkpoint named page 1,
+    // pages 1-2 after the last window; one file per leaf per write
+    val (perLeaf, writes) = landingFiles(r.landingRoot)
+    assert(writes.size == 2, s"landing writes: $writes")
+    assert(perLeaf.nonEmpty && perLeaf.values.forall(_ <= writes.size), s"files per leaf: $perLeaf")
+  }
+
+  test("a FAILED paged run has landed exactly the pages fetched before the failing page") {
+    val dir = java.nio.file.Files.createTempDirectory("runner").toString
+    val r = new Runner(spark, dir, epochStart = "2025-07-06", tablePrefix = "t10")
+    val api = new ApiSimulator(totalRows = 300, pageSize = 100, failAtPage = Some(2))
+    assert(r.run("run1", "2025-07-06", api, maxRetries = 0) == "FAILED")
+    val before = api.fetchPages("2025-07-06", "2025-07-06").take(2).flatMap(_._2)
+      .map(_.getString(Schemas.rawCrime.fieldIndex("id"))).toSeq
+    assert(before.size == 200)
+    assert(landedIds(r, "2025-07-06").sorted == before.sorted)
+  }
+
+  test("the paged path lands a multi-window backfill in one write") {
+    val dir = java.nio.file.Files.createTempDirectory("runner").toString
+    // three month windows (F3); the sim serves the same 120 ids in each
+    val r = new Runner(spark, dir, epochStart = "2025-05-01", tablePrefix = "t11")
+    assert(r.run("run1", "2025-07-10", new ApiSimulator(totalRows = 120, pageSize = 40)) == "SUCCESS")
+    assert(landedIds(r, "2025-07-10").size == 3 * 120)
+    val (perLeaf, writes) = landingFiles(r.landingRoot)
+    assert(writes.size == 1 && perLeaf.size == 3 && perLeaf.values.forall(_ == 1), s"$perLeaf")
+  }
+
+  test("the page buffer lands what it holds at the row cap and on flush, each row once") {
+    val landed = scala.collection.mutable.ArrayBuffer.empty[Seq[Row]]
+    val buf = new PageBuffer(cap = 3, landed += _)
+    def page(ids: Int*) = ids.map(i => Row(i))
+    buf.add(page(1, 2))
+    assert(landed.isEmpty)
+    buf.add(page(3, 4)) // reaches the cap: lands both pages
+    buf.add(Nil)
+    buf.add(page(5))
+    assert(landed.map(_.map(_.getInt(0))) == Seq(Seq(1, 2, 3, 4)))
+    buf.flush()
+    buf.flush() // nothing left: no empty write
+    assert(landed.map(_.map(_.getInt(0))) == Seq(Seq(1, 2, 3, 4), Seq(5)))
   }
 
   test("exhausted retries fail the run, clear the checkpoint, and log FAILED") {
