@@ -13,31 +13,41 @@ import org.apache.spark.sql.DataFrame
   */
 object Par {
 
-  /** Evaluate `n` independent DataFrame builders concurrently and
-    * return their results in index order — the guide-§2.6 "overlap
-    * independent jobs" pattern for in-query compositions whose pieces
-    * each run eager work (an eager [[Reliability.cut]], a scalar
-    * fetch): submitted from one thread the jobs serialize, from a
-    * small pool the scheduler back-fills each job's tail with the
-    * next job's tasks. Builders MUST be independent (no shared mutable
-    * state); Spark job submission is thread-safe. */
-  def inParallel(n: Int)(build: Int => DataFrame): IndexedSeq[DataFrame] = {
-    import scala.concurrent.{Await, ExecutionContextExecutorService, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+  /** Evaluate `n` independent builders concurrently and return their
+    * results in index order — the guide-§2.6 "overlap independent jobs"
+    * pattern for work whose pieces each run eager Spark jobs (an eager
+    * [[Reliability.cut]], a scalar fetch, a replica's upsert): submitted
+    * from one thread the jobs serialize, from a small pool the scheduler
+    * back-fills each job's tail with the next job's tasks. Builders MUST
+    * be independent (no shared mutable state); Spark job submission is
+    * thread-safe.
+    *
+    * Every builder ends before this returns or throws: a failure is
+    * rethrown (the first in index order) only once the others are done,
+    * so no builder is still submitting jobs after its caller has moved
+    * on. The pool's threads are created by this call on the calling
+    * thread, so they inherit its Spark local properties (job group,
+    * scheduler pool). A single builder runs inline on the calling
+    * thread. */
+  def inParallel[T](n: Int)(build: Int => T): IndexedSeq[T] = if (n == 1) IndexedSeq(build(0)) else {
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    import scala.util.{Failure, Success, Try}
     // a dedicated fixed pool sized n (r22, advice): the builders BLOCK
-    // on Spark actions, and parking them on ExecutionContext.global
-    // would eat the shared ForkJoinPool's parallelism for any nested or
-    // wider use. The pool dies with this call; threads are daemons so
-    // an abandoned builder can never pin the JVM.
-    val pool: ExecutionContextExecutorService =
-      ExecutionContext.fromExecutorService(
-        java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, n),
-          (r: Runnable) => { val t = new Thread(r, "graft-par"); t.setDaemon(true); t }))
+    // on Spark actions, and parking them on a shared pool would eat its
+    // parallelism for any nested or wider use. The pool dies with this
+    // call; threads are daemons so an abandoned builder can never pin
+    // the JVM.
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, n),
+      (r: Runnable) => { val t = new Thread(r, "graft-par"); t.setDaemon(true); t })
     try {
-      implicit val ec: ExecutionContext = pool
-      val fs = (0 until n).map(i => Future(build(i)))
-      fs.map(Await.result(_, Duration.Inf))
+      val fs = (0 until n).map(i => pool.submit(new Callable[T] { def call(): T = build(i) }))
+      val outcomes = fs.map(f => Try(f.get())) // waits for every builder
+      outcomes.map {
+        case Success(v)                                           => v
+        case Failure(e: ExecutionException) if e.getCause != null => throw e.getCause
+        case Failure(e)                                           => throw e
+      }
     } finally pool.shutdown()
   }
 

@@ -1,15 +1,16 @@
 package graft.pipeline
 
-import graft.core.Schemas
+import graft.core.{Par, Schemas}
 import graft.meta.{Checkpoint, CheckpointState, RunLog}
 import graft.operators.{DataChecks, SyncRepair, Transform, Upsert}
 import graft.sources.{ApiPageFetchError, ApiSimulator, Catalog, LandingZone}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 import java.time.LocalDate
 import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
 
 /** Driver-side orchestration of the weekly run (§3.1 of SURVEY.md) —
   * the Airflow DAG `crime_etl` (`airflow/dags/crime_etl.py:563-695`)
@@ -22,11 +23,16 @@ import scala.collection.mutable
   * buffered on the driver → partitioned landing write (one per run, plus
   * one before each checkpoint and one per 50 000 buffered rows; the
   * reference lands each extracted batch in one upload, `helper.py:67-86`)
-  * → transform → keyed upsert into TWO parquet replicas → post-upsert
-  * data tests (A5) → log finalize → sync-validate (anti-join) → replay
-  * missed partitions (ST5). Thread/process boundaries of the DAG become
-  * Spark job boundaries; branching is `if` on collected scalars (the
-  * only `collect`s are scalar cursors — 100 TB posture).
+  * → transform → keyed upsert into TWO parquet replicas concurrently,
+  * each followed by its post-upsert data tests (A5) → log finalize,
+  * each replica's log with its own outcome → sync-validate (anti-join)
+  * → replay missed partitions (ST5). The reference loads its two
+  * warehouses independently too (`db_postgres.py:158-203`): each
+  * replica's log start, upsert chain and log finish run on their own
+  * driver thread ([[Par.inParallel]]), so the two chains of short Spark
+  * jobs overlap instead of queueing. Other thread/process boundaries of
+  * the DAG become Spark job boundaries; branching is `if` on collected
+  * scalars (the only `collect`s are scalar cursors — 100 TB posture).
   *
   * Mode semantics (`crime_etl.py:94-228`):
   *  - FULL (no data yet): walk `[epochStart, loadDate]` in one-month
@@ -46,16 +52,17 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
   val replicaB = s"$workDir/warehouse_b/crime"
   val logsA = new RunLog(spark, s"$workDir/warehouse_a/logs")
   val logsB = new RunLog(spark, s"$workDir/warehouse_b/logs")
-  val checkpoint = new Checkpoint(s"$workDir/checkpoint.json")
+  val checkpoint = new Checkpoint(spark, s"$workDir/checkpoint.json")
+  private val replicas = Seq(replicaA, replicaB)
+  private val logs = Seq(logsA, logsB)
 
   /** check_table stage (S7/S8): register the warehouse tables in the
     * session catalog, idempotently (`db_postgres.py:93-111`). The
     * catalog is a metadata surface — reads/writes below go through the
     * partitioned parquet paths the upsert operator maintains. */
   def checkTables(): Unit = {
-    val crimeSchema = Schemas.crime.add("occ_year", IntegerType)
-    Catalog.createTableIfNotExists(spark, s"${tablePrefix}_crime_a", replicaA, crimeSchema, Seq("occ_year"))
-    Catalog.createTableIfNotExists(spark, s"${tablePrefix}_crime_b", replicaB, crimeSchema, Seq("occ_year"))
+    Catalog.createTableIfNotExists(spark, s"${tablePrefix}_crime_a", replicaA, Runner.CrimeSchema, Seq("occ_year"))
+    Catalog.createTableIfNotExists(spark, s"${tablePrefix}_crime_b", replicaB, Runner.CrimeSchema, Seq("occ_year"))
     Catalog.createTableIfNotExists(spark, s"${tablePrefix}_logs_a", s"$workDir/warehouse_a/logs", Schemas.logs)
     Catalog.createTableIfNotExists(spark, s"${tablePrefix}_logs_b", s"$workDir/warehouse_b/logs", Schemas.logs)
   }
@@ -69,12 +76,18 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
     Seq(s"${tablePrefix}_crime_a", s"${tablePrefix}_crime_b")
       .foreach(spark.catalog.recoverPartitions)
 
+  /** A replica's rows, read with the schema [[checkTables]] declares
+    * rather than one inferred from a footer: inference is a Spark job of
+    * its own on every read. */
+  private def readReplica(path: String): DataFrame =
+    spark.read.schema(Runner.ReplicaReadSchema).parquet(path)
+
   /** A1: CDC cursor — MAX(source_updated_on) from the crime data. */
   def crimeHighWater(): Option[java.sql.Timestamp] = {
     val p = new org.apache.hadoop.fs.Path(replicaA)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p) || fs.listStatus(p).isEmpty) None
-    else Option(spark.read.parquet(replicaA).agg(max("source_updated_on")).first().getTimestamp(0))
+    else Option(readReplica(replicaA).agg(max("source_updated_on")).first().getTimestamp(0))
   }
 
   /** One scheduled run through the offline page simulator (driver-side
@@ -114,25 +127,27 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
         Seq((from.toString, loadDate))
     }
     val cfg = Seq("load_date" -> loadDate, "mode" -> mode, "epoch_start" -> epochStart)
-    logsA.start(runId, ld, "SCHEDULED", mode, cfg)
-    logsB.start(runId, ld, "SCHEDULED", mode, cfg)
+    Par.inParallel(logs.size)(i => logs(i).start(runId, ld, "SCHEDULED", mode, cfg))
 
-    val status =
+    // a shared stage's failure fails every replica; an upsert or
+    // uniqueness failure fails only its own replica
+    val outcomes =
       try {
         extract(ranges)
-        loadReplicas(Seq(replicaA, replicaB), Seq(loadDate))
+        val loaded = loadReplicas(replicas, Seq(loadDate))
         refreshCatalog()
-        "SUCCESS"
-      } catch {
-        case e: Exception =>
-          org.slf4j.LoggerFactory.getLogger(getClass)
-            .warn(s"run $runId (load date $loadDate) failed", e)
-          "FAILED"
-      }
+        loaded
+      } catch { case e: Exception => logs.map(_ => Failure(e)) }
+    val statuses = outcomes.zip(replicas).map {
+      case (Success(_), _) => "SUCCESS"
+      case (Failure(e), replica) =>
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"run $runId (load date $loadDate) failed on $replica", e)
+        "FAILED"
+    }
 
-    logsA.finish(runId, ld, status)
-    logsB.finish(runId, ld, status)
-    status
+    Par.inParallel(logs.size)(i => logs(i).finish(runId, ld, statuses(i)))
+    if (statuses.forall(_ == "SUCCESS")) "SUCCESS" else "FAILED"
   }
 
   /** Paged extract of one query window into `pending`, with
@@ -180,30 +195,39 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
   /** Landing → transform → idempotent keyed upsert into each replica,
     * partition-scoped by occurrence year (only touched years rewrite),
     * then the dbt-style data tests (A5): crime_id must be a unique,
-    * non-null key or the run fails. The landing read, the transform and
+    * non-null key or the load fails. The landing read, the transform and
     * the not-null check run once for all replicas: the typed batch is
     * cached and every replica's upsert reads the cache. Checks are
     * SCOPED — not-null runs on the incoming batch, uniqueness on each
     * replica's rewritten partitions only (the upsert's cross-partition
     * stale-key rewrite guarantees a key lives in at most one partition,
     * so partition-local uniqueness ⇒ global uniqueness) — bounded jobs
-    * per load, not full-table scans. */
-  def loadReplicas(replicaPaths: Seq[String], loadDates: Seq[String]): Unit = {
+    * per load, not full-table scans.
+    *
+    * The replicas load concurrently, one driver thread each; they share
+    * only the cached batch, which is unpersisted once every replica has
+    * ended. A failure of a shared stage throws. Each replica's own
+    * upsert and uniqueness check end in that replica's outcome, in
+    * `replicaPaths` order, so one replica's failure leaves the others
+    * loaded. */
+  def loadReplicas(replicaPaths: Seq[String], loadDates: Seq[String]): Seq[Try[Unit]] = {
     val raw = LandingZone.read(spark, landingRoot, loadDates)
     val typed = Transform.crimeRecords(raw)
       .withColumn("occ_year", year(col("date_of_occurrence")))
       .cache() // reused by the check + each replica's upsert passes
     try {
       DataChecks.requireNotNull(typed, Seq("crime_id"))
-      replicaPaths.foreach { replicaPath =>
-        val touched = Upsert.upsertIntoParquet(
-          spark, replicaPath, typed,
-          keyCols = Seq("crime_id"), versionCol = "source_updated_on", partitionCol = "occ_year")
-        // uniqueness over EVERY partition this load rewrote — including
-        // those that held stale versions of moved keys
-        val touchedData = spark.read.parquet(replicaPath)
-          .filter(Upsert.partitionFilter("occ_year", touched))
-        DataChecks.requireUnique(touchedData, Seq("crime_id"))
+      Par.inParallel(replicaPaths.size) { i =>
+        Try {
+          val touched = Upsert.upsertIntoParquet(
+            spark, replicaPaths(i), typed,
+            keyCols = Seq("crime_id"), versionCol = "source_updated_on", partitionCol = "occ_year")
+          // uniqueness over EVERY partition this load rewrote — including
+          // those that held stale versions of moved keys
+          val touchedData = readReplica(replicaPaths(i))
+            .filter(Upsert.partitionFilter("occ_year", touched))
+          DataChecks.requireUnique(touchedData, Seq("crime_id"))
+        }
       }
     } finally typed.unpersist()
   }
@@ -217,7 +241,7 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
       val side = r.getString(1)
       val (log, replica) = if (side == "a") (logsA, replicaA) else (logsB, replicaB)
       log.start(runId, missedDate, "RECOVERY", "INCREMENT", Seq("recover" -> missedDate.toString))
-      loadReplicas(Seq(replica), Seq(missedDate.toString))
+      loadReplicas(Seq(replica), Seq(missedDate.toString)).foreach(_.get)
       log.finish(runId, missedDate, "SUCCESS")
     }
     if (diff.nonEmpty) refreshCatalog() // recovered partitions must be SQL-visible too
@@ -226,6 +250,12 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
 }
 
 object Runner {
+
+  /** The replicas' table schema, as the catalog declares it. */
+  private val CrimeSchema = Schemas.crime.add("occ_year", IntegerType)
+
+  /** The same fields, all nullable, for reading a replica's files. */
+  private val ReplicaReadSchema = StructType(CrimeSchema.map(_.copy(nullable = true)))
 
   /** Rows the paged path holds on the driver before it lands them: ten
     * of the reference's 5000-row pages, so driver memory stays bounded

@@ -36,6 +36,30 @@ class ParSpec extends SparkSpec {
     assert(partsOf(w) == before, "widen must read the cut's actual block count, not byte stats")
   }
 
+  test("inParallel waits for every builder before it rethrows the first failure in index order") {
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Par.inParallel(2) { i =>
+        if (i == 0) throw new IllegalStateException("builder 0")
+        Thread.sleep(500)
+        done.set(true)
+        i
+      }
+    }
+    assert(e.getMessage == "builder 0")
+    assert(done.get, "inParallel threw while builder 1 was still running")
+    // the later failure of builder 0 wins over the earlier one of builder 1
+    val first = intercept[RuntimeException] {
+      Par.inParallel(2) { i =>
+        if (i == 1) throw new RuntimeException("builder 1")
+        Thread.sleep(200)
+        throw new RuntimeException("builder 0")
+      }
+    }
+    assert(first.getMessage == "builder 0")
+    assert(Par.inParallel(3)(i => i * 2) == IndexedSeq(0, 2, 4))
+  }
+
   test("keyedPartitions derives width from measured bytes, clamped to the shuffle width") {
     val max = spark.sessionState.conf.numShufflePartitions
     assert(Reliability.keyedPartitions(spark, None) == max)

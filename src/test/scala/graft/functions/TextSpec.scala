@@ -133,10 +133,12 @@ class TextSpec extends SparkSpec {
 
   test("checkpoint roundtrip + clear") {
     val p = java.nio.file.Files.createTempDirectory("ckpt").toString + "/state.json"
-    val c = new Checkpoint(p)
+    val c = new Checkpoint(spark, p)
     assert(c.read().isEmpty)
     c.write(CheckpointState("2025-07-01", 7))
     assert(c.read().contains(CheckpointState("2025-07-01", 7)))
+    c.write(CheckpointState("2025-07-02", 3)) // the rename replaces the old file
+    assert(c.read().contains(CheckpointState("2025-07-02", 3)))
     c.clear()
     assert(c.read().isEmpty)
   }

@@ -228,6 +228,104 @@ class RunnerSpec extends SparkSpec {
     }
   }
 
+  private def rowsOf(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+
+  private def statusOf(log: graft.meta.RunLog, runId: String): String =
+    log.read().filter(col("run_id") === runId).select("status").first().getString(0)
+
+  /** Replace `dir` with a copy of `snapshot`. */
+  private def restore(snapshot: java.io.File, dir: String): Unit = {
+    FileUtils.deleteDirectory(new java.io.File(dir))
+    FileUtils.copyDirectory(snapshot, new java.io.File(dir))
+  }
+
+  test("a crash in replica A's upsert fails only A") {
+    val dir = java.nio.file.Files.createTempDirectory("runner").toString
+    val r = new Runner(spark, dir, epochStart = "2024-12-01", tablePrefix = "t13")
+    assert(r.run("run1", "2024-12-31", new ApiSimulator(totalRows = 60, pageSize = 30)) == "SUCCESS")
+    val snapshot = new java.io.File(dir + ".snapshot")
+    FileUtils.copyDirectory(new java.io.File(dir), snapshot)
+    // a clean INCREMENT counts replica A's steps and gives the post-load rows
+    val api = new ApiSimulator(totalRows = 90, pageSize = 30)
+    var status = ""
+    val (_, n) = FaultFs.run(spark, r.replicaA) { status = r.run("run2", "2025-01-05", api) }
+    val post = rowsOf(r.replicaA)
+    assert(status == "SUCCESS" && post.size == 90 && n > 1)
+    restore(snapshot, dir)
+    val k = n / 2
+    status = ""
+    val (_, calls) = FaultFs.run(spark, r.replicaA, k) { status = r.run("run2", "2025-01-05", api) }
+    assert(calls >= k && status == "FAILED", s"a crash at step $k of $n: $calls calls, status $status")
+    assert(rowsOf(r.replicaB) == post, "replica B must load although A crashed")
+    assert(statusOf(r.logsA, "run2") == "FAILED" && statusOf(r.logsB, "run2") == "SUCCESS")
+    assert(r.syncRepair("recovery1") == 1)
+    assert(rowsOf(r.replicaA) == post && rowsOf(r.replicaB) == post)
+    assert(SyncRepair.diff(r.logsA.read(), r.logsB.read()).count() == 0)
+  }
+
+  test("a load that failed in B alone is replayed by sync repair after a later INCREMENT") {
+    val dir = java.nio.file.Files.createTempDirectory("runner").toString
+    val r = new Runner(spark, dir, epochStart = "2026-01-01", tablePrefix = "t14")
+    // row i is updated on 2026-01-01 + (i % 28) days
+    val opts = Map("totalRows" -> "112", "pageSize" -> "28", "baseDate" -> "2026-01-01", "nDays" -> "28")
+    assert(r.runWithConnector("run1", "2026-01-10", opts) == "SUCCESS")
+    val snapshot = new java.io.File(dir + ".snapshot")
+    FileUtils.copyDirectory(new java.io.File(dir), snapshot)
+    // load 2 fetches days 10-20; crash B's upsert in the middle of it
+    var status = ""
+    val (_, n) = FaultFs.run(spark, r.replicaB) { status = r.runWithConnector("run2", "2026-01-20", opts) }
+    assert(status == "SUCCESS" && n > 1)
+    restore(snapshot, dir)
+    val k = n / 2
+    val (_, calls) = FaultFs.run(spark, r.replicaB, k) { status = r.runWithConnector("run2", "2026-01-20", opts) }
+    assert(calls >= k && status == "FAILED", s"a crash at step $k of $n: $calls calls, status $status")
+    assert(statusOf(r.logsA, "run2") == "SUCCESS" && statusOf(r.logsB, "run2") == "FAILED")
+    // load 3 starts from A's high-water day, 2026-01-20: it does not
+    // re-fetch load 2's rows updated on days 10-19
+    assert(r.runWithConnector("run3", "2026-01-28", opts) == "SUCCESS")
+    assert(rowsOf(r.replicaA).size == 112)
+    assert(r.syncRepair("recovery1") == 1)
+    assert(rowsOf(r.replicaB) == rowsOf(r.replicaA))
+  }
+
+  test("a connector INCREMENT runs a pinned number of Spark jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("runner").toString
+    val r = new Runner(spark, dir, epochStart = "2026-01-01", tablePrefix = "t15")
+    val opts = Map("totalRows" -> "112", "pageSize" -> "28", "baseDate" -> "2026-01-01", "nDays" -> "28")
+    assert(r.runWithConnector("run1", "2026-01-10", opts) == "SUCCESS")
+    val sc = spark.sparkContext
+    val group = s"runner-jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, "one connector INCREMENT")
+    try assert(r.runWithConnector("run2", "2026-01-20", opts) == "SUCCESS")
+    finally sc.clearJobGroup()
+    org.apache.spark.GraftSparkBridge.flushListeners(sc)
+    // the replica threads inherit the group, so every job counts here
+    assert(sc.statusTracker.getJobIdsForGroup(group).length == RunnerSpec.IncrementJobs)
+  }
+
+  test("a file: URI workDir keeps the checkpoint under workDir, and the resume completes") {
+    val local = java.nio.file.Files.createTempDirectory("runner").toString
+    val r = new Runner(spark, s"file:$local", epochStart = "2025-07-07", tablePrefix = "t16")
+    val ckpt = new java.io.File(local, "checkpoint.json")
+    var failures = 0
+    var resumed: Option[(Int, Boolean)] = None // (resume page, checkpoint file present)
+    val api = new ApiSimulator(totalRows = 300, pageSize = 100) {
+      override def fetchPages(s: String, e: String, resume: Int): Iterator[(Int, Seq[Row])] = {
+        if (failures > 0) resumed = Some((resume, ckpt.exists()))
+        super.fetchPages(s, e, resume).map { case (pg, rows) =>
+          if (pg == 1 && failures == 0) { failures += 1; throw ApiPageFetchError(pg, s) }
+          (pg, rows)
+        }
+      }
+    }
+    assert(r.run("run1", "2025-07-07", api) == "SUCCESS")
+    assert(resumed.contains((1, true)), s"resume (page, checkpoint under workDir): $resumed")
+    assert(!ckpt.exists() && r.checkpoint.read().isEmpty)
+    val ids = landedIds(r, "2025-07-07")
+    assert(ids.size == 300 && ids.distinct.size == 300)
+  }
+
   test("ConfigMain drives a full run from a properties file") {
     val dir = java.nio.file.Files.createTempDirectory("runner-cfg").toString
     val props = new java.util.Properties()
@@ -249,4 +347,14 @@ class RunnerSpec extends SparkSpec {
     val e = intercept[RuntimeException](ConfigMain.run(spark, bad))
     assert(e.getMessage.contains("workDir"))
   }
+}
+
+object RunnerSpec {
+
+  /** Jobs of one connector INCREMENT in the test session: the high-water
+    * read, log starts and finishes, the landing write, the shared
+    * not-null check, and each replica's upsert and uniqueness check.
+    * Reading the replicas with their declared schema saves three
+    * schema-inference jobs (38 with inferred reads). */
+  val IncrementJobs = 35
 }
