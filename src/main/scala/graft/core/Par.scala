@@ -27,9 +27,8 @@ object Par {
     * so no builder is still submitting jobs after its caller has moved
     * on. The pool's threads are created by this call on the calling
     * thread, so they inherit its Spark local properties (job group,
-    * scheduler pool). A single builder runs inline on the calling
-    * thread. */
-  def inParallel[T](n: Int)(build: Int => T): IndexedSeq[T] = if (n == 1) IndexedSeq(build(0)) else {
+    * scheduler pool). */
+  def inParallel[T](n: Int)(build: Int => T): IndexedSeq[T] = {
     import java.util.concurrent.{Callable, ExecutionException, Executors}
     import scala.util.{Failure, Success, Try}
     // a dedicated fixed pool sized n (r22, advice): the builders BLOCK

@@ -17,6 +17,15 @@ import org.apache.spark.sql.SparkSession
   * corrupt resume state. The filesystem comes from the path, so a
   * `file:` URI or a remote store resolves. Driver-side only —
   * checkpoint state is scalar, never a distributed dataset.
+  *
+  * Reads, the temp file's create and `clear` go through the Hadoop
+  * `FileSystem` bound to the scheme (`fs.<scheme>.impl`). The replacing
+  * rename goes through `FileContext`, because `FileSystem.rename` does
+  * not replace an existing file on every store; so a scheme also needs
+  * an `AbstractFileSystem` binding (`fs.AbstractFileSystem.<scheme>.impl`,
+  * set in Hadoop's defaults for `file:` and `hdfs:` among others), and
+  * a wrapper that overrides only the `FileSystem` (a test fault
+  * filesystem, say) does not see that rename.
   */
 final case class CheckpointState(lastDate: String, lastPage: Int)
 

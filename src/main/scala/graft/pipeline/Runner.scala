@@ -210,7 +210,7 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
     * upsert and uniqueness check end in that replica's outcome, in
     * `replicaPaths` order, so one replica's failure leaves the others
     * loaded. */
-  def loadReplicas(replicaPaths: Seq[String], loadDates: Seq[String]): Seq[Try[Unit]] = {
+  private def loadReplicas(replicaPaths: Seq[String], loadDates: Seq[String]): Seq[Try[Unit]] = {
     val raw = LandingZone.read(spark, landingRoot, loadDates)
     val typed = Transform.crimeRecords(raw)
       .withColumn("occ_year", year(col("date_of_occurrence")))
