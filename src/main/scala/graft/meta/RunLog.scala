@@ -76,11 +76,6 @@ class RunLog(spark: SparkSession, path: String) {
       .withColumn("status", lit(status))
       .withColumn("end_time", lit(utcTime())))
 
-  /** A1: high-water mark — max load_date with status in the given set. */
-  def maxLoadDate(statuses: Seq[String]): Option[java.sql.Date] = {
-    val r = read().filter(col("status").isin(statuses: _*)).agg(max("load_date")).first()
-    Option(r.getDate(0))
-  }
 }
 
 object RunLog {

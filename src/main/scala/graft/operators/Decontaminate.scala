@@ -75,59 +75,6 @@ object Decontaminate {
         expr("CASE WHEN n_grams > 0 AND n_hit * 10 >= n_grams THEN 1 ELSE 0 END"))
   }
 
-  /** The big-eval-set posture of [[ngramContamination]]: identical
-    * result (spec-pinned bit-equal), different shuffle budget. The
-    * broadcast form assumes eval grams fit an executor as an exact hash
-    * table; a consortium-sized eval suite (hundreds of MBs of distinct
-    * grams) breaks that, and the exact semi join degrades to shuffling
-    * the ENTIRE exploded train gram stream. Here the train stream is
-    * first prefiltered map-side through the eval set's Bloom filter
-    * ([[BloomPrune.semiFilter]] — tens of MB broadcast regardless of
-    * key count, probed inside whole-stage codegen), so only true hits
-    * plus an `fpp` sliver reach the exact shuffle semi join that
-    * follows; false positives are absorbed there, false negatives
-    * cannot occur. For a clean corpus the shuffle shrinks from
-    * every-gram-of-every-doc to ~nothing.
-    *
-    * @param expectedEvalGrams sizes the filter — overestimate rather
-    *                          than under (undersizing degrades fpp,
-    *                          never correctness). */
-  def ngramContaminationBloom(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      isEval: Column,
-      expectedEvalGrams: Long,
-      fpp: Double = 0.01): DataFrame = {
-    val sh = Par.widen(
-        docs.select(col(idCol), coalesce(isEval, lit(false)).as("is_eval"),
-          Text.tokens(lower(col(textCol))).as("tk")))
-      .select(col(idCol), col("is_eval"), Text.shingles(col("tk"), n).as("shg"))
-    val grams = sh.select(col(idCol), col("is_eval"), explode(col("shg")).as("gram"))
-    // materialize the eval gram set ONCE: it is consumed twice (the
-    // bloom build is its own action inside semiFilter, then the exact
-    // semi join) and each consumer would otherwise re-derive the full
-    // corpus tokenize/shingle/distinct from source
-    val evalGrams = graft.core.Reliability.cut(
-      grams.filter(col("is_eval")).select("gram").distinct())
-    val trainGrams = grams.filter(!col("is_eval"))
-    val hits = BloomPrune
-      .semiFilter(trainGrams, evalGrams, "gram", "gram", expectedEvalGrams, fpp)
-      .join(evalGrams, Seq("gram"), "left_semi") // exact; NO broadcast hint — the shuffle the bloom pass just bounded
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_hit"))
-    sh
-      .filter(!col("is_eval"))
-      .select(col(idCol), size(col("shg")).cast("long").as("n_grams"))
-      .join(hits, Seq(idCol), "left")
-      .select(col(idCol), col("n_grams"), coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-      .withColumn("contam_e6",
-        expr("CASE WHEN n_grams > 0 THEN (n_hit * 1000000L) div n_grams ELSE 0L END"))
-      .withColumn("contaminated",
-        expr("CASE WHEN n_grams > 0 AND n_hit * 10 >= n_grams THEN 1 ELSE 0 END"))
-  }
-
   /** Semantic (embedding-space) decontamination: for every training
     * vector, the max cosine against the held-out eval vectors and the
     * nearest eval id; contaminated when max cosine ≥ `threshold`.

@@ -48,25 +48,6 @@ object Dedup {
   def hashA(j: Int): Long = (2654435761L * (j + 1)) % P
   def hashB(j: Int): Long = (40503L * (j + 7) + 1) % P
 
-  /** Column: base shingle hashes (md5 once per shingle, mod P). */
-  def minhashBase(shingleCol: Column): Column =
-    transform(shingleCol, s => pmod(Hashing.md5Long(s, 3), lit(P)))
-
-  /** Column: minhash signature (array of NUM_HASHES longs) from the
-    * precomputed base-hash column — md5 runs once per shingle, not once
-    * per hash function. Empty-shingle rows get P (= "inf"). */
-  def minhashSignatureFromBase(baseCol: Column): Column =
-    array((0 until numHashes).map { j =>
-      coalesce(
-        array_min(transform(baseCol, h => pmod(h * hashA(j) + hashB(j), lit(P)))),
-        lit(P)
-      )
-    }: _*)
-
-  /** Column: minhash signature from a distinct-shingle array column. */
-  def minhashSignature(shingleCol: Column): Column =
-    minhashSignatureFromBase(minhashBase(shingleCol))
-
   /** Signatures via explode + ONE fused aggregate: md5 runs once per
     * (doc, shingle); the 64 universal-hash minima live in a single
     * [[graft.functions.MinHashSig]] TypedImperativeAggregate state
@@ -75,9 +56,7 @@ object Dedup {
     * shuffle. Replaces 64 separate `min` aggregate columns: same
     * values (min over the same hash set), but the planner carries one
     * aggregate function instead of 64 and the update is one loop
-    * instead of 64 expression evaluations per shingle. The
-    * per-row-expression variant [[minhashSignature]] remains for small
-    * in-row use. */
+    * instead of 64 expression evaluations per shingle. */
   def minhashSignatures(sh: DataFrame): DataFrame = {
     val exploded = sh
       .select(col("id"), explode(col("sh")).as("s"))

@@ -34,8 +34,6 @@ object IncrementalAgg {
       mins: Seq[String] = Nil,
       maxs: Seq[String] = Nil) {
     require(keys.nonEmpty, "at least one key column")
-    def stateCols: Seq[String] =
-      keys ++ Seq("n_rows") ++ sums.map("sum_" + _) ++ mins.map("min_" + _) ++ maxs.map("max_" + _)
   }
 
   /** Partial (combinable) aggregate of one batch: one row per key. */

@@ -116,26 +116,6 @@ object Similarity {
     cents
   }
 
-  /** [[ivfTopK]] against an externally trained quantizer (e.g.
-    * [[trainCentroids]]): same assignment/probe/search shape, centroids
-    * supplied as (cid, cvec, cnrm). */
-  def ivfTopKWith(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      cents: DataFrame,
-      nProbe: Int,
-      nQueries: Int,
-      k: Int
-  ): DataFrame = {
-    val base = Par.widen(emb).select(
-      col(idCol).as("id"),
-      col(vecCol).as("vec"),
-      VectorExpressions.normF(col(vecCol)).as("nrm")
-    )
-    ivfSearch(base, cents, nProbe, nQueries, k)
-  }
-
   /** ANN top-k via IVF (inverted-file) clustering: a small coarse
     * quantizer (the first `nCentroids` corpus vectors as centroids —
     * deterministic, so the oracle replicates it) partitions the corpus

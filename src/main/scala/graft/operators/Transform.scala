@@ -1,36 +1,9 @@
 package graft.operators
 
 import graft.core.Schemas
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-
-/** Typed row of the warehouse `crime` table (SURVEY.md §1.2) — the
-  * `Dataset[CrimeRecord]` surface for callers who want compile-time
-  * column safety; the untyped [[Transform.crimeRecords]] frame remains
-  * the primary (schema-driven) API. */
-final case class CrimeRecord(
-    crime_id: String,
-    case_num: Option[String],
-    date_of_occurrence: Option[java.sql.Timestamp],
-    block: Option[String],
-    iucr: Option[String],
-    primary_description: Option[String],
-    secondary_description: Option[String],
-    location_description: Option[String],
-    arrest: Option[Boolean],
-    domestic: Option[Boolean],
-    beat: Option[Int],
-    district: Option[Int],
-    ward: Option[Int],
-    community_area: Option[Int],
-    fbi_code: Option[String],
-    x_coordinate: Option[Int],
-    y_coordinate: Option[Int],
-    latitude: Option[Double],
-    longitude: Option[Double],
-    source_updated_on: Option[java.sql.Timestamp]
-)
 
 /** The landing-zone → warehouse record transform (P1–P4).
   *
@@ -64,12 +37,4 @@ object Transform {
     renamed.select(casts.toIndexedSeq: _*)
   }
 
-  /** Typed variant: same transform, `Dataset[CrimeRecord]` out. The
-    * encoder verifies the schema contract at conversion time, so a
-    * drifted column name/type fails here instead of deep in a plan. */
-  def crimeDataset(raw: DataFrame): Dataset[CrimeRecord] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    crimeRecords(raw).as[CrimeRecord]
-  }
 }

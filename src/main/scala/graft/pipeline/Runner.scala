@@ -25,12 +25,13 @@ import scala.util.{Failure, Success, Try}
   * reference lands each extracted batch in one upload, `helper.py:67-86`)
   * → transform → keyed upsert into TWO parquet replicas concurrently,
   * each followed by its post-upsert data tests (A5) → log finalize,
-  * each replica's log with its own outcome → sync-validate (anti-join)
-  * → replay missed partitions (ST5). The reference loads its two
-  * warehouses independently too (`db_postgres.py:158-203`): each
-  * replica's log start, upsert chain and log finish run on their own
-  * driver thread ([[Par.inParallel]]), so the two chains of short Spark
-  * jobs overlap instead of queueing. Other thread/process boundaries of
+  * each replica's log with its own outcome → sync-validate (one
+  * aggregation over both logs, [[SyncRepair.diff]]) → replay missed
+  * partitions (ST5). The reference loads its two warehouses
+  * independently too (`db_postgres.py:158-203`): each replica's log
+  * start, upsert chain and log finish run on their own driver thread
+  * ([[Par.inParallel]]), so the two chains of short Spark jobs overlap
+  * instead of queueing. Other thread/process boundaries of
   * the DAG become Spark job boundaries; branching is `if` on collected
   * scalars (the only `collect`s are scalar cursors — 100 TB posture).
   *
@@ -232,8 +233,9 @@ class Runner(spark: SparkSession, workDir: String, epochStart: String = "2001-01
     } finally typed.unpersist()
   }
 
-  /** validate_sync + sync_* (ST5): anti-join the replica logs, replay
-    * missed load_dates into the lagging replica, mark RECOVERY rows. */
+  /** validate_sync + sync_* (ST5): diff the replica logs' SUCCESS
+    * load_dates ([[SyncRepair.diff]]), replay missed load_dates into the
+    * lagging replica, mark RECOVERY rows. */
   def syncRepair(runId: String): Int = {
     val diff = SyncRepair.diff(logsA.read(), logsB.read()).collect()
     diff.foreach { r =>

@@ -1,129 +1,29 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import java.sql.Timestamp
-
-/** Open-session accumulator for [[EventStream.sessionizeStateful]]. */
-final case class OpenSession(startMs: Long, lastMs: Long, n: Long, total: Double)
-
-/** Per-user state: disjoint open sessions ordered by start (more than
-  * one only while late data may still bridge or precede them). */
-final case class OpenSessions(sessions: Seq[OpenSession])
-
-/** A finalized session emitted by [[EventStream.sessionizeStateful]]. */
-final case class SessionRecord(
-    user_id: Long,
-    session_start: Timestamp,
-    session_end: Timestamp,
-    n_events: Long,
-    total: Double
-)
-
-/** Structured Streaming surface over the `events` stream (ST1–ST4 +
-  * the declared tumbling and session windows, SURVEY.md §2.7; the
-  * sliding window is the batch query st02_sliding).
+/** Structured Streaming surface over the `events` stream (SURVEY.md
+  * §2.7): the stream-stream interval join, the per-hour windowed
+  * sketches (heavy hitters, quantiles, distinct users) with their
+  * contract reports, and the stored-fold sinks that maintain sketch and
+  * index state from a stream. The tumbling, sliding and session windows
+  * are Spark's own `window`/`session_window` aggregations, run as the
+  * batch queries st01–st03.
   *
-  * The reference is batch-incremental CDC; this module preserves those
-  * semantics (file source + idempotent `foreachBatch` upsert gives the
-  * same exactly-once-ish guarantee as the reference's keyed MERGE +
-  * delete-on-success, `crime_etl.py:296-301`) and adds true streaming
-  * windows. Watermarks bound state; at scale the only stateful shuffle
-  * is keyed by (window, event_type) / session key.
+  * The reference is batch-incremental CDC; the sinks here preserve
+  * those semantics (file source + idempotent `foreachBatch` fold gives
+  * the same exactly-once-ish guarantee as the reference's keyed MERGE +
+  * delete-on-success, `crime_etl.py:296-301`). Watermarks bound state;
+  * at scale the only stateful shuffle is keyed by window or join key.
   *
-  * Batch twins of each aggregation live in `analytics.Queries`
-  * (st1/st2/st3) where the DuckDB oracle checks them; streaming
-  * execution is covered by `StreamingSpec` via the memory sink.
+  * Batch twins live in `analytics.Queries` (st04, st07–st09) where the
+  * DuckDB oracle checks them; streaming execution is covered by
+  * `EventStreamSpec` through the memory sink and by the rollup-sink
+  * specs through `foreachBatch`.
   */
 object EventStream {
-
-  /** File-source stream over a parquet events directory. */
-  def readEvents(spark: SparkSession, dir: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
-
-  /** Tumbling 1-hour counts/sums per event_type. */
-  def tumblingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("total"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("total"))
-
-  /** Session windows (30-minute gap) per user. The watermark delay is
-    * the max tolerated event-time disorder: session state older than it
-    * is finalized, so late-beyond-delay events are dropped rather than
-    * merged (pick the delay per source disorder, not per session gap). */
-  def sessionCounts(events: DataFrame, delay: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", delay)
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum("value").as("total"))
-      .select(
-        col("session_window.start").as("session_start"),
-        col("user_id"), col("n_events"), col("total"))
-
-  /** Custom sessionization state machine via `flatMapGroupsWithState`
-    * (the KeyValueGroupedDataset custom-state surface — semantics
-    * `session_window` can't express: each session EMITS exactly once,
-    * when the WATERMARK passes its last event + gap, so late
-    * within-watermark data can still extend, bridge, or precede open
-    * sessions before they finalize).
-    *
-    * State per user is a short list of disjoint open session intervals
-    * (more than one only while late data could still arrive between
-    * them): an event merges into the interval it falls strictly within
-    * a gap of — on either side — then adjacent intervals that the event
-    * bridged coalesce. Intervals whose `last + gap` the watermark has
-    * passed emit and leave state, via event-time timeout or at the next
-    * batch. Watermark bounds late data AND state: a user's intervals
-    * span at most delay + gap of event time, and state is O(active
-    * users), not O(events). The only shuffle is the groupByKey hash
-    * partition on user_id.
-    */
-  def sessionizeStateful(events: DataFrame, gapMinutes: Int = 30, delay: String = "2 hours"): Dataset[SessionRecord] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapMs = gapMinutes * 60L * 1000L
-    events
-      .withWatermark("ts", delay)
-      .select(col("user_id").cast("long"), col("ts"), col("value").cast("double"))
-      .as[(Long, Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[OpenSessions, SessionRecord](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user, it, state) =>
-          def toRec(s: OpenSession) =
-            SessionRecord(user, new Timestamp(s.startMs), new Timestamp(s.lastMs), s.n, s.total)
-          def merge(a: OpenSession, b: OpenSession) = OpenSession(
-            math.min(a.startMs, b.startMs), math.max(a.lastMs, b.lastMs), a.n + b.n, a.total + b.total)
-          // strict < on BOTH sides so in-order and late delivery of the
-          // same events sessionize identically at the exact-gap boundary
-          def near(s: OpenSession, t: Long) = t > s.startMs - gapMs && t < s.lastMs + gapMs
-
-          var open: Seq[OpenSession] =
-            state.getOption.map(_.sessions).getOrElse(Seq.empty)
-          if (!state.hasTimedOut) {
-            it.toSeq.sortBy(_._2.getTime).foreach { case (_, ts, v) =>
-              val t = ts.getTime
-              val (touching, rest) = open.partition(near(_, t))
-              // the event's own interval coalesced with every interval it bridges
-              val grown = touching.foldLeft(OpenSession(t, t, 1, v))(merge)
-              open = (rest :+ grown).sortBy(_.startMs)
-            }
-          }
-          // finalize: intervals the watermark has passed can no longer
-          // change — emit exactly once, drop from state
-          val wm = state.getCurrentWatermarkMs()
-          val (done, stillOpen) = open.partition(s => s.lastMs + gapMs <= wm)
-          if (stillOpen.isEmpty) state.remove()
-          else {
-            state.update(OpenSessions(stillOpen))
-            state.setTimeoutTimestamp(math.max(stillOpen.map(_.lastMs).min + gapMs, wm + 1))
-          }
-          done.sortBy(_.startMs).map(toRec).iterator
-      }
-  }
 
   /** Stream-stream interval join (click-to-impression attribution
     * shape): join two event streams on the key with an event-time range
@@ -159,28 +59,6 @@ object EventStream {
         col("click_id"),
         (unix_micros(col("click_ts")) - unix_micros(col("imp_ts"))).as("delta_us"))
   }
-
-  /** Stream-static enrichment: join the event stream against a
-    * slowly-changing batch dimension. The static side is re-resolved
-    * every micro-batch (Spark re-plans the batch relation per trigger),
-    * so a dimension refreshed on disk is picked up without restarting
-    * the stream; the broadcast keeps the stream side shuffle-free —
-    * the streaming twin of j01's broadcast date-dim enrichment. Left
-    * join: an event never blocks on a missing dim row. */
-  def enrichWithDim(
-      events: DataFrame,
-      dim: DataFrame,
-      eventKey: org.apache.spark.sql.Column,
-      dimKey: org.apache.spark.sql.Column): DataFrame =
-    events.join(broadcast(dim), eventKey === dimKey, "left")
-
-  /** Streaming exact dedup: drop re-deliveries of the same event_id
-    * arriving within the watermark window (the at-least-once →
-    * effectively-once adapter in front of any non-idempotent sink;
-    * state per key expires with the watermark, so memory is bounded by
-    * the delay window, not the stream). */
-  def dedupStream(events: DataFrame, delay: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", delay).dropDuplicatesWithinWatermark("event_id")
 
   /** Per-hour dominant-user sketch: the mergeable Misra–Gries
     * aggregate ([[graft.functions.FreqSketch]]) keyed by tumbling
@@ -353,16 +231,6 @@ object EventStream {
         (col("le") >= col("n") * phi - slack &&
           col("lt") + 1 <= col("n") * phi + slack).as("rank_ok"))
   }
-
-  /** Run a streaming aggregation to a memory sink until the source
-    * drains; returns the sink table name. Local smoke-test entry. */
-  def runToMemory(df: DataFrame, name: String, mode: String = "append"): StreamingQuery =
-    df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   /** Maintained STORED quantile state fed by a stream — the
     * unbounded-history sibling of [[windowQuantileSketch]] (which keeps

@@ -34,8 +34,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Ids are assumed unique on the stream (the d02 contract); a
   * re-delivered id would re-enter band state and duplicate its future
-  * pairs — feed through [[EventStream.dedupStream]] first if the
-  * source can re-deliver.
+  * pairs — drop re-deliveries first (`dropDuplicatesWithinWatermark`
+  * on the id) if the source can re-deliver.
   *
   * State-schema note (r15): the band state changed from a struct
   * sequence to a packed `array<bigint>`. A streaming checkpoint

@@ -25,12 +25,10 @@ class RunLogSpec extends SparkSpec {
     // storage is append-only: both transitions persist as raw rows
     assert(spark.read.parquet(s"$dir/logs").count() == 2)
 
-    // a second run coexists; high-water mark sees only SUCCESS rows
+    // a second run coexists
     val d2 = java.sql.Date.valueOf("2026-01-12")
     log.start("r2", d2, "SCHEDULED", "INCREMENT", Seq("pagesize" -> "5000"))
     assert(log.read().count() == 2)
-    assert(log.maxLoadDate(Seq("SUCCESS")).contains(d1))
-    assert(log.maxLoadDate(Seq("SUCCESS", "RUNNING")).contains(d2))
 
     // re-finishing is idempotent at the resolved level (last wins)
     log.finish("r1", d1, "FAILED")

@@ -64,33 +64,6 @@ class DecontaminateSpec extends SparkSpec {
     assert(out == Set(1L, 2L, 3L, 4L))
   }
 
-  // --- bloom-prefiltered variant (big-eval-set posture) -------------------
-
-  test("the bloom path is bit-equal to the broadcast path, including under forced false positives") {
-    val base = Decontaminate
-      .ngramContamination(docs, "doc_id", "text", n = 3, isEval = col("doc_id") === 0)
-    // honest sizing AND a deliberately degraded filter (fpp 0.5 on an
-    // undersized key estimate — many false positives reach the exact
-    // join, which must absorb every one of them)
-    for ((exp, fpp) <- Seq((1000L, 0.01), (2L, 0.5))) {
-      val bloom = Decontaminate
-        .ngramContaminationBloom(docs, "doc_id", "text", n = 3,
-          isEval = col("doc_id") === 0, expectedEvalGrams = exp, fpp = fpp)
-      assert(bloom.exceptAll(base).isEmpty && base.exceptAll(bloom).isEmpty,
-        s"bloom path diverged at expectedEvalGrams=$exp fpp=$fpp")
-    }
-  }
-
-  test("a corpus-scale bloom sweep agrees with the broadcast path at sf0.001") {
-    val corpus = graft.core.Tables.documents(spark, sf0001)
-    val base = Decontaminate
-      .ngramContamination(corpus, "doc_id", "text", n = 5, isEval = col("doc_id") % 19 === 0)
-    val bloom = Decontaminate
-      .ngramContaminationBloom(corpus, "doc_id", "text", n = 5,
-        isEval = col("doc_id") % 19 === 0, expectedEvalGrams = 10000L)
-    assert(bloom.exceptAll(base).isEmpty && base.exceptAll(bloom).isEmpty)
-  }
-
   // --- semantic (embedding-space) contamination ---------------------------
 
   // eval vecs 0 (e1 axis) and 4 (e2 axis); vec 1 ≈ eval 0 (cos ~0.995),

@@ -46,7 +46,7 @@ class IncrementalAggSpec extends SparkSpec with graft.CrashPoints {
     val dir = java.nio.file.Files.createTempDirectory("incagg").toString + "/state"
     IncrementalAgg.update(spark, dir, batch(6, 200), spec)
     val st = IncrementalAgg.update(spark, dir, batch(7, 200), spec)
-    assert(st.columns.toSeq == spec.stateCols)
+    assert(st.columns.toSeq == Seq("k", "n_rows", "sum_v", "min_v", "max_v"))
     assert(st.groupBy("k").count().filter($"count" > 1).count() === 0)
   }
 

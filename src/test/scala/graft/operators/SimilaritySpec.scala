@@ -99,7 +99,8 @@ class SimilaritySpec extends SparkSpec with graft.CrashPoints {
     // with every cell probed, trained-IVF top-k == brute-force top-k
     val bf = Similarity.bruteForceTopK(df, "vec_id", "embedding", 2, 3)
       .select("query_id", "cand_id", "rk").as[(Long, Long, Int)].collect().toSet
-    val ivf = Similarity.ivfTopKWith(df, "vec_id", "embedding", cents, nProbe = 3, nQueries = 2, k = 3)
+    val idx = Similarity.prepareIvfIndexWith(df, "vec_id", "embedding", cents)
+    val ivf = Similarity.ivfTopKIndexed(df.filter($"vec_id" < 2), "vec_id", "embedding", idx, nProbe = 3, k = 3)
       .select("query_id", "cand_id", "rk").as[(Long, Long, Int)].collect().toSet
     assert(ivf == bf)
   }

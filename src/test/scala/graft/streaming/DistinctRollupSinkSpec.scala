@@ -54,7 +54,7 @@ class DistinctRollupSinkSpec extends SparkSpec {
       (0 until 50).map(_ => (s"t${rnd.nextInt(2)}", rnd.nextInt(40).toLong))
     }
     def sink() = EventStream.distinctRollupSink(
-      EventStream.readEvents(spark, in, schema), state, ckpt,
+      StreamKit.readEvents(spark, in, schema), state, ckpt,
       "user_id", "event_type", seed = 7, k = 8)
     val t0 = System.currentTimeMillis() - 60000
 
@@ -110,11 +110,11 @@ class DistinctRollupSinkSpec extends SparkSpec {
     land(in, "b0.parquet", System.currentTimeMillis() - 60000,
       (0 until 30).map(i => ("t0", i.toLong)))
     EventStream.distinctRollupSink(
-      EventStream.readEvents(spark, in, schema), s"$base/state", s"$base/ckpt",
+      StreamKit.readEvents(spark, in, schema), s"$base/state", s"$base/ckpt",
       "user_id", "event_type", seed = 7, k = 8).awaitTermination(60000)
     val e = intercept[IllegalArgumentException] {
       EventStream.distinctRollupSink(
-        EventStream.readEvents(spark, in, schema), s"$base/state", s"$base/ckpt2",
+        StreamKit.readEvents(spark, in, schema), s"$base/state", s"$base/ckpt2",
         "user_id", "event_type", seed = 7, k = 8)
     }
     assert(e.getMessage.contains("distinctRollupSink") && e.getMessage.contains("checkpoint"))

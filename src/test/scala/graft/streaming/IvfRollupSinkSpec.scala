@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SparkSpec
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The streaming-sink row for the ANN index family
@@ -47,7 +46,7 @@ class IvfRollupSinkSpec extends SparkSpec {
       $"vec_id".as("cid"), $"embedding".as("cvec"),
       graft.functions.VectorExpressions.normF($"embedding").as("cnrm"))
     def sink() = EventStream.ivfRollupSink(
-      EventStream.readEvents(spark, in, schema), state, ckpt,
+      StreamKit.readEvents(spark, in, schema), state, ckpt,
       "vec_id", "embedding", q, nBuckets = 8)
     def rows(path: String) = spark.read.parquet(path).select("id", "cluster")
       .as[(Long, Long)].collect().sorted.toSeq
@@ -93,7 +92,7 @@ class IvfRollupSinkSpec extends SparkSpec {
     // fresh checkpoint against the live state refuses under the sink's name
     val e = intercept[IllegalArgumentException] {
       EventStream.ivfRollupSink(
-        EventStream.readEvents(spark, in, schema), state, s"$base/ckpt2",
+        StreamKit.readEvents(spark, in, schema), state, s"$base/ckpt2",
         "vec_id", "embedding", q, nBuckets = 8)
     }
     assert(e.getMessage.contains("ivfRollupSink") && e.getMessage.contains("checkpoint"))
@@ -107,7 +106,7 @@ class IvfRollupSinkSpec extends SparkSpec {
     val corpus = vecs(0 until 60)
     val cb = Quantize.pqCodebook(corpus, "vec_id", "embedding", 2, 2, 6)
     def sink() = EventStream.pqRollupSink(
-      EventStream.readEvents(spark, in, schema), state, ckpt,
+      StreamKit.readEvents(spark, in, schema), state, ckpt,
       "vec_id", "embedding", cb, nSub = 2, subDim = 2, nBuckets = 8)
     def rows(path: String) = spark.read.parquet(path).select("cand_id", "sub", "code")
       .as[(Long, Long, Long)].collect().sorted.toSeq

@@ -41,7 +41,7 @@ class NearDupStreamSpec extends SparkSpec {
       slice.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(dir)
     }
     val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = EventStream.runToMemory(
+    val q = StreamKit.runToMemory(
       NearDupStream.simhashDupPairs(stream, "doc_id", "text", 3).toDF(), "neardup_pairs", "append")
     q.awaitTermination(60000)
     val streamed = spark.table("neardup_pairs")
@@ -86,7 +86,7 @@ class NearDupStreamSpec extends SparkSpec {
         .toDF("doc_id", "text", "ts").coalesce(1).write.mode("append").parquet(dir)
     }
     val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = EventStream.runToMemory(
+    val q = StreamKit.runToMemory(
       NearDupStream.simhashDupPairsWithin(stream, "doc_id", "text", "ts", 3, horizonMs).toDF(),
       "neardup_ttl_pairs", "append")
     q.awaitTermination(60000)
@@ -152,7 +152,7 @@ class NearDupStreamSpec extends SparkSpec {
         .toDF("doc_id", "text", "ts").coalesce(1).write.mode("append").parquet(dir)
     }
     val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = EventStream.runToMemory(
+    val q = StreamKit.runToMemory(
       NearDupStream.simhashDupPairsWithin(
         stream, "doc_id", "text", "ts", 3, horizonMs, allowedLatenessMs = 10000L).toDF(),
       "neardup_late_pairs", "append")
@@ -196,7 +196,7 @@ class NearDupStreamSpec extends SparkSpec {
       val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
       // runToMemory starts with a fresh (temp) checkpoint each time —
       // exactly the restart mode the recipe prescribes
-      val q = EventStream.runToMemory(
+      val q = StreamKit.runToMemory(
         NearDupStream.simhashDupPairsWithin(stream, "doc_id", "text", "ts", 3, horizonMs).toDF(),
         sink, "append")
       q.awaitTermination(60000)

@@ -28,7 +28,7 @@ class QuantileRollupSinkSpec extends SparkSpec {
   ))
 
   // one parquet file per micro-batch, ordered by modification time
-  // (readEvents sets maxFilesPerTrigger=1)
+  // (StreamKit.readEvents sets maxFilesPerTrigger=1)
   private def land(dir: String, name: String, modTime: Long, rows: Seq[(String, Double)]): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("qbatch").toString
     toBatch(rows).coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -57,7 +57,7 @@ class QuantileRollupSinkSpec extends SparkSpec {
       (0 until 60).map(_ => (s"t${rnd.nextInt(2)}", (rnd.nextInt(50) * 3).toDouble))
     }
     def sink() = EventStream.quantileRollupSink(
-      EventStream.readEvents(spark, in, schema), state, ckpt,
+      StreamKit.readEvents(spark, in, schema), state, ckpt,
       "value", "event_type", k = 8, seed = 7, salts = 2)
     val t0 = System.currentTimeMillis() - 60000
 
@@ -113,14 +113,14 @@ class QuantileRollupSinkSpec extends SparkSpec {
     land(in, "b0.parquet", System.currentTimeMillis() - 60000,
       (0 until 30).map(i => ("t0", i.toDouble)))
     EventStream.quantileRollupSink(
-      EventStream.readEvents(spark, in, schema), s"$base/state", s"$base/ckpt",
+      StreamKit.readEvents(spark, in, schema), s"$base/state", s"$base/ckpt",
       "value", "event_type", k = 8, seed = 7, salts = 2).awaitTermination(60000)
     // new checkpointDir, same statePath: batchIds would restart at 0 and
     // every micro-batch would be skipped as a replay — the identity
     // sidecar turns that silent loss into an immediate failure
     val e = intercept[IllegalArgumentException] {
       EventStream.quantileRollupSink(
-        EventStream.readEvents(spark, in, schema), s"$base/state", s"$base/ckpt2",
+        StreamKit.readEvents(spark, in, schema), s"$base/state", s"$base/ckpt2",
         "value", "event_type", k = 8, seed = 7, salts = 2)
     }
     assert(e.getMessage.contains("quantileRollupSink") && e.getMessage.contains("checkpoint"))
@@ -137,7 +137,7 @@ class QuantileRollupSinkSpec extends SparkSpec {
     land(in, "b0.parquet", System.currentTimeMillis() - 60000,
       (0 until 30).map(i => ("t0", i.toDouble)))
     def sink() = EventStream.quantileRollupSink(
-      EventStream.readEvents(spark, in, schema), state, ckpt,
+      StreamKit.readEvents(spark, in, schema), state, ckpt,
       "value", "event_type", k = 8, seed = 7, salts = 2)
     sink().awaitTermination(60000)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -157,7 +157,7 @@ class QuantileRollupSinkSpec extends SparkSpec {
     land(in, "b0.parquet", System.currentTimeMillis() - 60000,
       (0 until 30).map(i => ("t0", i.toDouble)))
     def sink() = EventStream.quantileRollupSink(
-      EventStream.readEvents(spark, in, schema), state, ckpt,
+      StreamKit.readEvents(spark, in, schema), state, ckpt,
       "value", "event_type", k = 8, seed = 7, salts = 2)
     sink().awaitTermination(60000)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SparkSpec
 import graft.operators.Sketch
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
 
@@ -52,7 +51,7 @@ class SketchRollupSinksSpec extends SparkSpec {
     val rnd = new scala.util.Random(17)
     val batches = (0 until 3).map { _ => (0 until 80).map(_ => s"tok${rnd.nextInt(25)}") }
     def sink() = EventStream.frequencyRollupSink(
-      EventStream.readEvents(spark, in, schema), state, ckpt,
+      StreamKit.readEvents(spark, in, schema), state, ckpt,
       "event_type", depth = 3, width = 16)
     val t0 = System.currentTimeMillis() - 60000
 
@@ -114,7 +113,7 @@ class SketchRollupSinksSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
     land(in, "b0.parquet", System.currentTimeMillis() - 60000, Seq.fill(12)("a"))
     def sink() = EventStream.frequencyRollupSink(
-      EventStream.readEvents(spark, in, schema), state, ckpt,
+      StreamKit.readEvents(spark, in, schema), state, ckpt,
       "event_type", depth = 3, width = 16)
     sink().awaitTermination(60000)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -141,7 +140,7 @@ class SketchRollupSinksSpec extends SparkSpec {
     }
     val cap = 4
     def sink() = EventStream.heavyHitterRollupSink(
-      EventStream.readEvents(spark, in, schema), state, ckpt, "event_type", cap)
+      StreamKit.readEvents(spark, in, schema), state, ckpt, "event_type", cap)
     val t0 = System.currentTimeMillis() - 60000
 
     land(in, "b0.parquet", t0, batches(0))
@@ -187,11 +186,11 @@ class SketchRollupSinksSpec extends SparkSpec {
     land(in, "b0.parquet", System.currentTimeMillis() - 60000, Seq.fill(10)("a"))
     val st2 = s"$base/state2"
     EventStream.heavyHitterRollupSink(
-      EventStream.readEvents(spark, in, schema), st2, s"$base/ckpt", "event_type", 4)
+      StreamKit.readEvents(spark, in, schema), st2, s"$base/ckpt", "event_type", 4)
       .awaitTermination(60000)
     val e2 = intercept[IllegalArgumentException] {
       EventStream.heavyHitterRollupSink(
-        EventStream.readEvents(spark, in, schema), st2, s"$base/ckpt2", "event_type", 4)
+        StreamKit.readEvents(spark, in, schema), st2, s"$base/ckpt2", "event_type", 4)
     }
     assert(e2.getMessage.contains("heavyHitterRollupSink") && e2.getMessage.contains("checkpoint"))
   }
