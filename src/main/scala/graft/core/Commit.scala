@@ -4,11 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The one on-disk commit of every stored-state rewrite — the upsert
-  * into a partitioned table and its keymap, the flat and partitioned
-  * folds, the IVF reassign, the landing-zone compaction — and the only
-  * writer of a state's identity. The reference's upsert is a staging
-  * table plus one atomic `MERGE`; this is the same contract on a
-  * filesystem:
+  * into a partitioned table, the flat and partitioned folds, the IVF
+  * reassign, the landing-zone compaction — and the only writer of a
+  * state's identity. The reference's upsert is a staging table plus
+  * one atomic `MERGE`; this is the same contract on a filesystem:
   *
   *  1. The caller's own Spark job writes the new partitions, or the
   *     whole new state, under [[staged]] — a `<path>.staging` sibling

@@ -94,24 +94,29 @@ object Reliability {
   }
 
   /** Eager [[cut]] plus the ACTUAL stored byte size of the
-    * materialized blocks, read back from the block manager after the
-    * write. This is ground truth where plan statistics are not: a
-    * post-join/post-aggregation subtree's `sizeInBytes` estimate is
-    * off by orders of magnitude, but the blocks just written have an
-    * exact size. The size is the blocks' DESERIALIZED in-memory bytes
-    * (memory plus disk), which runs several times larger than the
-    * serialized shuffle bytes AQE sizes partitions by; see
-    * [[keyedPartitions]]. `None` when the blocks are not in executor
-    * storage (the reliable-checkpoint-to-files policy) — callers fall
-    * back to the configured shuffle width. */
+    * materialized blocks, read back after the write. This is ground
+    * truth where plan statistics are not: a post-join/post-aggregation
+    * subtree's `sizeInBytes` estimate is off by orders of magnitude,
+    * but the blocks just written have an exact size. Under the
+    * executor-local policy the size is the blocks' DESERIALIZED
+    * in-memory bytes (memory plus disk) from the block manager, which
+    * runs several times larger than the serialized shuffle bytes AQE
+    * sizes partitions by; see [[keyedPartitions]]. Under the reliable
+    * policy it is the summed length of the cut's checkpoint files,
+    * which hold serialized rows. `None` only if neither is found —
+    * callers then fall back to the configured shuffle width. */
   def cutSized(df: DataFrame): (DataFrame, Option[Long]) = {
     val c = cut(df, eager = true)
     val sc = df.sparkSession.sparkContext
-    val rddId = c.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    val rdd = c.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
-    val bytes = rddId.flatMap(id => sc.getRDDStorageInfo.find(_.id == id))
-      .map(i => i.memSize + i.diskSize)
+    val bytes = rdd.flatMap(r => r.getCheckpointFile match {
+      case Some(f) =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        Some(p.getFileSystem(sc.hadoopConfiguration).getContentSummary(p).getLength)
+      case None => sc.getRDDStorageInfo.find(_.id == r.id).map(i => i.memSize + i.diskSize)
+    })
     (c, bytes)
   }
 
@@ -126,10 +131,11 @@ object Reliability {
     * small width would serialize the cluster-scale case. Deriving the
     * width from the measured input size keeps both ends honest (the
     * arithmetic AQE coalescing applies, done statically). The units
-    * differ, though: [[cutSized]] reports deserialized block bytes,
-    * while the advisory size is calibrated for serialized shuffle
-    * bytes, so the width can overshoot AQE's by the deserialization
-    * factor — more, smaller partitions, the safe direction. */
+    * differ, though: under the executor-local policy [[cutSized]]
+    * reports deserialized block bytes, while the advisory size is
+    * calibrated for serialized shuffle bytes, so the width can
+    * overshoot AQE's by the deserialization factor — more, smaller
+    * partitions, the safe direction. */
   def keyedPartitions(spark: org.apache.spark.sql.SparkSession, bytes: Option[Long]): Int = {
     val conf = spark.sessionState.conf
     val max = conf.numShufflePartitions

@@ -6,9 +6,9 @@ import org.apache.spark.sql.types._
   *
   * Derived from the reference DDL:
   * `airflow/include/sql/postgres/create_crime.sql:1-22`,
-  * `create_stg_crime.sql:1-23`, `create_logs.sql:1-11`,
-  * `create_date.sql:1-10`, and the raw Socrata field set in
-  * `airflow/dags/crimeapi/transform.py:9-34` (see FIXTURES.md).
+  * `create_stg_crime.sql:1-23`, `create_logs.sql:1-11`, and the raw
+  * Socrata field set in `airflow/dags/crimeapi/transform.py:9-34`
+  * (see FIXTURES.md).
   */
 object Schemas {
 
@@ -85,17 +85,5 @@ object Schemas {
     StructField("start_time", StringType), // HH:mm:ss (helper.py:18-19)
     StructField("end_time", StringType),
     StructField("config", StringType)
-  ))
-
-  /** `date` dimension (`create_date.sql:1-10`). */
-  val dateDim: StructType = StructType(Seq(
-    StructField("date", DateType, nullable = false),
-    StructField("day", IntegerType),
-    StructField("month", IntegerType),
-    StructField("year", IntegerType),
-    StructField("day_of_week", IntegerType),
-    StructField("month_name", StringType),
-    StructField("day_of_week_name", StringType),
-    StructField("holiday_name", StringType)
   ))
 }

@@ -138,23 +138,11 @@ object Text {
   }
 
   // --- SimHash --------------------------------------------------------------
-  /** 60-bit SimHash over the token multiset (60 = every bit of the md5
-    * base hash; with 4 × 15-bit pigeonhole chunks the LSH candidate
-    * bound is n²/2^15 per chunk — the narrower 32-bit/8-bit-chunk
-    * scheme's 256 keys are quadratic in disguise at corpus scale).
-    * Bit i of the result is set iff more than half of the tokens have
-    * bit i set in their 60-bit md5 hash. Per-row expression, no
-    * shuffle; exact in both engines. */
+  /** Width of the engine's SimHash over the token multiset (60 = every
+    * bit of the md5 base hash; with 4 × 15-bit pigeonhole chunks the
+    * LSH candidate bound is n²/2^15 per chunk — the narrower
+    * 32-bit/8-bit-chunk scheme's 256 keys are quadratic in disguise at
+    * corpus scale). Bit i is set iff more than half of the tokens have
+    * bit i set in their 60-bit md5 hash. */
   val simhashBits = 60
-
-  def simhash(toks: Column): Column = {
-    val hs = transform(toks, t => Hashing.md5Long(t, 11))
-    val n = size(hs)
-    (0 until simhashBits)
-      .map { i =>
-        val setCnt = size(filter(hs, h => shiftright(h, i).bitwiseAND(lit(1L)) === 1L))
-        when(setCnt * 2 > n, lit(1L << i)).otherwise(lit(0L))
-      }
-      .reduce((a, b) => a + b)
-  }
 }

@@ -20,10 +20,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   *
   * Determinism contract (oracle parity): both expressions fold
   * left-to-right in index order from 0.0 in double precision — the
-  * exact IEEE sequence of [[Vectors.dot]] and of the DuckDB
-  * `list_aggregate(list_transform(...), 'sum')` twin. The interpreted
-  * `eval` and the generated code use the same loop, so results are
-  * identical under either execution mode.
+  * exact IEEE sequence of the DuckDB
+  * `list_aggregate(list_transform(...), 'sum')` twin,
+  * [[Vectors.dotSql]]. The interpreted `eval` and the generated code
+  * use the same loop, so results are identical under either execution
+  * mode.
   */
 object VectorExpressions {
 

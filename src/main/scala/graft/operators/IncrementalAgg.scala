@@ -171,7 +171,7 @@ object IncrementalAgg {
     *  - The partition column should be a pure function of the merge
     *    KEY (an id bucket), so a re-ingested key can never move
     *    partitions and "touched" is exactly the delta's buckets — no
-    *    stale-partition tracking, no keymap.
+    *    stale-partition query over the complement partitions.
     *  - A state whose rows are ALL retired (a delete fold covering
     *    everything) keeps its dir, marker and identity but holds no
     *    partition directories; the fold paths treat that shape as an

@@ -329,9 +329,9 @@ object Similarity {
     * cluster keeps the upsert partition-stable: a re-ingested id may
     * move CLUSTERS (its embedding changed) but never buckets, so
     * "touched" is exactly the batch's buckets and no stale-partition
-    * tracking is needed ([[Upsert.upsertIntoParquet]]'s keymap
-    * machinery exists to solve precisely the problem this layout
-    * avoids). Cluster stays a data column, which the probe join
+    * query is needed ([[Upsert.upsertIntoParquet]]'s semi-join over the
+    * complement partitions' keys solves precisely the problem this
+    * layout avoids). Cluster stays a data column, which the probe join
     * filters on as before. `nBuckets` is pinned in the identity — two
     * bucket counts scatter the same id to different partitions and
     * the keep-latest anti-join would stop seeing its older version.

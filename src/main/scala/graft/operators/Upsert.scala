@@ -23,7 +23,9 @@ import org.apache.spark.sql.functions._
   *    reference's per-`load_date` replay granularity,
   *    `crime_etl.py:426-444`) and commits them through
   *    [[graft.core.Commit]] — at 100 TB a merge touching one day's
-  *    partitions rewrites one day, not the table.
+  *    partitions rewrites one day, not the table. Like the reference's
+  *    `MERGE`, it writes the table alone: the partitions a moved key
+  *    left are found from the table's own key column.
   */
 object Upsert {
 
@@ -64,21 +66,20 @@ object Upsert {
       .getOrElse(lit(false))
   }
 
-  /** Path of a table's key→partition sidecar (the "keymap"): one row
-    * per key holding the key columns and the key's CURRENT partition
-    * value, partitioned like the table itself so its maintenance is
-    * partition-scoped too. Size ∝ key count × (key width + partition
-    * width) — orders of magnitude smaller than the table. */
+  /** Path of the key→partition sidecar (the "keymap") that older
+    * releases wrote next to a table. It is no longer read or written;
+    * a reset still deletes it with every other `<path>.*` sibling. */
   def keymapPath(tablePath: String): String = tablePath + ".keymap"
 
   /** Partitions OUTSIDE `updatedParts` that still hold an old version
-    * of one of this batch's keys, computed against the keymap sidecar —
-    * NOT the table. This is the query that used to be a per-batch
-    * complement scan of the whole table; exposed so the spec can assert
-    * its physical plan only ever reads `<table>.keymap`. */
+    * of one of this batch's keys: the batch keys semi-joined against
+    * `table`'s key and partition columns over the complement
+    * partitions. Parquet prunes the scan to the key column chunks, and
+    * the partition value comes from the directory, so the query reads
+    * key-count bytes, not the rows. Exposed so the spec can assert
+    * that pruning on its physical plan. */
   private[graft] def stalePartitionsFrame(
-      spark: SparkSession,
-      tablePath: String,
+      table: DataFrame,
       updates: DataFrame,
       keyCols: Seq[String],
       partitionCol: String,
@@ -87,11 +88,11 @@ object Upsert {
     // no broadcast hint: batches are usually small and AQE broadcasts
     // them; a huge backfill's key set must be free to sort-merge
     val updKeys = updates.select(keyCols.map(col): _*).distinct()
-    // coalesce: for a null-partition keymap row the isin half of the
-    // filter is NULL, and !NULL is NULL — which would silently drop the
-    // row and leave a duplicate behind when a key moves OUT of the null
+    // coalesce: for a null-partition row the isin half of the filter is
+    // NULL, and !NULL is NULL — which would silently drop the row and
+    // leave a duplicate behind when a key moves OUT of the null
     // partition; NULL must read as "not an updated partition" instead
-    spark.read.parquet(keymapPath(tablePath))
+    table.select((keyCols :+ partitionCol).map(col): _*)
       .filter(!coalesce(partitionFilter(partitionCol, updatedParts), lit(false)))
       .join(updKeys, keyCols, "left_semi")
       .select(partitionCol).distinct()
@@ -105,21 +106,19 @@ object Upsert {
     * partitions still holding an OLD version of an updated key (a key
     * whose partition value changed — e.g. a corrected occurrence date —
     * must vanish from its old partition or the table would carry
-    * duplicates). The second set is found by semi-joining the batch keys
-    * against the [[keymapPath keymap sidecar]], a per-key (key,
-    * partition) map rewritten in the same commit as the table — NEVER by
-    * scanning the table's complement partitions: at 100 TB a complement
-    * scan per micro-batch is a full-table read, while the keymap is
-    * proportional to the key count.
+    * duplicates). The second set comes from [[stalePartitionsFrame]]:
+    * the batch keys semi-joined against the complement partitions'
+    * key column. Parquet reads only that column's chunks and takes the
+    * partition value from the directory, so the query costs key-count
+    * bytes, not a scan of the rows.
     *
-    * Table and keymap partitions are staged and committed together
-    * through [[graft.core.Commit]], so a crash at any step leaves the
-    * pre-load or (after the next entry) the post-load table and keymap.
-    * An absent or empty table dir (catalog DDL pre-creates external
-    * table locations) is an empty target: the first batch runs the same
-    * keep-latest merge, so duplicate keys in it (e.g. a retried load
-    * that re-landed pages) collapse too, and its commit replaces both
-    * dirs whole.
+    * The touched partitions are staged and committed through
+    * [[graft.core.Commit]], so a crash at any step leaves the pre-load
+    * or (after the next entry) the post-load table. An absent or empty
+    * table dir (catalog DDL pre-creates external table locations) is an
+    * empty target: the first batch runs the same keep-latest merge, so
+    * duplicate keys in it (e.g. a retried load that re-landed pages)
+    * collapse too, and its commit replaces the dir whole.
     *
     * Null partition values are first-class: the target filter matches
     * them with `isNull` and the commit uses Spark's
@@ -137,31 +136,19 @@ object Upsert {
     Commit.recover(spark, tablePath)
     val updatedParts = updates.select(partitionCol).distinct().collect().map(_.get(0)).toSeq
     if (updatedParts.isEmpty) return Seq.empty // empty update batch
-    val fs = Commit.fs(spark, tablePath)
-    val kmDir = keymapPath(tablePath)
-    val live = IncrementalAgg.stateHasData(fs, tablePath)
-    require(!live || fs.exists(new org.apache.hadoop.fs.Path(kmDir)),
-      s"upsert: $tablePath has rows but no keymap at $kmDir. The two are committed together, " +
-        s"so the keymap was deleted by hand: restore it, or reset the table by deleting " +
-        s"$tablePath and every $tablePath.* sibling.")
-    val staleParts =
-      if (!live) Seq.empty
-      else stalePartitionsFrame(spark, tablePath, updates, keyCols, partitionCol, updatedParts)
-        .collect().map(_.get(0)).toSeq
+    val live = IncrementalAgg.stateHasData(Commit.fs(spark, tablePath), tablePath)
+    // one read serves both queries: the stored schema (inferred on
+    // purpose) is what makes a batch lacking a column fail in unionByName
+    val table = if (live) Some(spark.read.parquet(tablePath)) else None
+    val staleParts = table.toSeq.flatMap(t =>
+      stalePartitionsFrame(t, updates, keyCols, partitionCol, updatedParts).collect().map(_.get(0)))
     val touched = (updatedParts ++ staleParts).distinct
-    val target =
-      if (live) spark.read.parquet(tablePath).filter(partitionFilter(partitionCol, touched))
-      else updates.filter(lit(false))
-    val merged = merge(target, updates, keyCols, versionCol).cache()
-    try {
-      merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-        .parquet(Commit.staged(tablePath, tablePath))
-      merged.select((keyCols :+ partitionCol).map(col): _*)
-        .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-        .parquet(Commit.staged(tablePath, kmDir))
-    } finally merged.unpersist()
+    val target = table.fold(updates.filter(lit(false)))(_.filter(partitionFilter(partitionCol, touched)))
+    merge(target, updates, keyCols, versionCol)
+      .write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
+      .parquet(Commit.staged(tablePath, tablePath))
     val parts = if (live) Some(touched.map(partitionDir(partitionCol, _))) else None
-    Commit.commit(spark, tablePath, Seq(Commit.Target(tablePath, parts), Commit.Target(kmDir, parts)))
+    Commit.commit(spark, tablePath, Seq(Commit.Target(tablePath, parts)))
     touched
   }
 }

@@ -15,7 +15,7 @@ import scala.jdk.CollectionConverters._
   * [[Commit]]. Each entry point is crashed at every mutating filesystem
   * step an uninterrupted call makes ([[graft.FaultFs]]), re-run with
   * faults off, and must then hold exactly what the uninterrupted call
-  * left: rows, keymap and applied-batch id. Where it says so, a reset
+  * left: rows and applied-batch id. Where it says so, a reset
   * (deleting the state and every `state.*` sibling) after each crash
   * must start fresh instead. `foldState`'s case is IncrementalAggSpec's
   * swap-window test; `ivfFoldInto`'s is SimilaritySpec's. Identity
@@ -23,7 +23,7 @@ import scala.jdk.CollectionConverters._
 class CommitSpec extends SparkSpec with CrashPoints {
   import spark.implicits._
 
-  test("upsertIntoParquet: every crash point converges on the uninterrupted table and keymap") {
+  test("upsertIntoParquet: every crash point converges on the uninterrupted table") {
     val seed = Files.createTempDirectory("upsert-seed").toString
     Upsert.upsertIntoParquet(spark, s"$seed/state",
       Seq(("k1", 1, Some(2020), "a"), ("k2", 1, Some(2020), "b"), ("k3", 1, Some(2021), "c"),
@@ -39,7 +39,7 @@ class CommitSpec extends SparkSpec with CrashPoints {
       ("k3", 2, Some(2021), "c2")).toDF("id", "v", "yr", "payload")
     everyCrashPoint(seed, resetStartsFresh = true)(dir =>
       Upsert.upsertIntoParquet(spark, s"$dir/state", batch, Seq("id"), "v", "yr")
-    )(dir => (rows(s"$dir/state"), rows(Upsert.keymapPath(s"$dir/state"))))
+    )(dir => rows(s"$dir/state"))
   }
 
   private def bucketed(rows: Seq[(Long, Long)]): DataFrame =

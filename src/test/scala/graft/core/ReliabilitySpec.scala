@@ -51,6 +51,16 @@ class ReliabilitySpec extends SparkSpec {
     assert(reliable == local)
   }
 
+  test("cutSized measures the checkpoint files, so a tiny table gets a narrow keyed width") {
+    withReliableDir {
+      val (c, bytes) = Reliability.cutSized((1 to 1000).toDF("x"))
+      assert(c.count() == 1000)
+      assert(bytes.exists(_ > 0L), s"expected the checkpoint files' bytes, got $bytes")
+      val width = Reliability.keyedPartitions(spark, bytes)
+      assert(width < spark.sessionState.conf.numShufflePartitions, s"keyed width $width")
+    }
+  }
+
   test("the reliable path actually writes checkpoint files") {
     val dir = Files.createTempDirectory("graft-ckpt-files")
     spark.conf.set(Reliability.CheckpointDirKey, dir.toString)

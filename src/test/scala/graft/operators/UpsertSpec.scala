@@ -2,8 +2,10 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-class UpsertSpec extends SparkSpec {
+class UpsertSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def target: DataFrame =
@@ -88,7 +90,7 @@ class UpsertSpec extends SparkSpec {
       .as[(String, Int, Option[Int], String)].collect().sortBy(_._1)
     // exactly one kn row, in the NEW partition — without the coalesce in
     // stalePartitionsFrame the !isin(...) filter is NULL for the
-    // null-partition keymap row and the stale copy silently survives
+    // null-partition row and the stale copy silently survives
     assert(out.toSeq == Seq(("k2", 1, Some(2020), "other"), ("kn", 2, Some(2021), "corrected")))
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/yr=${Upsert.NullPartitionDir}")))
@@ -105,35 +107,25 @@ class UpsertSpec extends SparkSpec {
     assert(out.toSeq == Seq(("k1", 2, "x2"), ("k2", 1, "y")))
   }
 
-  test("stale-partition detection reads the keymap sidecar, never the table") {
+  test("stale-partition detection reads only the key column of the complement partitions") {
     val dir = java.nio.file.Files.createTempDirectory("upsert").toString + "/tbl"
-    val init = Seq(("k1", 1, 2020, "a"), ("k2", 1, 2021, "b")).toDF("id", "v", "yr", "payload")
+    val init = Seq(("k1", 1, 2020, "a"), ("k2", 1, 2021, "b"), ("k3", 1, 2022, "c"))
+      .toDF("id", "v", "yr", "payload")
     Upsert.upsertIntoParquet(spark, dir, init, Seq("id"), "v", "yr")
     val upd = Seq(("k1", 2, 2021, "moved")).toDF("id", "v", "yr", "payload")
-    val frame = Upsert.stalePartitionsFrame(spark, dir, upd, Seq("id"), "yr", Seq(2021))
-    // every file-scan location in the physical plan is the sidecar
-    val locations = "\\[file:[^\\]]*\\]".r
-      .findAllIn(frame.queryExecution.executedPlan.toString).toList
-    val fileScans = locations.filterNot(_.contains("/tbl.tmp")) // updates side is in-memory
-    assert(fileScans.nonEmpty)
-    assert(fileScans.forall(_.contains("/tbl.keymap")),
-      s"stale detection scanned a non-keymap path: $fileScans")
-    // and it still finds the stale partition
+    val frame = Upsert.stalePartitionsFrame(spark.read.parquet(dir), upd, Seq("id"), "yr", Seq(2021))
+    // it still finds the stale partition
     assert(frame.collect().map(_.getInt(0)).toSeq == Seq(2020))
-  }
-
-  test("keymap sidecar mirrors the table's (key, partition) map across moves") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert").toString + "/tbl"
-    val init = Seq(("k1", 1, 2020, "a"), ("k2", 1, 2021, "b")).toDF("id", "v", "yr", "payload")
-    Upsert.upsertIntoParquet(spark, dir, init, Seq("id"), "v", "yr")
-    val upd = Seq(("k1", 2, 2021, "moved"), ("k3", 1, 2022, "new")).toDF("id", "v", "yr", "payload")
-    Upsert.upsertIntoParquet(spark, dir, upd, Seq("id"), "v", "yr")
-    val table = spark.read.parquet(dir).select("id", "yr")
-      .as[(String, Int)].collect().sortBy(_._1).toSeq
-    val keymap = spark.read.parquet(Upsert.keymapPath(dir)).select("id", "yr")
-      .as[(String, Int)].collect().sortBy(_._1).toSeq
-    assert(table == Seq(("k1", 2021), ("k2", 2021), ("k3", 2022)))
-    assert(keymap == table)
+    val scans = collect(frame.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty) // the updates side is an in-memory relation
+    scans.foreach { s =>
+      // pruned to the key column; the partition value is the directory's
+      assert(s.requiredSchema.fieldNames.toSeq == Seq("id"), s"ReadSchema: ${s.requiredSchema.simpleString}")
+      assert(s.relation.partitionSchema.fieldNames.toSeq == Seq("yr"))
+      // and only the complement partitions are listed
+      val listed = s.relation.location.listFiles(s.partitionFilters, Nil).map(_.values.getInt(0))
+      assert(listed.sorted == Seq(2020, 2022), s"scanned partitions: $listed")
+    }
   }
 
   test("upsertIntoParquet rewrites only touched partitions") {
