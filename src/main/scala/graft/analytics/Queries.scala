@@ -952,16 +952,12 @@ object Queries {
       // materializes (doc_id, quality, n_tokens, sh) once, the exact
       // per-signal expressions computed from the two token streams
       // (metrics from tokens(lower(text)), shingles from tokens(text))
-      val toksL = col("tkl")
-      val nStop = size(filter(toksL, t => t.isInCollection(Text.stopwords)))
       val tokd = Reliability.cut(
         Par.widen(docs.select(col("doc_id"),
             Text.tokens(col("text")).as("tk"),
             Text.tokens(lower(col("text"))).as("tkl")))
-          .select(col("doc_id"),
-            Text.qualityBucket(size(toksL), nStop).cast("long").as("quality"),
-            size(toksL).cast("long").as("n_tokens"),
-            Text.shingles(col("tk"), 3).as("sh")))
+          .select(col("doc_id") +: Dedup.qualityMetrics(col("tkl")) :+
+            Text.shingles(col("tk"), 3).as("sh"): _*))
       Dedup.canonicalDocsFromMetrics(
         tokd.select(col("doc_id").cast("long").as("doc_id"),
           col("quality"), col("n_tokens")),
@@ -2080,9 +2076,9 @@ object Queries {
       // read materialized blocks instead of re-deriving the
       // gate/dedup/decontaminate chain; the pack window is
       // shard-local and the split is a pure per-row md5 — no stage
-      // re-derives another stage's work. (The cluster resolution's
-      // bounded per-round cuts inside dedupClusters are the engine's
-      // declared iterative exception.)
+      // re-derives another stage's work. (Above the broadcast
+      // threshold, the bounded per-round cuts inside dedupClusters are
+      // the engine's declared iterative exception.)
       (s, d) => {
         val docs = Tables.documents(s, d)
         // (r22 three-arm in-JVM A/B: this one-derivation shape, the
@@ -2112,13 +2108,8 @@ object Queries {
         // near-dup canonical pick over the full corpus (what is
         // duplicated does not depend on the quality gate); empty-
         // shingle exclusion: size(sh) > 0 ⟺ size(tk) >= 3
-        val lowToks = col("tkl")
-        val nStop = size(filter(lowToks, t => t.isInCollection(Text.stopwords)))
         val dropIds = Dedup.canonicalDocsFromMetrics(
-            tokd.select(
-              col("doc_id").cast("long").as("doc_id"),
-              Text.qualityBucket(size(lowToks), nStop).cast("long").as("quality"),
-              size(lowToks).cast("long").as("n_tokens")),
+            tokd.select(col("doc_id").cast("long").as("doc_id") +: Dedup.qualityMetrics(col("tkl")): _*),
             Dedup.dedupClusters(Dedup.minhashLshFromShingles(
               tokd.filter(size(col("sh")) > 0).select(col("doc_id").as("id"), col("sh")),
               0.5)))

@@ -108,10 +108,7 @@ object Reliability {
   def cutSized(df: DataFrame): (DataFrame, Option[Long]) = {
     val c = cut(df, eager = true)
     val sc = df.sparkSession.sparkContext
-    val rdd = c.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-    val bytes = rdd.flatMap(r => r.getCheckpointFile match {
+    val bytes = cutRdd(c).flatMap(r => r.getCheckpointFile match {
       case Some(f) =>
         val p = new org.apache.hadoop.fs.Path(f)
         Some(p.getFileSystem(sc.hadoopConfiguration).getContentSummary(p).getLength)
@@ -119,6 +116,19 @@ object Reliability {
     })
     (c, bytes)
   }
+
+  /** Drop the blocks of a cut once nothing will read it again, instead
+    * of holding them until the ContextCleaner collects the unreachable
+    * RDD. Under the executor-local policy any later action on `cut`
+    * fails, so call this only after the last consumer has materialized.
+    * Reliable checkpoint files are left to the cleaner (see
+    * [[CheckpointDirKey]]). */
+  def release(cut: DataFrame): Unit = cutRdd(cut).foreach(_.unpersist(blocking = false))
+
+  private def cutRdd(cut: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    cut.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
 
   /** SCALE-ADAPTIVE partition count for a keyed materialization
     * holding `bytes` of (deserialized) rows:

@@ -2,9 +2,12 @@ package graft.operators
 
 import graft.core.{Par, Reliability}
 import graft.functions.{Hashing, Text, VectorExpressions}
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Deduplication suite for the training-data pipeline surface:
   * exact (hash-groupBy), MinHash+LSH, SimHash, n-gram Jaccard, and
@@ -668,18 +671,75 @@ object Dedup {
     * "keep one canonical doc per duplicate cluster" (keep = rows where
     * doc_id == canonical_id; drop the rest).
     *
-    * Scale shape: iterative, one equi-join + map-side-combinable
-    * min-agg shuffle per round, converging in O(graph diameter) rounds
-    * — near-dup clusters are dense cliques with tiny diameters
-    * (typically ≤ 3–4 hops), so the loop is short in practice and
-    * capped by `maxIter`. Lineage is cut per round under
-    * the session checkpoint policy ([[graft.core.Reliability]]:
-    * executor-local by default, reliable-storage when
-    * `spark.graft.checkpoint.dir` is set); labels are ids only — the shuffled rows are two
-    * longs regardless of document width. Deterministic: the fixpoint
-    * (min reachable id) is independent of partitioning and iteration
-    * order. */
+    * Two paths, chosen from the EXACT stored size of the pair list
+    * ([[graft.core.Reliability.cutSized]]), by the rule Spark uses to
+    * broadcast a join side:
+    *  - at or below `spark.sql.autoBroadcastJoinThreshold` (and with
+    *    integral ids), the pairs are collected in one job and resolved
+    *    on the driver by union-find, each root the smallest id of its
+    *    component — the fixpoint the rounds reach. The result is a local
+    *    relation with the rounds' column names and types. Near-dup
+    *    graphs are small next to their corpus (2–23 KB over the
+    *    benchmark and sf0.01/sf0.1 corpora); on them the rounds run 15
+    *    jobs per call, and fixed per-job cost is almost all they cost.
+    *  - above it, or with the threshold at -1, distributed rounds: one
+    *    equi-join + map-side-combinable min-agg shuffle per round,
+    *    converging in O(graph diameter) rounds — near-dup clusters are
+    *    dense cliques with tiny diameters (typically ≤ 3–4 hops).
+    *    `maxIter` caps the rounds, and an unconverged result fails its
+    *    `require`; neither applies to the driver path. Lineage is cut
+    *    per round under the session checkpoint policy
+    *    ([[graft.core.Reliability]]: executor-local by default,
+    *    reliable-storage when `spark.graft.checkpoint.dir` is set);
+    *    labels are ids only — the shuffled rows are two longs
+    *    regardless of document width.
+    *
+    * Deterministic on both paths: the fixpoint (min reachable id) is
+    * independent of partitioning and iteration order. A null endpoint
+    * joins nothing: its partner is still a node, and the null itself
+    * is one (null, null) row. */
   def dedupClusters(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
+    val (p, pBytes) = Reliability.cutSized(pairs.select(col("id_a"), col("id_b")))
+    // both endpoints unioned: the wider of the two id types
+    val id = p.select(col("id_a").as("id")).unionByName(p.select(col("id_b").as("id"))).schema("id")
+    val integral = id.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _                                             => false
+    }
+    val small = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (integral && pBytes.exists(_ <= small)) clustersOnDriver(p, id)
+    else clusterRounds(p, pBytes, maxIter)
+  }
+
+  /** [[dedupClusters]]' driver path: union-find over the collected
+    * pairs, linking the larger root under the smaller. */
+  private def clustersOnDriver(p: DataFrame, id: StructField): DataFrame = {
+    val rows = p.select(col("id_a").cast(id.dataType), col("id_b").cast(id.dataType)).collect()
+    Reliability.release(p)
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(node: Any): Any = {
+      var x = node
+      while (parent(x) != x) { val g = parent(parent(x)); parent(x) = g; x = g }
+      x
+    }
+    def rank(x: Any) = x.asInstanceOf[Number].longValue
+    rows.foreach { r =>
+      val ends = Seq(r.get(0), r.get(1)).filter(_ != null)
+      ends.foreach(e => parent.getOrElseUpdate(e, e))
+      if (ends.size == 2) {
+        val (ra, rb) = (find(ends.head), find(ends(1)))
+        if (rank(ra) < rank(rb)) parent(rb) = ra
+        else if (rank(rb) < rank(ra)) parent(ra) = rb
+      }
+    }
+    val labeled = parent.keys.toSeq.map(x => Row(x, find(x)))
+    val nulls = if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) Seq(Row(null, null)) else Nil
+    p.sparkSession.createDataFrame((labeled ++ nulls).asJava,
+      StructType(Seq(id.copy(name = "doc_id"), id.copy(name = "canonical_id"))))
+  }
+
+  /** [[dedupClusters]]' distributed path: min-label propagation rounds. */
+  private def clusterRounds(p: DataFrame, pBytes: Option[Long], maxIter: Int): DataFrame = {
     // TWO-STEP materialization of the symmetric edge list (r22).
     // Step 1: the pair pipeline (typically a full LSH build + exact
     // verify) materializes under the normal ADAPTIVE planner — a
@@ -700,13 +760,12 @@ object Dedup {
     // sized ≈ the r21 plain-cut shape at sf0.1 — within noise on
     // d05/d08, faster on t07 — and a fixed-width variant without the
     // sizing was the worst of the three on all four consumers.)
-    val spark = pairs.sparkSession
-    val (p, pBytes) = Reliability.cutSized(pairs.select(col("id_a"), col("id_b")))
-    val n = Reliability.keyedPartitions(spark, pBytes.map(_ * 2))
+    val n = Reliability.keyedPartitions(p.sparkSession, pBytes.map(_ * 2))
     val sym = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(p.select(col("id_b").as("src"), col("id_a").as("dst")))
       .repartition(n, col("dst"))
       .transform(df => Reliability.cutPartitioned(df)) // computed once, reused every round
+    Reliability.release(p) // sym holds its own blocks now
     var labels = sym.select(col("src").as("id")).distinct().withColumn("label", col("id"))
     var converged = false
     var i = 0
@@ -768,15 +827,19 @@ object Dedup {
     * struct, so the whole selection is a single aggregation. */
   def canonicalDocs(docs: DataFrame, idCol: String, textCol: String,
       clusters: DataFrame): DataFrame = {
-    val toks = Text.tokens(lower(col(textCol)))
-    val nToks = size(toks)
-    val nStop = size(filter(toks, t => t.isInCollection(Text.stopwords)))
     canonicalDocsFromMetrics(
-      docs.select(
-        col(idCol).cast("long").as("doc_id"),
-        Text.qualityBucket(nToks, nStop).cast("long").as("quality"),
-        nToks.cast("long").as("n_tokens")),
+      docs.select(col(idCol).cast("long").as("doc_id") +: qualityMetrics(Text.tokens(lower(col(textCol)))): _*),
       clusters)
+  }
+
+  /** The per-doc metrics [[canonicalDocsFromMetrics]] ranks by, from a
+    * LOWER-CASED token column: `quality` (the t02
+    * [[graft.functions.Text.qualityBucket]] signal) and `n_tokens`, both
+    * long. */
+  def qualityMetrics(lowTokens: Column): Seq[Column] = {
+    val nToks = size(lowTokens)
+    val nStop = size(filter(lowTokens, t => t.isInCollection(Text.stopwords)))
+    Seq(Text.qualityBucket(nToks, nStop).cast("long").as("quality"), nToks.cast("long").as("n_tokens"))
   }
 
   /** [[canonicalDocs]] over PRE-COMPUTED per-doc quality metrics:

@@ -9,6 +9,40 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
 
+  /** `body` with the session conf `key` set to `value`, the prior
+    * value restored after (the session is shared across suites). */
+  protected def withConf[A](key: String, value: String)(body: => A): A = {
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** `body` run on each `Dedup.dedupClusters` path: first the driver
+    * path (the default broadcast threshold, which every spec graph is
+    * under), then the distributed rounds (threshold -1). */
+  protected def onBothClusterPaths[A](body: => A): Seq[A] = {
+    val key = org.apache.spark.sql.internal.SQLConf.AUTO_BROADCASTJOIN_THRESHOLD
+    Seq(withConf(key.key, key.defaultValueString)(body), withConf(key.key, "-1")(body))
+  }
+
+  /** `body`'s result and the number of Spark jobs it submitted, counted
+    * by job group: threads started inside `body` inherit the group, so
+    * their jobs count too. */
+  protected def countingJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, "counted jobs")
+    val out =
+      try body
+      finally sc.clearJobGroup()
+    org.apache.spark.GraftSparkBridge.flushListeners(sc)
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
   /** (relative file path -> byte length) of every data file under a
     * stored-state dir — the fold-write-footprint probe shared by the
     * partitioned-fold specs: an UNTOUCHED bucket's files keep their

@@ -32,11 +32,13 @@ class ReliabilitySpec extends SparkSpec {
   test("dedupClusters is bit-identical through the reliable checkpoint path") {
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L), (9L, 7L))
       .toDF("id_a", "id_b")
-    val local = Dedup.dedupClusters(pairs).as[(Long, Long)].collect().toMap
-    val reliable = withReliableDir {
-      Dedup.dedupClusters(pairs).as[(Long, Long)].collect().toMap
-    }
-    assert(reliable == local)
+    onBothClusterPaths {
+      val local = Dedup.dedupClusters(pairs).as[(Long, Long)].collect().toMap
+      val reliable = withReliableDir {
+        Dedup.dedupClusters(pairs).as[(Long, Long)].collect().toMap
+      }
+      (local, reliable)
+    }.foreach { case (local, reliable) => assert(reliable == local && local.size == 6) }
   }
 
   test("trainCentroids is bit-identical through the reliable checkpoint path") {

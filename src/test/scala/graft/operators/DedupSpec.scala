@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.functions.Text
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -90,19 +92,48 @@ class DedupSpec extends SparkSpec {
   test("dedupClusters resolves pairs into min-label components") {
     // chain 1-2, 2-3 plus isolated pair 10-11: components {1,2,3}, {10,11}
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val out = Dedup.dedupClusters(pairs).as[(Long, Long)].collect().toMap
-    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    onBothClusterPaths(Dedup.dedupClusters(pairs).as[(Long, Long)].collect().toMap).foreach { out =>
+      assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    }
   }
 
   test("dedupClusters converges on a long path (diameter > 2)") {
-    val chain = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val out = Dedup.dedupClusters(chain).as[(Long, Long)].collect()
-    assert(out.length == 10 && out.forall(_._2 == 0L))
+    // pairs listed from the far end, so linking each root under the
+    // smaller one builds the deepest parent chain on the driver path
+    val chain = (0L until 9L).reverse.map(i => (i, i + 1)).toDF("id_a", "id_b")
+    onBothClusterPaths(Dedup.dedupClusters(chain).as[(Long, Long)].collect()).foreach { out =>
+      assert(out.length == 10 && out.forall(_._2 == 0L))
+    }
   }
 
   test("dedupClusters of empty pair set is empty") {
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.dedupClusters(empty).isEmpty)
+    onBothClusterPaths(Dedup.dedupClusters(empty).isEmpty).foreach(e => assert(e))
+  }
+
+  test("dedupClusters' driver path matches the rounds on null endpoints and int ids") {
+    // a null endpoint joins nothing: 4 stays a singleton although it is
+    // paired with null, and 5 is not linked to 4 through the null
+    val pairs = Seq[(Integer, Integer)]((1, 2), (2, 3), (4, null), (null, 5), (null, null))
+      .toDF("id_a", "id_b")
+    val Seq((localPlan, localSchema, local), (roundsPlan, roundsSchema, rounds)) = onBothClusterPaths {
+      val out = Dedup.dedupClusters(pairs)
+      (out.queryExecution.analyzed, out.schema,
+        out.collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet)
+    }
+    assert(localPlan.isInstanceOf[LocalRelation] && !roundsPlan.isInstanceOf[LocalRelation])
+    assert(localSchema == roundsSchema)
+    assert(localSchema.map(_.dataType) == Seq(IntegerType, IntegerType))
+    assert(local == rounds)
+    assert(local == Set(Some(1) -> Some(1), Some(2) -> Some(1), Some(3) -> Some(1),
+      Some(4) -> Some(4), Some(5) -> Some(5), None -> None))
+  }
+
+  test("dedupClusters over a small pair set resolves on the driver in a pinned number of jobs") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+    val (out, jobs) = countingJobs(Dedup.dedupClusters(pairs).collect())
+    assert(out.length == 5)
+    assert(jobs == DedupSpec.DriverPathJobs, s"$jobs jobs")
   }
 
   test("canonicalDocs keeps the best-quality copy per cluster, not the min id") {
@@ -237,4 +268,13 @@ class DedupSpec extends SparkSpec {
     val docs = Seq((0L, "one two"), (1L, "three four five six")).toDF("doc_id", "text")
     assert(Dedup.duplicatedSpans(docs, "doc_id", "text", k = 3).isEmpty)
   }
+}
+
+object DedupSpec {
+
+  /** Jobs of one `dedupClusters(pairs).collect()` over a small
+    * in-memory pair set on the driver path: the sized cut of the pairs
+    * and their collect. The result is a local relation, so its own
+    * collect runs no job. */
+  val DriverPathJobs = 2
 }

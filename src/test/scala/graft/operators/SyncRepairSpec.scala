@@ -53,15 +53,9 @@ class SyncRepairSpec extends SparkSpec {
   test("the diff collects in a pinned number of Spark jobs") {
     val a = log(("r1", "2026-01-05", Seq("SUCCESS")), ("r2", "2026-01-12", Seq("SUCCESS")))
     val b = log(("r1", "2026-01-05", Seq("SUCCESS")), ("r2", "2026-01-12", Seq("FAILED")))
-    val sc = spark.sparkContext
-    val group = s"sync-diff-jobs-${System.nanoTime()}"
-    sc.setJobGroup(group, "one sync diff")
-    val rows =
-      try SyncRepair.diff(a.read(), b.read()).collect()
-      finally sc.clearJobGroup()
-    org.apache.spark.GraftSparkBridge.flushListeners(sc)
+    val (rows, jobs) = countingJobs(SyncRepair.diff(a.read(), b.read()).collect())
     assert(rows.length == 1)
-    assert(sc.statusTracker.getJobIdsForGroup(group).length == SyncRepairSpec.DiffJobs)
+    assert(jobs == SyncRepairSpec.DiffJobs)
   }
 }
 

@@ -294,14 +294,10 @@ class RunnerSpec extends SparkSpec {
     val r = new Runner(spark, dir, epochStart = "2026-01-01", tablePrefix = "t15")
     val opts = Map("totalRows" -> "112", "pageSize" -> "28", "baseDate" -> "2026-01-01", "nDays" -> "28")
     assert(r.runWithConnector("run1", "2026-01-10", opts) == "SUCCESS")
-    val sc = spark.sparkContext
-    val group = s"runner-jobs-${System.nanoTime()}"
-    sc.setJobGroup(group, "one connector INCREMENT")
-    try assert(r.runWithConnector("run2", "2026-01-20", opts) == "SUCCESS")
-    finally sc.clearJobGroup()
-    org.apache.spark.GraftSparkBridge.flushListeners(sc)
-    // the replica threads inherit the group, so every job counts here
-    assert(sc.statusTracker.getJobIdsForGroup(group).length == RunnerSpec.IncrementJobs)
+    // the replica threads inherit the job group, so every job counts here
+    val (status, jobs) = countingJobs(r.runWithConnector("run2", "2026-01-20", opts))
+    assert(status == "SUCCESS")
+    assert(jobs == RunnerSpec.IncrementJobs)
   }
 
   test("a file: URI workDir keeps the checkpoint under workDir, and the resume completes") {
