@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 
 /** Lineage-cut policy for the engine's iterative operators (PageRank,
   * min-label cluster propagation, k-means training).
@@ -47,11 +48,6 @@ object Reliability {
     * rule. */
   val CheckpointDirKey = "spark.graft.checkpoint.dir"
 
-  /** Session conf stamp: the base dir last applied to the context via
-    * `setCheckpointDir` — lets a session re-point the dir mid-life
-    * without minting a fresh UUID subdirectory on every cut. */
-  private val AppliedKey = "spark.graft.checkpoint.dir.applied"
-
   /** Materialize `df` and cut its lineage under the session's
     * checkpoint policy (see object doc). Eager in both modes — the
     * iterative callers all reuse the cut result at least twice per
@@ -60,38 +56,21 @@ object Reliability {
 
   /** [[cut]] of a plan whose OUTPUT PARTITIONING the caller needs
     * downstream (a deliberate `repartition(joinKey)`, or an
-    * aggregation that rides one): materializes with AQE disabled for
-    * this one plan so the resulting `LogicalRDD` records the hash
-    * partitioning. With AQE on, `Dataset.checkpoint` reads the
+    * aggregation that rides one): planned with AQE off, on a private
+    * clone of the session, so the resulting `LogicalRDD` records the
+    * hash partitioning. With AQE on, `Dataset.checkpoint` reads the
     * partitioning off the adaptive plan and records
     * `UnknownPartitioning` — every downstream join keyed on the
     * partitioning then silently re-shuffles the materialized table
     * (r22 probe: each PageRank round re-shuffled the full undirected
     * edge list, 10.35 MB/round at sf0.1, because of exactly this).
-    * The AQE flag is a session conf, so the flip is visible to other
-    * threads planning queries in the same moment — callers run from
-    * the driver's sequential query-construction path (the iterative
-    * operators), not from [[Par.inParallel]] builders.
+    * The result lives on `df`'s own session.
     *
     * `eager = false` defers the block write to the first action, like
     * [[cutLazy]]; planning (where the partitioning is captured) still
-    * happens here under the disabled flag either way. */
-  def cutPartitioned(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val spark = df.sparkSession
-    // serialize concurrent flips on the same session: two interleaved
-    // set/restore pairs could otherwise restore the OTHER call's
-    // "false" and leave AQE off for the rest of the session
-    spark.synchronized {
-      val key = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "false")
-      try cut(df, eager)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
-  }
+    * happens here with AQE off either way. */
+  def cutPartitioned(df: DataFrame, eager: Boolean = true): DataFrame =
+    GraftSqlBridge.withAqeOff(df)(cut(_, eager))
 
   /** Eager [[cut]] plus the ACTUAL stored byte size of the
     * materialized blocks, read back after the write. This is ground
@@ -110,7 +89,7 @@ object Reliability {
     val sc = df.sparkSession.sparkContext
     val bytes = cutRdd(c).flatMap(r => r.getCheckpointFile match {
       case Some(f) =>
-        val p = new org.apache.hadoop.fs.Path(f)
+        val p = new Path(f)
         Some(p.getFileSystem(sc.hadoopConfiguration).getContentSummary(p).getLength)
       case None => sc.getRDDStorageInfo.find(_.id == r.id).map(i => i.memSize + i.diskSize)
     })
@@ -166,19 +145,18 @@ object Reliability {
     * isn't attributed to an arbitrary first consumer. */
   def cutLazy(df: DataFrame): DataFrame = cut(df, eager = false)
 
-  private def cut(df: DataFrame, eager: Boolean): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.getOption(CheckpointDirKey) match {
+  private def cut(df: DataFrame, eager: Boolean): DataFrame =
+    df.sparkSession.conf.getOption(CheckpointDirKey) match {
       case Some(dir) if dir.nonEmpty =>
-        val sc = spark.sparkContext
+        val sc = df.sparkSession.sparkContext
         // setCheckpointDir mints a fresh UUID subdirectory per call —
-        // apply it once per configured base, not once per round
-        if (!spark.conf.getOption(AppliedKey).contains(dir)) {
+        // apply a base once (the context's dir sits right under it),
+        // not once per round
+        val base = new Path(dir)
+        val qualified = base.getFileSystem(sc.hadoopConfiguration).makeQualified(base)
+        if (!sc.getCheckpointDir.exists(d => new Path(d).getParent == qualified))
           sc.setCheckpointDir(dir)
-          spark.conf.set(AppliedKey, dir)
-        }
         df.checkpoint(eager)
       case _ => df.localCheckpoint(eager)
     }
-  }
 }

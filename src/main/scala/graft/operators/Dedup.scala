@@ -215,8 +215,7 @@ object Dedup {
     // shingle cut are INDEPENDENT eager materializations — overlap
     // them (r22, guide §2.6, the s16/s17 pattern): submitted
     // sequentially the second job idles the cluster through the
-    // first's tail. Both are plain AQE-on cuts, so there is no
-    // cutPartitioned conf-flip race across the two builder threads.
+    // first's tail.
     val parts = Par.inParallel(2) { i =>
       if (i == 0) Reliability.cut(prepareDedupCorpus(corpus, idCol, textCol))
       else Reliability.cut(shingleTable(batch, idCol, textCol))
@@ -279,23 +278,39 @@ object Dedup {
       maxBroadcastBatchRows: Long = IncrementalBroadcastMaxBatchRows): DataFrame = {
     val bB = bandTable(minhashSignatures(shB)).select(col("bk").as("bk_a"), col("id").as("batch_id"))
     val bC = bandTable(corpusPrep.select("id", "sig")).select(col("bk").as("bk_b"), col("id").as("corpus_id"))
-    // pin the documented shape: the small batch bands broadcast, the
-    // corpus bands stream map-side — without the hint the planner's
-    // static stats can pick the corpus as build side (or shuffle both).
-    // The overflow probe scans at most maxBroadcastBatchRows+1 batch ids
-    // (CollectLimit short-circuits), so the guard costs O(bound), not a
-    // pass over an arbitrarily large batch.
+    val cand = incrementalCandidates("minhashLshIncrementalAgainst", batch, idCol,
+      bB, bC, col("bk_a") === col("bk_b"), maxBroadcastBatchRows)
+    verifyJaccard(cand, shB, corpusPrep.select("id", "sh"), "batch_id", "corpus_id", threshold)
+  }
+
+  /** The deduplicated (batch_id, corpus_id) candidates of the two
+    * incremental twins: batch band keys `bB` (key, batch_id) joined to
+    * corpus band keys `bC` (key, corpus_id) `on` the key. Pins the
+    * documented shape: the small batch bands broadcast, the corpus
+    * bands stream map-side — without the hint the planner's static
+    * stats can pick the corpus as build side (or shuffle both). A
+    * batch past `maxBroadcastBatchRows` drops the pin (noted on stderr
+    * as `op`) and the join shuffles. The overflow probe scans at most
+    * maxBroadcastBatchRows+1 batch ids (CollectLimit short-circuits),
+    * so the guard costs O(bound), not a pass over an arbitrarily large
+    * batch. */
+  private def incrementalCandidates(
+      op: String,
+      batch: DataFrame,
+      idCol: String,
+      bB: DataFrame,
+      bC: DataFrame,
+      on: Column,
+      maxBroadcastBatchRows: Long): DataFrame = {
     val limitN = math.min(maxBroadcastBatchRows + 1, Int.MaxValue.toLong).toInt
     val oversized = batch.select(col(idCol)).limit(limitN).count() > maxBroadcastBatchRows
     if (oversized)
-      System.err.println(s"[graft] minhashLshIncrementalAgainst: batch exceeds " +
+      System.err.println(s"[graft] $op: batch exceeds " +
         s"$maxBroadcastBatchRows rows — broadcast pin dropped, candidate join will shuffle")
-    val bBSide = if (oversized) bB else broadcast(bB)
-    val cand = bBSide
-      .join(bC, col("bk_a") === col("bk_b"))
+    (if (oversized) bB else broadcast(bB))
+      .join(bC, on)
       .select("batch_id", "corpus_id")
       .dropDuplicates("batch_id", "corpus_id")
-    verifyJaccard(cand, shB, corpusPrep.select("id", "sh"), "batch_id", "corpus_id", threshold)
   }
 
   // --- SimHash ---------------------------------------------------------------
@@ -642,17 +657,8 @@ object Dedup {
       maxBroadcastBatchRows: Long = IncrementalBroadcastMaxBatchRows): DataFrame = {
     val bB = srpBands(codedB, numPlanes).select(col("ck").as("ck_a"), col("id").as("batch_id"))
     val bC = srpBands(corpusPrep, numPlanes).select(col("ck").as("ck_b"), col("id").as("corpus_id"))
-    val limitN = math.min(maxBroadcastBatchRows + 1, Int.MaxValue.toLong).toInt
-    val oversized = batch.select(col(idCol)).limit(limitN).count() > maxBroadcastBatchRows
-    if (oversized)
-      System.err.println(s"[graft] embeddingNearDupIncrementalAgainst: batch exceeds " +
-        s"$maxBroadcastBatchRows rows — broadcast pin dropped, candidate join will shuffle")
-    val bBSide = if (oversized) bB else broadcast(bB)
-    val cand = bBSide
-      .join(bC, col("ck_a") === col("ck_b"))
-      .select("batch_id", "corpus_id")
-      .dropDuplicates("batch_id", "corpus_id")
-    cand
+    incrementalCandidates("embeddingNearDupIncrementalAgainst", batch, idCol,
+      bB, bC, col("ck_a") === col("ck_b"), maxBroadcastBatchRows)
       .join(codedB.select(col("id").as("batch_id"), col("vec").as("v_a"), col("nrm").as("n_a")), "batch_id")
       .join(corpusPrep.select(col("id").as("corpus_id"), col("vec").as("v_b"), col("nrm").as("n_b")), "corpus_id")
       .withColumn(

@@ -140,56 +140,7 @@ object GraphRank {
     // deg joins it replaces. Kept as-is; at cluster scale the deg join
     // rides the same exchange as the scores join, so the per-round
     // cost is one join pass, not an extra shuffle.)
-    // the node set IS deg's key set — every node in the undirected
-    // view has degree >= 1 — so derive it as a narrow projection of
-    // the materialized degree blocks instead of paying a second
-    // shuffle (distinct over the edge list) and a second cut
-    val nodes = deg.select(col("src").as("node"))
-    val teleport = 1000000000L * (100 - dampE2) / 100
-    var scores = nodes.withColumn("score_e9", lit(1000000000L))
-    for (_ <- 1 to iters) {
-      val contrib = und
-        .join(scores.withColumnRenamed("node", "src"), "src")
-        .join(deg, "src")
-        .select(col("dst").as("node"), expr("score_e9 div deg").as("c"))
-        .groupBy("node")
-        .agg(sum(col("c")).as("inflow"))
-      // (d * x) div 100 computed as d*(x div 100) + (d*(x mod 100)) div 100
-      // — the same value for every non-negative x (x = 100q + r gives
-      // d·x div 100 = d·q + d·r div 100 exactly), but never forms the
-      // d*x product, which would overflow Long once a hub's inflow
-      // passes Long.MaxValue/d (~1e17 e9-units, reachable on a
-      // web-scale host graph). The oracle keeps the plain form — the
-      // identity guarantees equal digits at oracle scale.
-      //
-      // No per-round nodes join: contrib's key set IS the node set —
-      // every node appears as a dst in the undirected view (each
-      // non-loop edge emits both directions, a self-loop emits its own
-      // node), and the scores join preserves every edge row — so the
-      // old left-join-against-nodes was an identity. inflow is
-      // therefore never NULL; the coalesce stays only to keep the
-      // scoring expression textually identical to the oracle's.
-      scores = contrib
-        .select(
-          col("node"),
-          (lit(teleport) + expr(
-            s"$dampE2 * (coalesce(inflow, 0L) div 100) + ($dampE2 * (coalesce(inflow, 0L) % 100)) div 100"))
-            .as("score_e9"))
-        // LAZY cut, HASH-PARTITIONED ON THE ROUND JOIN KEY (r22, guide
-        // §2.4/§2.6): the materialization still rides round k+1's job
-        // (no extra action), and recording hash(node) on the cut makes
-        // the next round's und⋈scores⋈deg fully co-partitioned — zero
-        // join-side exchanges, planned statically. The message
-        // aggregation is already hash(dst)-partitioned, so the keyed
-        // repartition is alias-collapsed rather than a second
-        // node-sized shuffle. The cut input is an aggregation +
-        // projection (no joins), so the cutPartitioned AQE-off
-        // planning caveat does not bite. Interleaved in-JVM A/B vs the
-        // plain lazy cut: g01 3.05 → 2.63, g02 3.86 → 3.38 s median.
-        .transform(df =>
-          Reliability.cutPartitioned(df.repartition(col("node")), eager = false))
-    }
-    scores
+    rounds(und, deg, "score_e9 div deg", iters, dampE2)
   }
 
   /** Weighted integer PageRank over the UNDIRECTED view of `edges`
@@ -274,31 +225,61 @@ object GraphRank {
     require(wsumMax <= 3037000499L,
       s"pageRankWeighted: max total incident weight $wsumMax exceeds sqrt(2^63) ~ 3.037e9 — " +
         "w*(score mod wsum) could overflow Long; rescale weights (divide by a constant) first")
-    // node set = ws's key set (degree >= 1 in the undirected view) —
-    // narrow projection of the materialized wsum blocks, no second
-    // shuffle or cut (same derivation as the unweighted path)
-    val nodes = ws.select(col("src").as("node"))
+    rounds(und, ws,
+      "w * (score_e9 div wsum) + (w * (score_e9 % wsum)) div wsum", iters, dampE2)
+  }
+
+  /** The PageRank rounds both variants share, over the keyed
+    * undirected cut `und` (`src`, `dst`, and `w` when weighted) and the
+    * keyed per-node denominator table `denom` (`src` plus the column
+    * `share` divides by): each round every node sends `share` of its
+    * score to each neighbor, and the damping step turns the summed
+    * inflow into the next score. */
+  private def rounds(und: DataFrame, denom: DataFrame, share: String, iters: Int,
+      dampE2: Int): DataFrame = {
+    // the node set IS denom's key set — every node in the undirected
+    // view has degree >= 1 — so derive it as a narrow projection of
+    // the materialized denominator blocks instead of paying a second
+    // shuffle (distinct over the edge list) and a second cut
+    val nodes = denom.select(col("src").as("node"))
     val teleport = 1000000000L * (100 - dampE2) / 100
     var scores = nodes.withColumn("score_e9", lit(1000000000L))
     for (_ <- 1 to iters) {
       val contrib = und
         .join(scores.withColumnRenamed("node", "src"), "src")
-        .join(ws, "src")
-        .select(col("dst").as("node"),
-          expr("w * (score_e9 div wsum) + (w * (score_e9 % wsum)) div wsum").as("c"))
+        .join(denom, "src")
+        .select(col("dst").as("node"), expr(share).as("c"))
         .groupBy("node")
         .agg(sum(col("c")).as("inflow"))
-      // contrib covers every node (the [[pageRank]] dst-coverage
-      // argument), so the old per-round nodes left-join was an
-      // identity — dropped; coalesce kept for textual oracle parity
+      // (d * x) div 100 computed as d*(x div 100) + (d*(x mod 100)) div 100
+      // — the same value for every non-negative x (x = 100q + r gives
+      // d·x div 100 = d·q + d·r div 100 exactly), but never forms the
+      // d*x product, which would overflow Long once a hub's inflow
+      // passes Long.MaxValue/d (~1e17 e9-units, reachable on a
+      // web-scale host graph). The oracle keeps the plain form — the
+      // identity guarantees equal digits at oracle scale.
+      //
+      // contrib's key set IS the node set — every node appears as a dst
+      // in the undirected view (each non-loop edge emits both
+      // directions, a self-loop its own node) — so inflow is never
+      // NULL; the coalesce only keeps the expression textually
+      // identical to the oracle's.
       scores = contrib
         .select(
           col("node"),
           (lit(teleport) + expr(
             s"$dampE2 * (coalesce(inflow, 0L) div 100) + ($dampE2 * (coalesce(inflow, 0L) % 100)) div 100"))
             .as("score_e9"))
-        // lazy keyed cut — rides the next round's job with the round
-        // joins co-partitioned (see the unweighted loop's note)
+        // LAZY cut, HASH-PARTITIONED ON THE ROUND JOIN KEY (r22, guide
+        // §2.4/§2.6): the materialization still rides round k+1's job
+        // (no extra action), and recording hash(node) on the cut makes
+        // the next round's und⋈scores⋈denom fully co-partitioned — zero
+        // join-side exchanges, planned statically. The message
+        // aggregation is already hash(dst)-partitioned, so the keyed
+        // repartition is alias-collapsed rather than a second
+        // node-sized shuffle. The cut input is an aggregation +
+        // projection (no joins), so planning it with AQE off costs no
+        // adaptive join choice.
         .transform(df =>
           Reliability.cutPartitioned(df.repartition(col("node")), eager = false))
     }

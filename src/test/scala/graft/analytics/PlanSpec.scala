@@ -56,8 +56,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("d01 minhash: one fused signature aggregate, not 64 min-aggs") {
-    // r22: the signature pass materializes inside the banded
-    // cutPartitioned, so the final d01 frame only reads the cut — the
+    // the signature pass materializes in a plain cut of the signature
+    // table, so the final d01 frame only reads the cut — the
     // fused-aggregate assertion checks the signature subplan at its
     // source (the exact plan the cut executes)
     val docs = graft.core.Tables.documents(spark, sf0001)
